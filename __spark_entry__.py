@@ -28,9 +28,6 @@ from big_data_instacart_market_basket_analysis_spark.operators import (
 )
 from big_data_instacart_market_basket_analysis_spark.ml import models as _ml
 from big_data_instacart_market_basket_analysis_spark.operators import (
-    _staging,
-)
-from big_data_instacart_market_basket_analysis_spark.operators import (
     analytics as _ana,
 )
 from big_data_instacart_market_basket_analysis_spark.operators import (
@@ -554,15 +551,11 @@ def q_prefixspan_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-#: one DataFrame IDENTITY per (session, sf_dir): the dedup operators
-#: memoize staged shingles / cluster labels by input-object identity,
-#: so handing every query the same object lets e.g. corpus_prep reuse
-#: the fixpoint dedup_clusters already computed in this session.
-#: (r9: the identity cache now lives in loaders.load_table itself.)
+#: one DataFrame IDENTITY per (session, sf_dir, table): load_table
+#: stages the handle, and the operators stage their artifacts per input
+#: object, so e.g. corpus_prep reuses the fixpoint dedup_clusters
+#: already computed in this session.
 def _read_once(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    # load_table memoizes the handle per (session, sf_dir, table) —
-    # one shared identity for the whole engine, so id()-keyed staging
-    # hits regardless of which path a query came in through.
     return load_table(spark, sf_dir, table)
 
 
@@ -581,22 +574,13 @@ def _lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _read_once(spark, sf_dir, "lineitem")
 
 
-_EVENTS_CACHE: dict[tuple[int, str], tuple] = {}
-
-
 def _events_stable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Identity-stable events (load_table incl. ts normalization, one
     object per session+sf_dir): the clustering operators stage the
     quantized point table and eps-neighbor pairs by input identity,
     so dbscan and the density-outlier query share one
     materialization."""
-    return _staging.stage(
-        _EVENTS_CACHE,
-        (id(spark), sf_dir),
-        spark,
-        lambda: load_table(spark, sf_dir, "events"),
-        checkpoint=False,
-    )
+    return _read_once(spark, sf_dir, "events")
 
 
 def q_dedup_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.instacart import InstacartTables
+from ._staging import stage as _stage
 
 #: minimum co-occurrence count for a pair to be "frequent" (fixture
 #: baskets are sparse: max pair count at sf0.01/sf0.1 is 2).
@@ -53,24 +54,17 @@ def _n_baskets(bk: DataFrame) -> DataFrame:
     return bk.agg(F.countDistinct("orderID").alias("n_baskets"))
 
 
-#: filtered (p1, p2, pair_count) per (tables identity, min_count),
+#: filtered (p1, p2, pair_count) per (tables, min_count),
 #: session-staged — the basket self-join is the heaviest stage of the
 #: mining family and feeds frequent_pairs, pair_rules, and the SQL
-#: views; without the stage each consumer re-runs it. Same convention
-#: as graph._EDGES_CACHE; at cluster scale this becomes a staged table
-#: or reliable checkpoint instead of localCheckpoint. The FILTERED
+#: views; without the stage each consumer re-runs it. The FILTERED
 #: counts are staged (support floor applied first) so the stage stays
 #: frequent-pair-sized, not all-pairs-sized.
-_PAIRS_CACHE: dict[tuple[int, int], tuple] = {}
-
-
 def _pair_counts_staged(t: InstacartTables, min_count: int) -> DataFrame:
-    key = (id(t), min_count)
-    hit = _PAIRS_CACHE.get(key)
-    if hit is None:
+    def build() -> DataFrame:
         bk = baskets(t)
         a, b = bk.alias("a"), bk.alias("b")
-        pairs = (
+        return (
             a.join(
                 b,
                 (F.col("a.orderID") == F.col("b.orderID"))
@@ -83,9 +77,8 @@ def _pair_counts_staged(t: InstacartTables, min_count: int) -> DataFrame:
             .agg(F.count("*").alias("pair_count"))
             .filter(F.col("pair_count") >= min_count)
         )
-        hit = (t, pairs.localCheckpoint(eager=True))
-        _PAIRS_CACHE[key] = hit
-    return hit[1]
+
+    return _stage("basket_pair_counts", t, build, min_count)
 
 
 def frequent_pairs(
@@ -340,24 +333,13 @@ def product_order_spans(t: InstacartTables) -> DataFrame:
     )
 
 
-#: per-user product spans, session-staged by tables identity (the
-#: tables object is itself memoized per (session, sf_dir), so the key
-#: is stable); the value holds the tables ref so a recycled id can
-#: never alias. The self-join below reads spans TWICE — unstaged, the
-#: fact-join + hash-agg runs once per side (measured 1.9-3.3 s at
-#: sf0.1 under load, round-2 watch item; staged steady-state is
-#: pinned in BENCH_BASELINE.md). At cluster scale this is a staged
-#: table or reliable checkpoint, same as graph._EDGES_CACHE.
-_SPANS_CACHE: dict[int, tuple] = {}
-
-
+#: per-user product spans, session-staged by tables (the tables
+#: object is itself staged per (session, sf_dir)). The self-join below
+#: reads spans TWICE — unstaged, the fact-join + hash-agg runs once
+#: per side (measured 1.9-3.3 s at sf0.1 under load, round-2 watch
+#: item; staged steady-state is pinned in BENCH_BASELINE.md).
 def _spans_staged(t: InstacartTables) -> DataFrame:
-    key = id(t)
-    hit = _SPANS_CACHE.get(key)
-    if hit is None or hit[0] is not t:
-        hit = (t, product_order_spans(t).localCheckpoint(eager=True))
-        _SPANS_CACHE[key] = hit
-    return hit[1]
+    return _stage("product_spans", t, lambda: product_order_spans(t))
 
 
 def sequential_pairs(

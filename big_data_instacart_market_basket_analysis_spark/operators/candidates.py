@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..functions.columns import safe_div
 from ..plans.instacart import EVAL_TEST, EVAL_TRAIN, InstacartTables
+from ._staging import stage as _stage
 from .features import product_features, user_product_features, users_final
 
 #: Model feature columns in reference order (F.py:181-185).
@@ -210,28 +211,20 @@ candidates AS (
 """
 
 
-#: staged candidate table per InstacartTables instance — the key object
-#: is HELD in the value (same rule as the shingle cache: a held
-#: reference can't be gc'd, so a recycled id() can never alias).
-#: Production reading: the candidate table is materialized ONCE per
-#: run and consumed by the submission formatter, the SQL view, and
-#: three model scorers — re-deriving the explode join per consumer
-#: would repeat the widest shuffle in the whole pipeline.
-_CAND_CACHE: dict[int, tuple[InstacartTables, DataFrame]] = {}
-
-
 def candidates_staged(t: InstacartTables) -> DataFrame:
-    """Memoized, persisted candidate table (MEMORY_AND_DISK: the wide
+    """Staged, persisted candidate table (MEMORY_AND_DISK: the wide
     table can exceed executor memory at scale; spill beats recompute
-    for a 5-consumer staging table)."""
+    for a 5-consumer staging table). It is materialized ONCE per run
+    and consumed by the submission formatter, the SQL view, and three
+    model scorers — re-deriving the explode join per consumer would
+    repeat the widest shuffle in the whole pipeline."""
     from pyspark import StorageLevel
 
-    hit = _CAND_CACHE.get(id(t))
-    if hit is not None and hit[0] is t:
-        return hit[1]
-    df = candidates(t).persist(StorageLevel.MEMORY_AND_DISK)
-    _CAND_CACHE[id(t)] = (t, df)
-    return df
+    return _stage(
+        "candidates", t,
+        lambda: candidates(t).persist(StorageLevel.MEMORY_AND_DISK),
+        checkpoint=False,
+    )
 
 
 LIFT_BINS = 10

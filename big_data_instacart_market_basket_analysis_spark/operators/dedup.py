@@ -35,6 +35,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._staging import spread as _spread
+from ._staging import stage as _stage
+
 SHINGLE_WIDTH = 3
 JACCARD_THRESHOLD = 0.3
 #: inverted-index document-frequency cap: shingles appearing in more
@@ -68,45 +71,28 @@ def _shingles(docs: DataFrame) -> DataFrame:
     )
 
 
-#: the materialized shingle set per input DataFrame — the staging table
-#: every shingle-based dedup family starts from. Keyed by id(docs) with
-#: the key object HELD in the value (an id can be reused after gc; a
-#: held reference can't be collected, so a stale hit is impossible).
-#: ngram pairs, minhash signatures, and the minhash verify all reuse
-#: one checkpoint instead of re-running the explode+distinct shuffle
-#: per consumer — the "pay the shuffle once" staging rule.
 def _spread_blk(df: DataFrame) -> DataFrame:
     """Explicit-width hash repartition on the (lang, blk) block key —
     the blocked self-join kernels' shared required distribution (r10,
     guide §2.5)."""
-    from ._staging import spread as _spread
-
     return _spread(df, "lang", "blk")
 
 
-_SHINGLE_CACHE: dict[int, tuple[DataFrame, DataFrame]] = {}
-
-
 def _shingles_staged(docs: DataFrame) -> DataFrame:
-    key = id(docs)
-    hit = _SHINGLE_CACHE.get(key)
-    if hit is None:
-        from ._staging import spread as _spread
+    """The staged shingle set per input DataFrame — the table every
+    shingle-based dedup family starts from: ngram pairs, minhash
+    signatures, and the minhash verify all reuse one checkpoint
+    instead of re-running the explode+distinct shuffle per consumer.
 
-        # r10 (guide §2.5): spread the one-row-group corpus scan so
-        # the tokenize+explode runs on every core, and spread the
-        # staged postings themselves so every downstream consumer's
-        # per-row work (minhash md5 folds, prefix windows, jaccard
-        # verifies) inherits full-width parallelism instead of the
-        # AQE-coalesced 4 partitions the distinct left behind.
-        hit = (
-            docs,
-            _spread(_shingles(_spread(docs)), "doc_id").localCheckpoint(
-                eager=True
-            ),
-        )
-        _SHINGLE_CACHE[key] = hit
-    return hit[1]
+    r10 (guide §2.5): spread the one-row-group corpus scan so the
+    tokenize+explode runs on every core, and spread the staged
+    postings themselves so every downstream consumer's per-row work
+    (minhash md5 folds, prefix windows, jaccard verifies) inherits
+    full-width parallelism instead of the AQE-coalesced 4 partitions
+    the distinct left behind."""
+    return _stage(
+        "shingles", docs, lambda: _spread(_shingles(_spread(docs)), "doc_id")
+    )
 
 
 # shared DuckDB fragments -----------------------------------------------------
@@ -226,27 +212,16 @@ def _pair_shared_counts(
 
 #: staged shared-count table per input DataFrame — the shingle
 #: self-join is the heaviest stage of the pair family; Jaccard and
-#: containment both derive from one materialization (same
-#: held-key-object rationale as _SHINGLE_CACHE).
-_SHARED_COUNTS_CACHE: dict[int, tuple[DataFrame, DataFrame]] = {}
-
-
+#: containment both derive from one materialization.
 def _shared_counts_staged(
     docs: DataFrame, max_shingle_df: int = MAX_SHINGLE_DF
 ) -> DataFrame:
     if max_shingle_df != MAX_SHINGLE_DF:
         return _pair_shared_counts(docs, max_shingle_df)
-    key = id(docs)
-    hit = _SHARED_COUNTS_CACHE.get(key)
-    if hit is None:
-        hit = (
-            docs,
-            _pair_shared_counts(docs, max_shingle_df).localCheckpoint(
-                eager=True
-            ),
-        )
-        _SHARED_COUNTS_CACHE[key] = hit
-    return hit[1]
+    return _stage(
+        "shared_counts", docs,
+        lambda: _pair_shared_counts(docs, max_shingle_df),
+    )
 
 
 def ngram_jaccard_pairs(
@@ -376,19 +351,15 @@ def minhash_signatures(
     return sh.groupBy("doc_id").agg(*aggs)
 
 
-#: session-staged verified pair sets per (docs identity, parameter) —
-#: the r10 extension of the shingle staging one level up the pipeline:
-#: five queries consume `minhash_lsh_pairs(docs)` (the LSH query
-#: itself, the precision/recall evals, the detector matrix, the
-#: capture-recapture estimate) and four consume `simhash_pairs(docs)`,
-#: and each previously re-ran the full band join + verify. The pair
-#: tables are doc-pair grain (bounded by the detectors' blocking), so
-#: one eager checkpoint each is cheap; the key object is HELD in the
-#: value (id-reuse guard, the _SHINGLE_CACHE convention).
-_MINHASH_PAIRS_CACHE: dict[tuple, tuple] = {}
-_SIMHASH_PAIRS_CACHE: dict[tuple, tuple] = {}
-
-
+#: The verified minhash/simhash pair sets are session-staged per
+#: (docs, parameter) — the r10 extension of the shingle staging one
+#: level up the pipeline: five queries consume
+#: `minhash_lsh_pairs(docs)` (the LSH query itself, the
+#: precision/recall evals, the detector matrix, the capture-recapture
+#: estimate) and four consume `simhash_pairs(docs)`, and each
+#: previously re-ran the full band join + verify. The pair tables are
+#: doc-pair grain (bounded by the detectors' blocking), so one eager
+#: checkpoint each is cheap.
 def minhash_lsh_pairs(
     docs: DataFrame,
     threshold: float = JACCARD_THRESHOLD,
@@ -403,20 +374,16 @@ def minhash_lsh_pairs(
     ``shingles`` lets a caller substitute an already-staged (possibly
     filtered) shingle table so composed pipelines never re-tokenize
     the corpus. The default-shingles pair set is session-staged per
-    (docs identity, threshold) — see `_MINHASH_PAIRS_CACHE`.
+    (docs, threshold).
     """
     if shingles is None:
-        key = (id(docs), threshold)
-        hit = _MINHASH_PAIRS_CACHE.get(key)
-        if hit is None or hit[0] is not docs:
-            hit = (
-                docs,
-                _minhash_lsh_pairs_build(
-                    docs, threshold, _shingles_staged(docs)
-                ).localCheckpoint(eager=True),
-            )
-            _MINHASH_PAIRS_CACHE[key] = hit
-        return hit[1]
+        return _stage(
+            "minhash_pairs", docs,
+            lambda: _minhash_lsh_pairs_build(
+                docs, threshold, _shingles_staged(docs)
+            ),
+            threshold,
+        )
     return _minhash_lsh_pairs_build(docs, threshold, shingles)
 
 
@@ -612,10 +579,6 @@ minhash_lsh AS (
 
 MAX_CC_ROUNDS = 20
 
-#: memoized default-pairs cluster labels per docs DataFrame (key object
-#: held — see _SHINGLE_CACHE).
-_CC_CACHE: dict[int, tuple[DataFrame, DataFrame]] = {}
-
 
 def _large_star(edges: DataFrame) -> DataFrame:
     """Large-star: every neighbor of u larger than u re-attaches to the
@@ -680,18 +643,20 @@ def connected_clusters(
     Output: (doc_id, cluster_id) for every doc; singletons label
     themselves. Survivors = rows where doc_id == cluster_id.
 
-    The default-pairs labeling (the expensive loop) is memoized per
-    input DataFrame, key object held against id reuse — ``corpus_prep``
-    and ``dedup_clusters`` both consume the same fixpoint, which is a
-    driver-coordinated multi-job computation, not a re-optimizable
-    plan, so recomputing it per consumer doubles real cluster work.
+    The default-pairs labeling (the expensive loop) is staged per
+    input DataFrame — ``corpus_prep`` and ``dedup_clusters`` both
+    consume the same fixpoint, which is a driver-coordinated multi-job
+    computation, not a re-optimizable plan, so recomputing it per
+    consumer doubles real cluster work.
     """
-    derived_pairs = pairs is None
-    if derived_pairs:
-        hit = _CC_CACHE.get(id(docs))
-        if hit is not None:
-            return hit[1]
-        pairs = ngram_jaccard_pairs(docs).select("d1", "d2")
+    if pairs is None:
+        return _stage(
+            "cc_labels", docs,
+            lambda: connected_clusters(
+                docs, ngram_jaccard_pairs(docs).select("d1", "d2")
+            ),
+            checkpoint=False,
+        )
     # materialize the edge list ONCE — the loop derives each round from
     # the previous round's edges, and an unmaterialized pair plan would
     # recompute the candidate-pair join per round.
@@ -751,10 +716,7 @@ def connected_clusters(
     singletons = docs.select(
         "doc_id", F.col("doc_id").alias("cluster_id")
     ).join(nodes, "doc_id", "leftanti")
-    out = labels.unionByName(singletons)
-    if derived_pairs:
-        _CC_CACHE[id(docs)] = (docs, out)
-    return out
+    return labels.unionByName(singletons)
 
 
 #: Recursive min-reachable-id closure; grouped min == component label.
@@ -830,19 +792,11 @@ def simhash_pairs(
     """SimHash near-dup pairs: 15-bit band buckets (a pair within
     Hamming<=3 of 60 bits must agree on at least one of 4 bands), then
     exact Hamming verify via bit_count(xor). The pair set is
-    session-staged per (docs identity, max_hamming) — see
-    `_SIMHASH_PAIRS_CACHE`."""
-    key = (id(docs), max_hamming)
-    hit = _SIMHASH_PAIRS_CACHE.get(key)
-    if hit is None or hit[0] is not docs:
-        hit = (
-            docs,
-            _simhash_pairs_build(docs, max_hamming).localCheckpoint(
-                eager=True
-            ),
-        )
-        _SIMHASH_PAIRS_CACHE[key] = hit
-    return hit[1]
+    session-staged per (docs, max_hamming)."""
+    return _stage(
+        "simhash_pairs", docs, lambda: _simhash_pairs_build(docs, max_hamming),
+        max_hamming,
+    )
 
 
 def _simhash_pairs_build(docs: DataFrame, max_hamming: int) -> DataFrame:
@@ -1609,8 +1563,6 @@ def er_matches(docs: DataFrame) -> DataFrame:
         "doc_id", "lang", "blk", "prefix", "toks",
         F.size("toks").alias("sz"),
     )
-    from ._staging import spread as _spread
-
     # doc-grain; 4 consumers below. Spread before the checkpoint so
     # the token-explode join and the levenshtein verify downstream run
     # at full width (r10, guide §2.5).

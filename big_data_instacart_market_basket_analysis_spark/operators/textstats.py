@@ -2173,23 +2173,14 @@ bigram_logprob AS (
 """
 
 
-#: NB scored table per docs identity — seven consumers (the declared
-#: quality query plus AUC / calibration / PR / scorecard / gains /
-#: decomposition) each re-ran the full train-plus-score pipeline;
-#: the staged table materializes it once per session (r10; same
-#: convention as the co-occurrence and GANN staging — the bench line
-#: that first touches it carries the build, see OPTIMIZATION_r10.md).
-_NB_SCORED_CACHE: dict[tuple, tuple] = {}
-
-
 def nb_quality_scores(docs: DataFrame) -> DataFrame:
-    """Session-staged NB score table (see ``_nb_scores_build``)."""
-    return _stage(
-        _NB_SCORED_CACHE,
-        ("nb_scored", id(docs)),
-        docs,
-        lambda: _nb_scores_build(docs),
-    )
+    """Session-staged NB score table (see ``_nb_scores_build``): seven
+    consumers (the declared quality query plus AUC / calibration / PR
+    / scorecard / gains / decomposition) read one materialization
+    instead of re-running the train-plus-score pipeline (r10; the
+    bench line that first touches it carries the build, see
+    OPTIMIZATION_r10.md)."""
+    return _stage("nb_scored", docs, lambda: _nb_scores_build(docs))
 
 
 def _nb_scores_build(docs: DataFrame) -> DataFrame:
@@ -2866,18 +2857,12 @@ rake_keywords AS (
 BPE_MERGES = 6
 
 
-#: learned merge lists per (docs identity, n_merges) — the trained
-#: tokenizer artifact is session state shared by the train query and
-#: the encode/fertility query (r8; the stage convention, list-valued).
-_BPE_MERGES_CACHE: dict[tuple, tuple] = {}
-
-
 def _bpe_learn_staged(docs: DataFrame, n_merges: int) -> list:
+    """Learned merge list per (docs, n_merges): the trained tokenizer
+    is session state shared by the train query and the
+    encode/fertility query (r8)."""
     return _stage(
-        _BPE_MERGES_CACHE,
-        (id(docs), n_merges),
-        docs,
-        lambda: _bpe_learn(docs, n_merges),
+        "bpe_merges", docs, lambda: _bpe_learn(docs, n_merges), n_merges,
         checkpoint=False,
     )
 
@@ -4353,20 +4338,11 @@ def rouge_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
-#: pair-grain n-gram overlap base per docs identity — ROUGE and BLEU
-#: each rebuilt the identical tokenize/count/overlap pipeline (r10;
-#: carrier note in OPTIMIZATION_r10.md).
-_PAIR_NGRAM_CACHE: dict[tuple, tuple] = {}
-
-
 def _pair_ngram_base(docs: DataFrame) -> DataFrame:
-    """Session-staged pair n-gram base (see ``_pair_ngram_build``)."""
-    return _stage(
-        _PAIR_NGRAM_CACHE,
-        ("pair_ngram", id(docs)),
-        docs,
-        lambda: _pair_ngram_build(docs),
-    )
+    """Session-staged pair n-gram base (see ``_pair_ngram_build``):
+    ROUGE and BLEU each rebuilt the identical tokenize/count/overlap
+    pipeline (r10; carrier note in OPTIMIZATION_r10.md)."""
+    return _stage("pair_ngram", docs, lambda: _pair_ngram_build(docs))
 
 
 def _pair_ngram_build(docs: DataFrame) -> DataFrame:
@@ -6233,12 +6209,6 @@ UNIGRAM_ROUNDS = 2
 
 _UNIGRAM_WORD_RE = f"^[a-z0-9]{{1,{UNIGRAM_WORD_MAX}}}$"
 
-#: trained inventories per (docs identity, params): list of
-#: (piece, cnt) for the FINAL round plus the final total — the
-#: artifact shared by the train query and the fertility query.
-_UNIGRAM_CACHE: dict[tuple, tuple] = {}
-
-
 def _unigram_words(docs: DataFrame) -> DataFrame:
     """Distinct-word vocabulary with frequency (the only corpus-sized
     stage of the whole trainer — everything after runs on word types)."""
@@ -6395,12 +6365,12 @@ def _unigram_learn(docs: DataFrame) -> tuple:
 
 
 def _unigram_learn_staged(docs: DataFrame) -> tuple:
+    """Trained inventory per (docs, params): (piece, cnt) for the FINAL
+    round plus the final total — the artifact shared by the train
+    query and the fertility query."""
     return _stage(
-        _UNIGRAM_CACHE,
-        (id(docs), UNIGRAM_SEED_MULTI, UNIGRAM_KEEP_MULTI,
-         UNIGRAM_ROUNDS),
-        docs,
-        lambda: _unigram_learn(docs),
+        "unigram", docs, lambda: _unigram_learn(docs),
+        UNIGRAM_SEED_MULTI, UNIGRAM_KEEP_MULTI, UNIGRAM_ROUNDS,
         checkpoint=False,
     )
 

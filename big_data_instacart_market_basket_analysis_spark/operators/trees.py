@@ -38,7 +38,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._staging import STAGING_LOCK as _STAGING_LOCK
 from ._staging import stage as _stage
 
 TREE_BINS = 16
@@ -110,25 +109,17 @@ def _binned_from_feats(feats: DataFrame) -> DataFrame:
     )
 
 
-#: per-input staged (user_features, binned) pair: Catalyst does not
-#: dedupe common subplans, and the tree trainers reference these
-#: user-grain tables up to ~12 times (4 trees x hist/leaf/OOB) — one
-#: localCheckpoint each turns 12 corpus aggs into 1. Keyed by input
-#: identity with the ref held in the value (the id-reuse-safe cache
-#: convention); at cluster scale this is a staged feature table.
-_FEATS_CACHE: dict[int, tuple] = {}
-
-
 def _staged_feats_binned(events: DataFrame) -> tuple[DataFrame, DataFrame]:
-    key = id(events)
-    with _STAGING_LOCK:
-        hit = _FEATS_CACHE.get(key)
-        if hit is None or hit[0] is not events:
-            feats = _user_features(events).localCheckpoint(eager=True)
-            binned = _binned_from_feats(feats).localCheckpoint(eager=True)
-            hit = (events, feats, binned)
-            _FEATS_CACHE[key] = hit
-        return hit[1], hit[2]
+    """Staged (user_features, binned) pair: Catalyst does not dedupe
+    common subplans, and the tree trainers reference these user-grain
+    tables up to ~12 times (4 trees x hist/leaf/OOB) — one
+    localCheckpoint each turns 12 corpus aggs into 1."""
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        feats = _user_features(events).localCheckpoint(eager=True)
+        return feats, _binned_from_feats(feats).localCheckpoint(eager=True)
+
+    return _stage("tree_feats_binned", events, build, checkpoint=False)
 
 
 def _best_split(subset: DataFrame) -> DataFrame:
@@ -178,16 +169,11 @@ def _argmin_split_from_hist(hist: DataFrame) -> DataFrame:
     )
 
 
-#: converged CART model table per input identity (r8): shared by
-#: `ml_cart_verified` and `cart_feature_importance`, which otherwise
-#: re-runs the full depth-2 split search to read 7 rows.
-_CART_CACHE: dict[int, tuple] = {}
-
-
 def cart_train_staged(events: DataFrame) -> DataFrame:
-    return _stage(
-        _CART_CACHE, id(events), events, lambda: cart_train(events)
-    )
+    """Staged CART model table (r8): shared by `ml_cart_verified` and
+    `cart_feature_importance`, which otherwise re-runs the full
+    depth-2 split search to read 7 rows."""
+    return _stage("cart_model", events, lambda: cart_train(events))
 
 
 def cart_train(events: DataFrame) -> DataFrame:
@@ -486,26 +472,16 @@ def _gb_binned(events: DataFrame):
 #: query re-ran the full driver-coordinated boosting loop — the exact
 #: blind spot the betweenness/dbscan pattern closes. The melted
 #: (user, y, fid, bin) table and the converged 3-row stump table are
-#: each materialized once per input identity; superseded inputs are
-#: evicted (see `_staging.stage`).
-_GB_BINNED_CACHE: dict[int, tuple] = {}
-_GBM_CACHE: dict[tuple, tuple] = {}
-
-
+#: each staged once per input.
 def _gb_binned_staged(events: DataFrame) -> DataFrame:
-    return _stage(
-        _GB_BINNED_CACHE, id(events), events, lambda: _gb_binned(events)
-    )
+    return _stage("gb_binned", events, lambda: _gb_binned(events))
 
 
 def gbm_train_staged(
     events: DataFrame, rounds: int = GB_ROUNDS
 ) -> DataFrame:
     return _stage(
-        _GBM_CACHE,
-        (id(events), rounds),
-        events,
-        lambda: gbm_train(events, rounds),
+        "gbm_model", events, lambda: gbm_train(events, rounds), rounds
     )
 
 

@@ -26,24 +26,23 @@ from pyspark.sql import DataFrame, SparkSession
 from ..operators import basket as _bask
 from ..operators import candidates as _cand
 from ..operators import features as _feat
+from ..operators._staging import stage as _stage
 from ..sources.loaders import register_views
 from .instacart import instacart_tables
 
 
-#: registration is idempotent but not free (re-plans ~16 views and
-#: re-enters instacart_tables per call) — memoize per (session, sf_dir)
-#: the same way instacart_tables uses _TABLE_CACHE.
-#: holds the SESSION OBJECT in the value (dedup._SHINGLE_CACHE /
-#: loaders._tuned_sessions pattern) so a GC'd session's recycled id()
-#: can never make a new session silently skip view registration.
-_REGISTERED: dict[tuple[int, str], object] = {}
-
-
 def register_all(spark: SparkSession, sf_dir: str) -> None:
-    """Register fixture tables, Instacart views, and derived features."""
-    key = (id(spark), sf_dir)
-    if _REGISTERED.get(key) is spark:
-        return
+    """Register fixture tables, Instacart views, and derived features,
+    once per (session, sf_dir): registration is idempotent but not
+    free (re-plans ~16 views and re-enters instacart_tables per
+    call)."""
+    _stage(
+        "sql_views", spark, lambda: _register_all(spark, sf_dir), sf_dir,
+        checkpoint=False,
+    )
+
+
+def _register_all(spark: SparkSession, sf_dir: str) -> None:
     register_views(spark, sf_dir)  # raw fixtures
     t = instacart_tables(spark, sf_dir)
     t.orders.createOrReplaceTempView("ic_orders")
@@ -73,7 +72,6 @@ def register_all(spark: SparkSession, sf_dir: str) -> None:
         _text.corpus_prep(docs).createOrReplaceTempView("corpus_prep_v")
     except Exception:
         pass
-    _REGISTERED[key] = spark
 
 
 def sql_dept_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

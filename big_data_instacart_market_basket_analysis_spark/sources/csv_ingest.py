@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators._staging import stage as _stage
 from .schemas import INSTACART_SCHEMAS
 
 # eval_set enum encoding, F.py:26: prior->0, train->1, test->2.
@@ -54,11 +55,6 @@ def read_orders(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-#: one CSV round-trip per (session, sf_dir): the write is distributed
-#: and idempotent, but re-writing under a returned lazy reader would be
-#: a read/overwrite hazard.
-_ROUNDTRIP_CACHE: dict[tuple[int, str], DataFrame] = {}
-
 EVAL_NAMES = {EVAL_PRIOR: "prior", EVAL_TRAIN: "train", EVAL_TEST: "test"}
 
 
@@ -77,10 +73,20 @@ def orders_csv_roundtrip(
 
     The write is a distributed ``df.write.csv`` (each partition writes
     its own part file — the same code shape a cluster export uses).
+    It runs once per (session, sf_dir), as do the other ingest
+    round-trips: the write is idempotent, but re-writing under a
+    returned lazy reader would be a read/overwrite hazard.
     """
-    key = (id(spark), sf_dir)
-    if key in _ROUNDTRIP_CACHE:
-        return _ROUNDTRIP_CACHE[key]
+    return _stage(
+        "csv_roundtrip", spark,
+        lambda: _csv_roundtrip(spark, sf_dir, tmp_base),
+        sf_dir, checkpoint=False,
+    )
+
+
+def _csv_roundtrip(
+    spark: SparkSession, sf_dir: str, tmp_base: str | None
+) -> DataFrame:
     from ..plans.instacart import instacart_tables
 
     orders = instacart_tables(spark, sf_dir).orders
@@ -106,9 +112,7 @@ def orders_csv_roundtrip(
 
     path = roundtrip_path(spark, "csv", sf_dir, "orders", tmp_base)
     out.write.mode("overwrite").option("header", True).csv(path)
-    df = read_orders(spark, path)
-    _ROUNDTRIP_CACHE[key] = df
-    return df
+    return read_orders(spark, path)
 
 
 def read_products(spark: SparkSession, path: str) -> DataFrame:

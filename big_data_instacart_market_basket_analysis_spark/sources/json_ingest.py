@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators._staging import stage as _stage
 from .loaders import load_table
 
 EVENTS_JSON_SCHEMA = T.StructType(
@@ -30,11 +31,6 @@ EVENTS_JSON_SCHEMA = T.StructType(
     ]
 )
 
-#: one JSON round-trip per (session, sf_dir) — same write/re-read
-#: hazard rationale as csv_ingest._ROUNDTRIP_CACHE.
-_ROUNDTRIP_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
 def events_json_roundtrip(
     spark: SparkSession,
     sf_dir: str,
@@ -44,11 +40,19 @@ def events_json_roundtrip(
     partition), re-read with the pinned schema, and normalize
     timestamps to epoch millis. Doubles survive exactly (the JSON
     writer emits shortest-round-trip literals), so the result is
-    oracle-checkable against the parquet table directly.
+    oracle-checkable against the parquet table directly. Written once
+    per (session, sf_dir), like the other ingest round-trips.
     """
-    key = (id(spark), sf_dir)
-    if key in _ROUNDTRIP_CACHE:
-        return _ROUNDTRIP_CACHE[key]
+    return _stage(
+        "json_roundtrip", spark,
+        lambda: _json_roundtrip(spark, sf_dir, tmp_base),
+        sf_dir, checkpoint=False,
+    )
+
+
+def _json_roundtrip(
+    spark: SparkSession, sf_dir: str, tmp_base: str | None
+) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         F.unix_millis("ts").alias("ts_ms"),
@@ -61,9 +65,7 @@ def events_json_roundtrip(
 
     path = roundtrip_path(spark, "json", sf_dir, "events", tmp_base)
     events.write.mode("overwrite").json(path)
-    df = spark.read.schema(EVENTS_JSON_SCHEMA).json(path)
-    _ROUNDTRIP_CACHE[key] = df
-    return df
+    return spark.read.schema(EVENTS_JSON_SCHEMA).json(path)
 
 
 ORACLE_EVENTS_JSON_ROUNDTRIP = """

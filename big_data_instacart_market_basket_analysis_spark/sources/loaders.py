@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators._staging import stage as _stage
+
 TABLES = (
     "region",
     "nation",
@@ -64,7 +66,7 @@ _SHUFFLE_STOCK_DEFAULT = "200"
 
 # id -> the session object itself. Holding the reference (not a bare
 # id) means a GC'd session's recycled id can never alias a new session
-# and silently skip tuning (same pattern as dedup._SHINGLE_CACHE).
+# and silently skip tuning.
 _tuned_sessions: dict[int, SparkSession] = {}
 
 
@@ -119,31 +121,28 @@ def ensure_nanos_conf(spark: SparkSession) -> None:
     ensure_session_defaults(spark)
 
 
-# (session, sf_dir, table) -> (session ref, DataFrame). A bare
-# spark.read.parquet costs ~70-90 ms of driver-side metadata work
-# (file listing + footer schema inference) EVERY call; the entry
-# module alone has 300+ load_table sites, so an unmemoized loader
-# spends tens of seconds per bench pass re-resolving ten immutable
-# fixture files (guide §6: file listing/planning is driver-side,
-# single-process work). The DataFrame handle is lazy — nothing is
-# computed or cached data-wise — and memoizing also makes the handle
-# identity stable, so the operators' id()-keyed session staging hits
-# across every call site instead of only the `_read_once` ones.
-# Holding the session reference guards against CPython id() reuse
-# (same convention as `_tuned_sessions`).
-_TABLE_HANDLE_CACHE: dict[tuple[int, str, str], tuple] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (id(spark), sf_dir, name)
-    hit = _TABLE_HANDLE_CACHE.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    """The table's DataFrame handle, staged per (session, sf_dir,
+    name). A bare spark.read.parquet costs ~70-90 ms of driver-side
+    metadata work (file listing + footer schema inference) EVERY call;
+    the entry module alone has 300+ load_table sites, so an unstaged
+    loader spends tens of seconds per bench pass re-resolving ten
+    immutable fixture files (guide §6: file listing/planning is
+    driver-side, single-process work). The handle is lazy — nothing is
+    computed or cached data-wise — and staging also makes its
+    identity stable, so the operators' per-input staging hits across
+    every call site."""
+    return _stage(
+        "table_handle", spark, lambda: _read_table(spark, sf_dir, name),
+        sf_dir, name, checkpoint=False,
+    )
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_session_defaults(spark)
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_event_ts(df)
-    _TABLE_HANDLE_CACHE[key] = (spark, df)
     return df
 
 

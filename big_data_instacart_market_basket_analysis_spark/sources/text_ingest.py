@@ -19,12 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators._staging import stage as _stage
 from .loaders import load_table
-
-#: one text round-trip per (session, sf_dir) — same write/re-read
-#: hazard rationale as csv_ingest/json_ingest caches.
-_ROUNDTRIP_CACHE: dict[tuple[int, str], DataFrame] = {}
-
 
 def docs_text_roundtrip(
     spark: SparkSession,
@@ -34,10 +30,18 @@ def docs_text_roundtrip(
     """Write documents as tab-delimited text lines, re-read with
     ``spark.read.text``, and parse the four fields back with a
     limit-3 split (text keeps its inner spaces). Output hash-equals a
-    projection of the parquet table."""
-    key = (id(spark), sf_dir)
-    if key in _ROUNDTRIP_CACHE:
-        return _ROUNDTRIP_CACHE[key]
+    projection of the parquet table. Written once per (session,
+    sf_dir), like the other ingest round-trips."""
+    return _stage(
+        "text_roundtrip", spark,
+        lambda: _text_roundtrip(spark, sf_dir, tmp_base),
+        sf_dir, checkpoint=False,
+    )
+
+
+def _text_roundtrip(
+    spark: SparkSession, sf_dir: str, tmp_base: str | None
+) -> DataFrame:
     # explicit NULL sentinel per field (classic TSV \N convention):
     # concat_ws silently DROPS null fields, which would shift every
     # later field on re-parse — encode nulls so the line always has
@@ -59,14 +63,12 @@ def docs_text_roundtrip(
     docs.write.mode("overwrite").text(path)
     raw = spark.read.text(path)
     parts = F.split(F.col("value"), "\t", 4)
-    df = raw.select(
+    return raw.select(
         dec(parts.getItem(0)).cast("bigint").alias("doc_id"),
         dec(parts.getItem(1)).alias("lang"),
         dec(parts.getItem(2)).alias("source"),
         dec(parts.getItem(3)).alias("text"),
     )
-    _ROUNDTRIP_CACHE[key] = df
-    return df
 
 
 ORACLE_DOCS_TEXT_ROUNDTRIP = """

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators._staging import stage as _stage
 from .loaders import load_table
 
 EVENTS_XML_SCHEMA = T.StructType(
@@ -32,17 +33,24 @@ EVENTS_XML_SCHEMA = T.StructType(
     ]
 )
 
-_ROUNDTRIP_CACHE: dict[tuple[int, str], DataFrame] = {}
-
 
 def events_xml_roundtrip(
     spark: SparkSession,
     sf_dir: str,
     tmp_base: str | None = None,
 ) -> DataFrame:
-    key = (id(spark), sf_dir)
-    if key in _ROUNDTRIP_CACHE:
-        return _ROUNDTRIP_CACHE[key]
+    """Written once per (session, sf_dir), like the other ingest
+    round-trips."""
+    return _stage(
+        "xml_roundtrip", spark,
+        lambda: _xml_roundtrip(spark, sf_dir, tmp_base),
+        sf_dir, checkpoint=False,
+    )
+
+
+def _xml_roundtrip(
+    spark: SparkSession, sf_dir: str, tmp_base: str | None
+) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select(
         "event_id",
         F.unix_millis("ts").alias("ts_ms"),
@@ -62,14 +70,12 @@ def events_xml_roundtrip(
         .option("rowTag", "event")
         .save(path)
     )
-    df = (
+    return (
         spark.read.schema(EVENTS_XML_SCHEMA)
         .format("xml")
         .option("rowTag", "event")
         .load(path)
     )
-    _ROUNDTRIP_CACHE[key] = df
-    return df
 
 
 ORACLE_EVENTS_XML_ROUNDTRIP = """

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators._staging import stage as _stage
 from ..sources.loaders import (
     ensure_nanos_conf,
     load_table,
@@ -422,12 +423,6 @@ stream_interval_join AS (
 """
 
 
-#: one sentinel-staged input dir per (session, sf_dir) — the write is
-#: the expensive part of the outer interval join, and the staged dir
-#: is immutable once built, so every same-session consumer reuses it.
-_SSJO_INPUT_CACHE: dict[tuple[int, str], str] = {}
-
-
 def _sentinel_staged_input(spark: SparkSession, sf_dir: str) -> str:
     """Stage the events table plus one far-future sentinel pair as a
     parquet dir for file-source streams (r8 verdict task 1).
@@ -442,13 +437,18 @@ def _sentinel_staged_input(spark: SparkSession, sf_dir: str) -> str:
     batch, then the standard no-data batch emits the evictions.
     The dir lives under the per-application scratch root (portable —
     same contract as the ingest round-trips) and is written once per
-    (session, sf_dir); it is never mutated afterwards, so cached
-    readers and late consumers can never tear.
+    (session, sf_dir) — the write is the expensive part of the outer
+    interval join; it is never mutated afterwards, so cached readers
+    and late consumers can never tear.
     """
-    key = (id(spark), sf_dir)
-    hit = _SSJO_INPUT_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return _stage(
+        "stream_sentinel_input", spark,
+        lambda: _write_sentinel_input(spark, sf_dir), sf_dir,
+        checkpoint=False,
+    )
+
+
+def _write_sentinel_input(spark: SparkSession, sf_dir: str) -> str:
     from ..sources._scratch import scratch_dir
 
     in_dir = f"{scratch_dir(spark, 'stream_sentinel', sf_dir)}/events"
@@ -467,11 +467,7 @@ def _sentinel_staged_input(spark: SparkSession, sf_dir: str) -> str:
         ],
         schema,
     ).coalesce(1).write.mode("append").parquet(in_dir)
-    _SSJO_INPUT_CACHE[key] = in_dir
     return in_dir
-
-
-_SPC_SRC_CACHE: dict[tuple, str] = {}
 
 
 def _spc_staged_src(spark, sf_dir, tag, build, n_files=4):
@@ -487,19 +483,15 @@ def _spc_staged_src(spark, sf_dir, tag, build, n_files=4):
     tear. r9 optimization (guide §1.2): re-building the identical
     immutable input cost one repartition+write job chain per query
     per invocation."""
-    key = (id(spark), sf_dir, tag)
-    hit = _SPC_SRC_CACHE.get(key)
-    # hold the session ref and validate identity on lookup (loaders.py
-    # convention): a GC'd session whose CPython id() is recycled must
-    # not return the dead session's applicationId-scoped scratch path.
-    if hit is None or hit[0] is not spark:
+
+    def write() -> str:
         from ..sources._scratch import scratch_dir
 
         src = f"{scratch_dir(spark, f'stream_{tag}', sf_dir)}/src"
         build().repartition(n_files).write.mode("overwrite").parquet(src)
-        _SPC_SRC_CACHE[key] = (spark, src)
         return src
-    return hit[1]
+
+    return _stage("stream_src", spark, write, sf_dir, tag, checkpoint=False)
 
 
 class _PingPong:
@@ -1286,16 +1278,19 @@ def run_stream_merge_state(
     batch_events = load_table(spark, sf_dir, "events")
     # src staged once per (session, sf_dir) — write-once contract as
     # _spc_staged_src; range-split by ts so batches arrive time-ordered
-    key = (id(spark), sf_dir, "merge_state_src")
-    src = _SPC_SRC_CACHE.get(key)
-    if src is None:
+    def write_src() -> str:
         from ..sources._scratch import scratch_dir
 
         src = f"{scratch_dir(spark, 'stream_merge_state', sf_dir)}/src"
         batch_events.repartitionByRange(4, "ts").write.mode(
             "overwrite"
         ).parquet(src)
-        _SPC_SRC_CACHE[key] = src
+        return src
+
+    src = _stage(
+        "stream_src", spark, write_src, sf_dir, "merge_state_src",
+        checkpoint=False,
+    )
     schema = spark.read.parquet(src).schema
     stream = (
         spark.readStream.schema(schema)

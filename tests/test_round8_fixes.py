@@ -201,25 +201,31 @@ def test_bleu_pair_driven_n_frame(spark):
     assert r["rouge2_f"] is None
 
 
-def test_staging_evicts_superseded_inputs():
-    """Superseded input generations are evicted (r7 ADVICE 3); since
-    r9 the last TWO generations stay warm (r8 ADVICE 4), so strict
-    single-generation eviction is pinned via ``keep_owners=1``."""
-    cache: dict = {}
-    a, b = object(), object()
-    r1 = _staging.stage(cache, (id(a), 1), a, lambda: "a1", checkpoint=False)
-    r2 = _staging.stage(cache, (id(a), 2), a, lambda: "a2", checkpoint=False)
-    assert r1 == "a1" and r2 == "a2" and len(cache) == 2
+def test_staging_evicts_superseded_inputs(monkeypatch):
+    """Superseded input generations are evicted (r7 ADVICE 3) per
+    artifact name: with three owners of one artifact the oldest
+    owner's entries go and the two newest stay warm (r8 ADVICE 4); a
+    new owner of another artifact never evicts the first."""
+    monkeypatch.setattr(_staging, "_STAGED_CACHE", {})
+    cache = _staging._STAGED_CACHE
+    a, b, c, d = object(), object(), object(), object()
+    r1 = _staging.stage("A", a, lambda: "a1", 1, checkpoint=False)
+    r2 = _staging.stage("A", a, lambda: "a2", 2, checkpoint=False)
+    assert (r1, r2) == ("a1", "a2") and len(cache) == 2
     # warm hit does not rebuild
-    assert _staging.stage(
-        cache, (id(a), 1), a, lambda: "NEW", checkpoint=False
-    ) == "a1"
-    # keep_owners=1: a new owner evicts both of a's entries
-    r3 = _staging.stage(
-        cache, (id(b), 1), b, lambda: "b1", checkpoint=False, keep_owners=1
-    )
-    assert r3 == "b1"
-    assert list(cache) == [(id(b), 1)]
+    assert _staging.stage("A", a, lambda: "NEW", 1, checkpoint=False) == "a1"
+    _staging.stage("A", b, lambda: "b1", 1, checkpoint=False)
+    assert len(cache) == 3  # two generations: a and b
+    _staging.stage("A", c, lambda: "c1", 1, checkpoint=False)
+    assert set(cache) == {("A", id(b), 1), ("A", id(c), 1)}
+    # owners of artifact B are not generations of A: after B's new
+    # owner d, A's newest two owners (c, then b) stay warm
+    _staging.stage("B", d, lambda: "d1", checkpoint=False)
+    _staging.stage("A", b, lambda: "b2", 2, checkpoint=False)
+    assert {k for k in cache if k[0] == "A"} == {
+        ("A", id(b), 1), ("A", id(b), 2), ("A", id(c), 1)
+    }
+    assert ("B", id(d)) in cache
 
 
 def test_join_order_advisor_rank_no_window(spark):

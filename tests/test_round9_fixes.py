@@ -158,27 +158,28 @@ def test_yuen_both_groups_present_emits_one_row(spark):
 # ---------------------------------------------------------------- staging
 
 
-def test_stage_keeps_two_owner_generations(spark):
-    cache: dict = {}
+def test_stage_keeps_two_owner_generations(spark, monkeypatch):
+    monkeypatch.setattr(_staging, "_STAGED_CACHE", {})
+    cache = _staging._STAGED_CACHE
     a = spark.range(3)
     b = spark.range(4)
     c = spark.range(5)
-    _staging.stage(cache, ("a", 1), a, lambda: a, checkpoint=False)
-    _staging.stage(cache, ("b", 1), b, lambda: b, checkpoint=False)
+    _staging.stage("t", a, lambda: a, checkpoint=False)
+    _staging.stage("t", b, lambda: b, checkpoint=False)
     # alternation: A must still be warm after B arrived
-    assert ("a", 1) in cache and ("b", 1) in cache
-    _staging.stage(cache, ("c", 1), c, lambda: c, checkpoint=False)
+    assert ("t", id(a)) in cache and ("t", id(b)) in cache
+    _staging.stage("t", c, lambda: c, checkpoint=False)
     # oldest generation (A) evicted, B + C warm
-    assert ("a", 1) not in cache
-    assert ("b", 1) in cache and ("c", 1) in cache
+    assert ("t", id(a)) not in cache
+    assert ("t", id(b)) in cache and ("t", id(c)) in cache
 
 
-def test_stage_same_owner_variants_all_kept(spark):
-    cache: dict = {}
+def test_stage_same_owner_variants_all_kept(spark, monkeypatch):
+    monkeypatch.setattr(_staging, "_STAGED_CACHE", {})
     a = spark.range(3)
     for k in range(5):
-        _staging.stage(cache, ("a", k), a, lambda: a, checkpoint=False)
-    assert len(cache) == 5
+        _staging.stage("t", a, lambda: a, k, checkpoint=False)
+    assert len(_staging._STAGED_CACHE) == 5
 
 
 # ------------------------------------------------- stream conf restore
