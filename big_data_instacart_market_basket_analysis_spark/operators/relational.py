@@ -542,6 +542,8 @@ def snapshot_diff(
 #: < 2/3 of max vs >= 1/3 of max, overlapping in the middle third, with
 #: the "new" side's totalprice restated on even keys).
 def orders_snapshot_diff(orders: DataFrame) -> DataFrame:
+    """Snapshot reconciliation: FULL OUTER join of two deterministic
+    orders snapshots, keys classified added/removed/changed/unchanged."""
     # global max as a broadcast 1-row join, NOT an empty-partition
     # window (which would gather every row into a single partition).
     mx = orders.agg(F.max("o_orderkey").alias("mx"))
@@ -786,8 +788,13 @@ def suppliers_waiting(
     # pre-agg gets map-side partial aggregation and avoids the 2x
     # Expand the two distinct columns would plan; n_r_supp =
     # #suppliers with ANY R line = sum(has_r) over the distinct pair
-    # grain — the same numbers by construction.
-    per_pair = lineitem.groupBy("l_orderkey", "l_suppkey").agg(
+    # grain — the same numbers by construction. A NULL l_suppkey is
+    # no supplier: the correlated form's `l_suppkey <>` never matches
+    # NULL, so such a line neither counts as the other supplier nor
+    # blocks one, and is dropped before the pair grain.
+    per_pair = lineitem.filter(F.col("l_suppkey").isNotNull()).groupBy(
+        "l_orderkey", "l_suppkey"
+    ).agg(
         F.max((F.col("l_returnflag") == "R").cast("int")).alias(
             "has_r"
         )

@@ -480,6 +480,9 @@ def _gb_binned_staged(events: DataFrame) -> DataFrame:
 def gbm_train_staged(
     events: DataFrame, rounds: int = GB_ROUNDS
 ) -> DataFrame:
+    """Verified gradient boosting, staged per events input: depth-1
+    stumps on integer-scaled residuals; per-round split/leaves/SSE
+    hash-verified."""
     return _stage(
         "gbm_model", events, lambda: gbm_train(events, rounds), rounds
     )

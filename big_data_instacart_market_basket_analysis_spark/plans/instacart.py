@@ -44,7 +44,10 @@ _STATUS_TO_EVAL = {"P": EVAL_PRIOR, "O": EVAL_TRAIN, "F": EVAL_TEST}
 class InstacartTables:
     """The Instacart-shaped logical views plus their eval_set splits."""
 
+    #: S1-S6: enum-encoded eval_set, order_number window, dow/hod
+    #: extraction, days_since lag + default
     orders: DataFrame
+    #: S1-S3: typed projection + derived reordered flag
     order_products: DataFrame
     products: DataFrame
 

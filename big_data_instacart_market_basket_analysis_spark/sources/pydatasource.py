@@ -123,6 +123,10 @@ def register(spark) -> None:
 
 
 def synthetic_docs(spark, n: int = SYNTH_DOCS_N):
+    """Custom Python DataSource (Spark 4 DataSource API): synthetic
+    deterministic documents, partition-planned generation. The source
+    is its own data (the query ignores sf_dir); the oracle regenerates
+    the same rows from range()+md5 in DuckDB."""
     register(spark)
     return (
         spark.read.format("synthetic_docs")

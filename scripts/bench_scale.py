@@ -60,6 +60,8 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("bench_scale")
     sc = spark.sparkContext
+    # the parallelism the session really got, next to what the env asked
+    default_parallelism = sc.defaultParallelism
     qs = e.queries()
 
     # warmup: JVM, file indexes, codegen, session staging (the same
@@ -86,6 +88,7 @@ def main() -> None:
     out = {
         "fixture": sf_dir,
         "cpus": cpus,
+        "default_parallelism": default_parallelism,
         "n_runs_min": N_RUNS,
         "load_end": round(os.getloadavg()[0], 2),
         "total": round(sum(timings.values()), 3),
@@ -93,7 +96,10 @@ def main() -> None:
     }
     with open(out_path, "w") as fh:
         json.dump(out, fh, indent=1, sort_keys=True)
-    print(json.dumps({"total": out["total"], "cpus": cpus}))
+    print(json.dumps({
+        "total": out["total"], "cpus": cpus,
+        "default_parallelism": default_parallelism,
+    }))
 
 
 if __name__ == "__main__":

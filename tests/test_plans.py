@@ -699,46 +699,50 @@ def test_negative_samples_bounded_candidates(spark):
 
 
 def test_entry_registries_have_no_duplicate_keys():
-    """Dict literals silently drop duplicate keys: a new query entry
-    reusing an existing name (or a second def of the same q_
-    function) makes one of the two silently unreachable and can pair
-    a query with the WRONG oracle (hit twice in round 3 — the
-    attribution and hashed-features collisions). Parse the source and
-    fail loudly on any duplicate."""
+    """Dict literals silently drop duplicate keys: a new row reusing an
+    existing query name (or a second def of the same q_ function) makes
+    one of the two silently unreachable and can pair a query with the
+    WRONG oracle (hit twice in round 3 — the attribution and
+    hashed-features collisions). Parse the source and fail loudly on
+    any duplicate in the `_QUERIES` table or among top-level defs. The
+    bench lists name queries by string; a name missing from the table
+    would only surface as a KeyError mid-run."""
     import ast
     import collections
     import os
 
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "__spark_entry__.py",
-    )
-    tree = ast.parse(open(path).read())
-    # duplicate top-level function defs
-    fns = [
-        n.name for n in tree.body if isinstance(n, ast.FunctionDef)
-    ]
+    import bench
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tree = ast.parse(open(os.path.join(root, "__spark_entry__.py")).read())
+    fns = [n.name for n in tree.body if isinstance(n, ast.FunctionDef)]
     dup_fns = [n for n, c in collections.Counter(fns).items() if c > 1]
     assert not dup_fns, f"duplicate function defs: {dup_fns}"
-    # duplicate keys in any dict literal inside queries()/oracle_sql()
-    for fn in tree.body:
-        if not isinstance(fn, ast.FunctionDef):
-            continue
-        if fn.name not in ("queries", "oracle_sql"):
-            continue
-        for node in ast.walk(fn):
-            if isinstance(node, ast.Dict):
-                keys = [
-                    k.value
-                    for k in node.keys
-                    if isinstance(k, ast.Constant)
-                ]
-                dups = [
-                    k
-                    for k, c in collections.Counter(keys).items()
-                    if c > 1
-                ]
-                assert not dups, f"{fn.name}: duplicate keys {dups}"
+    (table,) = [
+        n.value
+        for n in tree.body
+        if isinstance(n, ast.AnnAssign) and n.target.id == "_QUERIES"
+    ]
+    keys = [k.value for k in table.keys]
+    dups = [k for k, c in collections.Counter(keys).items() if c > 1]
+    assert not dups, f"_QUERIES: duplicate keys {dups}"
+    assert keys == list(entrymod.queries())
+
+    bench_scale = ast.parse(
+        open(os.path.join(root, "scripts", "bench_scale.py")).read()
+    )
+    (scale_queries,) = [
+        ast.literal_eval(n.value)
+        for n in bench_scale.body
+        if isinstance(n, ast.Assign) and n.targets[0].id == "QUERIES"
+    ]
+    for where, names in [
+        ("bench.HEADLINE", bench.HEADLINE),
+        ("bench.HOT", bench.HOT),
+        ("scripts/bench_scale.QUERIES", scale_queries),
+    ]:
+        missing = sorted(set(names) - set(keys))
+        assert not missing, f"{where} names unknown queries: {missing}"
 
 
 def test_operator_modules_have_no_shadowed_top_level_names():

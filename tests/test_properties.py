@@ -1218,6 +1218,65 @@ def test_suppliers_waiting_matches_bruteforce_correlated(spark):
     assert got == want
 
 
+def test_suppliers_waiting_null_suppkey_is_not_a_second_supplier(spark):
+    """A NULL-supplier line must not make an order multi-supplier: the
+    oracle's correlated `l2.l_suppkey <> l1.l_suppkey` never matches
+    NULL. Order 1 has an R line from supplier 1 plus a NULL-suppkey
+    line, so nobody waited on it; order 2 is a real two-supplier wait
+    (supplier 2 returned, supplier 3 did not)."""
+    import duckdb
+
+    from big_data_instacart_market_basket_analysis_spark.operators import (
+        relational,
+    )
+
+    supplier_rows = [(1, "s1"), (2, "s2"), (3, "s3")]
+    lineitem_rows = [
+        (1, 1, "R"), (1, None, "N"),
+        (2, 2, "R"), (2, 3, "N"),
+    ]
+    orders_rows = [(1, "F"), (2, "F")]
+    supplier = spark.createDataFrame(
+        supplier_rows, "s_suppkey BIGINT, s_name STRING"
+    )
+    lineitem = spark.createDataFrame(
+        lineitem_rows,
+        "l_orderkey BIGINT, l_suppkey BIGINT, l_returnflag STRING",
+    )
+    orders = spark.createDataFrame(
+        orders_rows, "o_orderkey BIGINT, o_orderstatus STRING"
+    )
+    got = sorted(
+        (r["s_suppkey"], r["numwait"])
+        for r in relational.suppliers_waiting(
+            supplier, lineitem, orders
+        ).collect()
+    )
+
+    con = duckdb.connect()
+    for name, cols, rows in [
+        ("supplier", "s_suppkey BIGINT, s_name VARCHAR", supplier_rows),
+        ("lineitem",
+         "l_orderkey BIGINT, l_suppkey BIGINT, l_returnflag VARCHAR",
+         lineitem_rows),
+        ("orders", "o_orderkey BIGINT, o_orderstatus VARCHAR", orders_rows),
+    ]:
+        con.execute(f"CREATE TABLE {name} ({cols})")
+        con.executemany(
+            f"INSERT INTO {name} VALUES ({', '.join('?' * len(rows[0]))})",
+            rows,
+        )
+    want = sorted(
+        (sk, n)
+        for sk, _, n in con.execute(
+            "WITH " + relational.ORACLE_SUPPLIERS_WAITING.strip()
+            + " SELECT * FROM suppliers_waiting"
+        ).fetchall()
+    )
+    assert want == [(2, 1)]
+    assert got == want
+
+
 def test_approx_quantiles_within_rank_error(spark):
     """The approx_percentile sketch must land within the guaranteed
     rank error (n / accuracy) of the exact percentile — checked by
