@@ -76,13 +76,9 @@ def _user_features(events: DataFrame) -> DataFrame:
     )
 
 
-def _binned(events: DataFrame) -> DataFrame:
+def _binned_from_feats(feats: DataFrame) -> DataFrame:
     """(user_id, label, fid, bin): melted features mapped to equi-width
     integer bins from the global per-feature min/max."""
-    return _binned_from_feats(_user_features(events))
-
-
-def _binned_from_feats(feats: DataFrame) -> DataFrame:
     melt = feats.select(
         "user_id",
         "label",
@@ -923,29 +919,6 @@ RF_TREES = 4
 #: P(2)=.26 vs Poisson(1)'s .368/.368/.264. Weights RIDE ALONG as a
 #: column (the scale-correct bootstrap: no row resampling shuffle).
 RF_W0, RF_W1 = 37, 74
-
-
-def _rf_weight(tree: int) -> F.Column:
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(f"rf:{tree}:"),
-                        F.col("user_id").cast("string"),
-                    )
-                ),
-                1,
-                13,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
-    return (
-        F.when(h < RF_W0, 0).when(h < RF_W1, 1).otherwise(2)
-    ).cast("bigint")
 
 
 def rf_train(events: DataFrame, n_trees: int = RF_TREES) -> DataFrame:

@@ -8,6 +8,17 @@ Structured Streaming query over the same parquet (memory sink,
 production scale the readStream source becomes Kafka/files-on-arrival
 with the same downstream plan; state stores shard by the grouping key.
 
+Driving a stream: every query goes through ``_drain(spark, writer)``,
+which starts it, runs it to the end of its input and stops it. The
+shuffle-partition setting (the state shard count) is lowered to
+``STREAM_STATE_PARTITIONS`` only across ``start()``, which is where the
+query's cloned session captures it, and is restored even when
+``start()`` raises. The sketch/SPC streams use ``_fold``: a staged
+multi-file source, one file per micro-batch, folded into standing state
+by a per-query ``step(batch, prev)``. Checkpoints and file sinks live
+under ``_stream_root``, a fresh directory per call below the
+per-application scratch root that driver and executors share.
+
 Timestamps: the fixture's TIMESTAMP(NANOS) arrives as epoch-nanos long
 (see loaders.py); outputs expose epoch millis (bigint) so engine/oracle
 compare integers, never timezone-bearing objects.
@@ -15,8 +26,12 @@ compare integers, never timezone-bearing objects.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from uuid import uuid4
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators._staging import stage as _stage
 from ..sources.loaders import (
@@ -219,38 +234,35 @@ STREAM_STATE_PARTITIONS = int(
 )
 
 
-#: per-session original shuffle-partition setting, recorded by the
-#: FIRST _tune_stream_session call so _restore_stream_session can put
-#: the batch session back (r9): stateful streams capture the lowered
-#: value at .start() (Spark clones the session there), but leaving 8
-#: partitions behind would throttle every later BATCH query in a
-#: bench/board session that interleaves stream and batch work.
-_ORIG_SHUFFLE_PARTS: dict[int, str] = {}
+def _stream_root(spark: SparkSession, sf_dir: str, tag: str) -> str:
+    """A fresh directory for one stream run's checkpoint and sink files,
+    under the per-application scratch root (shared storage on a
+    cluster, where executors write what the driver reads back). One
+    root per call: ``run_stream_checkpoint_restart`` writes its input
+    with errorifexists and resumes from its own checkpoint."""
+    from ..sources._scratch import scratch_dir
+
+    return f"{scratch_dir(spark, 'stream', sf_dir)}/{tag}-{uuid4().hex}"
 
 
-def _tune_stream_session(spark: SparkSession) -> None:
+def _drain(spark: SparkSession, writer: DataStreamWriter) -> None:
+    """Start ``writer``, run it until its input is consumed, stop it.
+
+    A stream's state shards are fixed at start (Spark clones the session
+    there), so the shuffle-partition setting is lowered to
+    ``STREAM_STATE_PARTITIONS`` only across ``start()`` and put back
+    whether or not it raises; later batch queries keep full width."""
+    key = "spark.sql.shuffle.partitions"
+    orig = spark.conf.get(key)
+    spark.conf.set(key, str(min(int(orig), STREAM_STATE_PARTITIONS)))
     try:
-        cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        if cur > STREAM_STATE_PARTITIONS:
-            _ORIG_SHUFFLE_PARTS.setdefault(id(spark), str(cur))
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(STREAM_STATE_PARTITIONS),
-            )
-    except Exception:
-        pass
-
-
-def _restore_stream_session(spark: SparkSession) -> None:
-    """Restore the batch session's shuffle-partition setting after a
-    streaming query has STARTED (its cloned session keeps the lowered
-    value for every micro-batch)."""
-    orig = _ORIG_SHUFFLE_PARTS.pop(id(spark), None)
-    if orig is not None:
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", orig)
-        except Exception:
-            pass
+        q = writer.start()
+    finally:
+        spark.conf.set(key, orig)
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -258,7 +270,6 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw ``ts`` encoding — nanos-long or NTZ — arrives exactly like the
     batch reader and is normalized the same way)."""
     ensure_nanos_conf(spark)
-    _tune_stream_session(spark)
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
     # the file source wants a directory; glob-filter the one table out
     # of the shared fixture dir.
@@ -278,17 +289,12 @@ def run_stream_tumbling(
     (complete mode, memory sink), drive it to completion, return the
     materialized result — equal to the batch form, hence oracle-able."""
     agg = tumbling_hourly(_event_stream(spark, sf_dir))
-    q = (
+    _drain(
+        spark,
         agg.writeStream.outputMode("complete")
         .format("memory")
-        .queryName(name)
-        .start()
+        .queryName(name),
     )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(name)
 
 
@@ -313,17 +319,12 @@ def run_stream_windowed_watermark(
             "n_events",
         )
     )
-    q = (
+    _drain(
+        spark,
         agg.writeStream.outputMode("append")
         .format("memory")
-        .queryName(name)
-        .start()
+        .queryName(name),
     )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(name)
 
 
@@ -387,17 +388,12 @@ def run_stream_interval_join(
             F.unix_millis("purchase_ts") - F.unix_millis("click_ts")
         ).alias("ms_before_purchase"),
     )
-    q = (
+    _drain(
+        spark,
         joined.writeStream.outputMode("append")
         .format("memory")
-        .queryName(name)
-        .start()
+        .queryName(name),
     )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(name)
 
 
@@ -470,61 +466,71 @@ def _write_sentinel_input(spark: SparkSession, sf_dir: str) -> str:
     return in_dir
 
 
-def _spc_staged_src(spark, sf_dir, tag, build, n_files=4):
+def _spc_staged_src(spark, sf_dir, tag, build):
     """Stage an SPC/sketch stream's source dir once per (session,
     sf_dir) — the same write-once-per-session contract as
     ``_sentinel_staged_input``: the dir holds a pure projection of the
-    events fixture, split into ``n_files`` files so
-    ``maxFilesPerTrigger=1`` still drives a genuinely multi-batch run
-    (4 triggers — micro-batch sizing is the canonical streaming
-    throughput knob; the merges are associative, so the standing
-    state and the result are batch-count-invariant),
-    and is never mutated after the write, so cached readers can never
-    tear. r9 optimization (guide §1.2): re-building the identical
-    immutable input cost one repartition+write job chain per query
-    per invocation."""
+    events fixture, split into 4 files so ``maxFilesPerTrigger=1``
+    still drives a genuinely multi-batch run (4 triggers — micro-batch
+    sizing is the canonical streaming throughput knob; the merges are
+    associative, so the standing state and the result are
+    batch-count-invariant), and is never mutated after the write, so
+    cached readers can never tear. r9 optimization (guide §1.2):
+    re-building the identical immutable input cost one
+    repartition+write job chain per query per invocation."""
 
     def write() -> str:
         from ..sources._scratch import scratch_dir
 
         src = f"{scratch_dir(spark, f'stream_{tag}', sf_dir)}/src"
-        build().repartition(n_files).write.mode("overwrite").parquet(src)
+        build().repartition(4).write.mode("overwrite").parquet(src)
         return src
 
     return _stage("stream_src", spark, write, sf_dir, tag, checkpoint=False)
 
 
-class _PingPong:
-    """Per-batch state for foreachBatch merge loops: batch k reads
-    batch k-1's materialized state table and writes its own as a NEW
-    table, so read and write never alias (the snapshot isolation the
-    r9 ping-pong dirs provided). r10 (guide §5/§6): the state is
-    sketch-grain bounded (KMV bottom-k, CMS cells, HLL registers,
-    histogram buckets) and the ping-pong dirs lived in a
-    session-scoped tempdir — never restart-durable to begin with — so
-    the per-batch parquet write+read bought no durability, only two
-    file jobs per trigger. State now materializes as one eager
-    ``localCheckpoint`` per batch (measured ~1 s/query faster across
-    the 9 SPC streams); the merge arithmetic is untouched, so the
-    final standing table — and the query result — is identical. A
-    production deployment would point the merge target at a durable
-    store; the demonstrated contract (associative merges,
-    batch-count-invariant state) is unchanged."""
+def _fold(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    build_src: Callable[[], DataFrame],
+    step: Callable[[DataFrame, DataFrame | None], DataFrame],
+) -> DataFrame:
+    """Fold a multi-batch stream into standing state: the source is
+    ``build_src()`` staged by ``_spc_staged_src``, one file per
+    trigger; each micro-batch's state is ``step(batch, prev)``
+    (``prev`` is None on the first batch), and the state after the
+    last batch is returned.
 
-    def __init__(self, root: str) -> None:
-        self.root = root
-        self.df = None
+    Each batch's state materializes as one eager ``localCheckpoint``,
+    a NEW table per batch, so batch k reads batch k-1's state and never
+    aliases its own output. The state is sketch-grain bounded (KMV
+    bottom-k, CMS cells, HLL registers, histogram buckets), and a
+    per-batch parquet write+read of it cost two file jobs per trigger
+    for no durability (r10: ~1 s/query faster). A production
+    deployment would point the state at a durable store; the
+    demonstrated contract (associative merges, batch-count-invariant
+    state) is unchanged."""
+    src = _spc_staged_src(spark, sf_dir, tag, build_src)
+    stream = (
+        spark.readStream.schema(spark.read.parquet(src).schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src)
+    )
+    state = None
 
-    def read(self, spark):
-        return self.df
+    def _merge(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal state
+        state = step(batch_df, state).localCheckpoint(eager=True)
 
-    def write(self, df, batch_id: int) -> None:
-        self.df = df.localCheckpoint(eager=True)
-
-    def final(self, spark):
-        """The standing state table after the stream drains — the
-        call sites' former ``state.final(spark)``."""
-        return self.df
+    root = _stream_root(spark, sf_dir, tag)
+    _drain(
+        spark,
+        stream.writeStream.foreachBatch(_merge).option(
+            "checkpointLocation", f"{root}/ckpt"
+        ),
+    )
+    return state
 
 
 def run_stream_interval_join_outer(
@@ -552,7 +558,6 @@ def run_stream_interval_join_outer(
     State is sharded by user_id and bounded by the lookback window.
     """
     ensure_nanos_conf(spark)
-    _tune_stream_session(spark)
     in_dir = _sentinel_staged_input(spark, sf_dir)
     schema = spark.read.parquet(in_dir).schema
 
@@ -591,20 +596,15 @@ def run_stream_interval_join_outer(
             F.unix_millis("purchase_ts") - F.unix_millis("click_ts")
         ).alias("ms_before_purchase"),
     )
-    q = (
+    # one drain: the data batch (with the staged sentinel already
+    # in the dir) emits matches and advances the watermark; the
+    # automatic no-data batch that follows emits the evictions.
+    _drain(
+        spark,
         joined.writeStream.outputMode("append")
         .format("memory")
-        .queryName(name)
-        .start()
+        .queryName(name),
     )
-    _restore_stream_session(spark)
-    try:
-        # one drain: the data batch (with the staged sentinel already
-        # in the dir) emits matches and advances the watermark; the
-        # automatic no-data batch that follows emits the evictions.
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(name).filter(F.col("purchase_id") >= 0)
 
 
@@ -651,17 +651,12 @@ def run_stream_session_window(
             "n_events",
         )
     )
-    q = (
+    _drain(
+        spark,
         agg.writeStream.outputMode("append")
         .format("memory")
-        .queryName(name)
-        .start()
+        .queryName(name),
     )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(name)
 
 
@@ -753,17 +748,12 @@ def run_stream_dedup(
             "value",
         )
     )
-    q = (
+    _drain(
+        spark,
         deduped.writeStream.outputMode("append")
         .format("memory")
-        .queryName(name)
-        .start()
+        .queryName(name),
     )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(name)
 
 
@@ -861,12 +851,10 @@ def run_stream_partitioned_sink(
     Returns the read-back table, which must equal the batch events
     table — oracle-checked.
     """
-    import tempfile
-
     from ..sources.sinks import upsert_partitions
 
     stream = _event_stream(spark, sf_dir)
-    root = tempfile.mkdtemp(prefix="stream_psink_")
+    root = _stream_root(spark, sf_dir, "psink")
     target = f"{root}/events"
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -879,16 +867,12 @@ def run_stream_partitioned_sink(
             ["day"],
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .start()
+    _drain(
+        spark,
+        stream.writeStream.foreachBatch(_sink).option(
+            "checkpointLocation", f"{root}/ckpt"
+        ),
     )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.read.parquet(target).select(
         "event_id",
         F.unix_millis("ts").alias("ts_ms"),
@@ -931,12 +915,9 @@ def run_stream_checkpoint_restart(
     read by run 2 (offset log), and run-1 state (open windows at the
     split boundary) is restored from the state store.
     """
-    import tempfile
-
     ensure_nanos_conf(spark)
-    _tune_stream_session(spark)
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="stream_ckpt_")
+    root = _stream_root(spark, sf_dir, "ckpt")
     in_dir, out_dir, ckpt = f"{root}/in", f"{root}/out", f"{root}/ckpt"
     split = F.lit(CKPT_SPLIT_DAY).cast("date")
     events.filter(F.to_date("ts") < split).write.parquet(in_dir)
@@ -961,18 +942,13 @@ def run_stream_checkpoint_restart(
                 "sum_value",
             )
         )
-        q = (
+        _drain(
+            spark,
             agg.writeStream.outputMode("append")
             .format("parquet")
             .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .start()
+            .option("checkpointLocation", ckpt),
         )
-        _restore_stream_session(spark)
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
 
     _run_phase()
     # phase 2: the rest of the days land as new files; the restarted
@@ -1127,17 +1103,12 @@ def run_stream_static_enrich(
         .join(F.broadcast(cust), "user_id")
         .select("event_id", "user_id", "segment", "event_type")
     )
-    q = (
+    _drain(
+        spark,
         enriched.writeStream.outputMode("append")
         .format("memory")
-        .queryName(name)
-        .start()
+        .queryName(name),
     )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(name)
 
 
@@ -1170,12 +1141,9 @@ def run_stream_state_inspect(
     a leaked (unevicted) window would surface as an extra row and fail
     the hash. State float sums are rounded per the cross-engine rule.
     """
-    import tempfile
-
     ensure_nanos_conf(spark)
-    _tune_stream_session(spark)
     events = load_table(spark, sf_dir, "events")
-    root = tempfile.mkdtemp(prefix="stream_state_")
+    root = _stream_root(spark, sf_dir, "state")
     in_dir, out_dir, ckpt = f"{root}/in", f"{root}/out", f"{root}/ckpt"
     events.write.parquet(in_dir)
     schema = spark.read.parquet(in_dir).schema
@@ -1190,18 +1158,13 @@ def run_stream_state_inspect(
             F.sum("value").alias("sum_value"),
         )
     )
-    q = (
+    _drain(
+        spark,
         agg.writeStream.outputMode("append")
         .format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .start()
+        .option("checkpointLocation", ckpt),
     )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.unix_millis(F.col("key.window.start")).alias("window_start_ms"),
@@ -1238,9 +1201,7 @@ stream_state_inspect AS (
 MERGE_STATE_BUCKETS = 8
 
 
-def run_stream_merge_state(
-    spark: SparkSession, sf_dir: str, n_buckets: int = MERGE_STATE_BUCKETS
-) -> DataFrame:
+def run_stream_merge_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming foreachBatch MERGE into a keyed aggregate state table
     — the upsert/CDC companion to ``run_stream_partitioned_sink``'s
     append shape. Each micro-batch folds into per-user running state
@@ -1263,16 +1224,16 @@ def run_stream_merge_state(
          this file-format's snapshot isolation), then land via dynamic
          partition overwrite.
 
-    The affected-bucket list is a driver collect of <= n_buckets ints
-    — bounded by the bucket count, never by data. The source is staged
+    The affected-bucket list is a driver collect of <=
+    MERGE_STATE_BUCKETS ints — bounded by the bucket count, never by
+    data. The source is staged
     as multiple files consumed one per trigger, so the merge genuinely
     runs across many micro-batches; the final table must equal the
     batch-mode per-user aggregate — oracle-checked.
     """
     import os
-    import tempfile
 
-    root = tempfile.mkdtemp(prefix="stream_merge_")
+    root = _stream_root(spark, sf_dir, "merge")
     target = f"{root}/state"
 
     batch_events = load_table(spark, sf_dir, "events")
@@ -1298,7 +1259,9 @@ def run_stream_merge_state(
         .parquet(src)
     )
 
-    bucket = F.pmod(F.col("user_id"), F.lit(n_buckets)).alias("bucket")
+    bucket = F.pmod(F.col("user_id"), F.lit(MERGE_STATE_BUCKETS)).alias(
+        "bucket"
+    )
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         partial = batch_df.groupBy("user_id").agg(
@@ -1314,11 +1277,7 @@ def run_stream_merge_state(
         if os.path.isdir(target):
             touched = [
                 r["bucket"]
-                for r in partial.select(
-                    F.pmod("user_id", F.lit(n_buckets)).alias("bucket")
-                )
-                .distinct()
-                .collect()
+                for r in partial.select(bucket).distinct().collect()
             ]
             old = spark.read.parquet(target).filter(
                 F.col("bucket").isin(touched)
@@ -1338,16 +1297,12 @@ def run_stream_merge_state(
 
         upsert_partitions(spark, merged, target, ["bucket"])
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .start()
+    _drain(
+        spark,
+        stream.writeStream.foreachBatch(_merge).option(
+            "checkpointLocation", f"{root}/ckpt"
+        ),
     )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.read.parquet(target).select(
         "user_id",
         "n_events",
@@ -1397,17 +1352,12 @@ def run_stream_dedup_within_watermark(
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type", "value")
     )
-    q = (
+    _drain(
+        spark,
         deduped.writeStream.outputMode("append")
         .format("memory")
-        .queryName(name)
-        .start()
+        .queryName(name),
     )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(name)
 
 
@@ -1448,7 +1398,6 @@ def run_stream_embedding_dedup(
     )
     from ..sources.loaders import load_table
 
-    _tune_stream_session(spark)
     batch = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     stream = (
         spark.readStream.schema(batch.schema)
@@ -1497,17 +1446,12 @@ def run_stream_embedding_dedup(
             ).alias("is_dup"),
         )
     )
-    q = (
+    _drain(
+        spark,
         scored.writeStream.outputMode("complete")
         .format("memory")
-        .queryName(name)
-        .start()
+        .queryName(name),
     )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(name)
 
 
@@ -1545,9 +1489,7 @@ stream_embedding_dedup AS (
 """
 
 
-def run_stream_kmv(
-    spark: SparkSession, sf_dir: str, name: str = "stream_kmv"
-) -> DataFrame:
+def run_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming distinct count via a KMV sketch as the state: each
     micro-batch's user hashes fold into a STANDING bottom-k table
     (union -> distinct -> re-take k smallest -> overwrite), exploiting
@@ -1563,49 +1505,25 @@ def run_stream_kmv(
     rows, so the merge costs one batch-sized distinct + a K-row sort.
     Output (1 row): n_kept, est_users.
     """
-    import tempfile
-
     from ..operators.temporal import KMV_K, _KMV_DENOM
 
-    _tune_stream_session(spark)
-    root = tempfile.mkdtemp(prefix="stream_kmv_")
+    h = F.conv(
+        F.substring(F.md5(F.col("user_id").cast("string")), 1, 13), 16, 10
+    ).cast("bigint")
 
-    src = _spc_staged_src(
+    def step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        part = batch_df.select(h.alias("h")).distinct()
+        if prev is not None:
+            part = prev.unionByName(part)
+        return part.distinct().orderBy("h").limit(KMV_K)
+
+    sk = _fold(
         spark,
         sf_dir,
         "kmv",
         lambda: load_table(spark, sf_dir, "events").select("user_id"),
+        step,
     )
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    h = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 13), 16, 10
-    ).cast("bigint")
-    state = _PingPong(root)
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        part = batch_df.select(h.alias("h")).distinct()
-        prev = state.read(spark)
-        if prev is not None:
-            part = prev.unionByName(part)
-        sk = part.distinct().orderBy("h").limit(KMV_K)
-        state.write(sk, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .start()
-    )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    sk = state.final(spark)
     return sk.agg(
         F.count("*").alias("n_kept"),
         F.when(
@@ -1652,9 +1570,7 @@ stream_kmv AS (
 ORACLE_STREAM_KMV = _oracle_stream_kmv()
 
 
-def run_stream_cms(
-    spark: SparkSession, sf_dir: str, name: str = "stream_cms"
-) -> DataFrame:
+def run_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch as streaming state — the frequency-sketch twin
     of ``run_stream_kmv``: per micro-batch, the batch's partial
     (row, cell) counts MERGE into a standing depth*width cell table by
@@ -1668,25 +1584,8 @@ def run_stream_cms(
     commutative across any micro-batch partitioning. Output: r, c,
     cnt.
     """
-    import tempfile
-
     from ..operators.temporal import CMS_DEPTH, CMS_WIDTH
 
-    _tune_stream_session(spark)
-    root = tempfile.mkdtemp(prefix="stream_cms_")
-
-    src = _spc_staged_src(
-        spark,
-        sf_dir,
-        "cms",
-        lambda: load_table(spark, sf_dir, "events").select("user_id"),
-    )
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     rows = F.array(*[F.lit(r) for r in range(CMS_DEPTH)])
     cell = F.conv(
         F.substring(
@@ -1705,35 +1604,29 @@ def run_stream_cms(
         10,
     ).cast("bigint") % CMS_WIDTH
 
-    state = _PingPong(root)
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         part = (
             batch_df.select("user_id", F.explode(rows).alias("r"))
             .withColumn("c", cell)
             .groupBy("r", "c")
             .agg(F.count("*").alias("cnt"))
         )
-        prev = state.read(spark)
         if prev is not None:
             part = (
                 prev.unionByName(part)
                 .groupBy("r", "c")
                 .agg(F.sum("cnt").alias("cnt"))
             )
-        state.write(part, batch_id)
+        return part
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .start()
+    cells = _fold(
+        spark,
+        sf_dir,
+        "cms",
+        lambda: load_table(spark, sf_dir, "events").select("user_id"),
+        step,
     )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return state.final(spark).select(
+    return cells.select(
         "r", "c", F.col("cnt").cast("long").alias("cnt")
     )
 
@@ -1759,9 +1652,7 @@ stream_cms AS (
 ORACLE_STREAM_CMS = _oracle_stream_cms()
 
 
-def run_stream_hll(
-    spark: SparkSession, sf_dir: str, name: str = "stream_hll"
-) -> DataFrame:
+def run_stream_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HLL registers as streaming state — completes the sketch-state
     trio (KMV: bottom-k, CMS: add, HLL: MAX): each micro-batch's
     partial registers fold into the standing 64-row register table by
@@ -1769,34 +1660,16 @@ def run_stream_hll(
     `hll_distinct` 'ALL' row exactly. Output (1 row): n_registers,
     est_users.
     """
-    import tempfile
-
     from ..operators.temporal import (
         HLL_M,
         HLL_W_BITS,
     )
 
-    _tune_stream_session(spark)
-    root = tempfile.mkdtemp(prefix="stream_hll_")
-
-    src = _spc_staged_src(
-        spark,
-        sf_dir,
-        "hll",
-        lambda: load_table(spark, sf_dir, "events").select("user_id"),
-    )
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
     h = F.conv(
         F.substring(F.md5(F.col("user_id").cast("string")), 1, 13), 16, 10
     ).cast("bigint")
-    state = _PingPong(root)
 
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
+    def step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         part = (
             batch_df.select(h.alias("h"))
             .select(
@@ -1814,26 +1687,21 @@ def run_stream_hll(
             .groupBy("bucket")
             .agg(F.max("rho").alias("rho"))
         )
-        prev = state.read(spark)
         if prev is not None:
             part = (
                 prev.unionByName(part)
                 .groupBy("bucket")
                 .agg(F.max("rho").alias("rho"))
             )
-        state.write(part, batch_id)
+        return part
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .start()
+    regs = _fold(
+        spark,
+        sf_dir,
+        "hll",
+        lambda: load_table(spark, sf_dir, "events").select("user_id"),
+        step,
     )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    regs = state.final(spark)
     grid = spark.range(HLL_M).select(F.col("id").alias("bucket"))
     full = grid.join(regs, "bucket", "left").select(
         F.coalesce("rho", F.lit(0)).alias("rho")
@@ -1903,9 +1771,7 @@ stream_hll AS (
 ORACLE_STREAM_HLL = _oracle_stream_hll()
 
 
-def run_stream_histq(
-    spark: SparkSession, sf_dir: str, name: str = "stream_hist_quantiles"
-) -> DataFrame:
+def run_stream_histq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming quantiles via the mergeable histogram sketch as
     state: each micro-batch's partial (event_type, bin) counts fold
     into a standing histogram by plain addition — the sketch whose
@@ -1920,54 +1786,29 @@ def run_stream_histq(
     batch-sized hash-agg + a state-sized sum. Output per (type, p):
     est_q + n.
     """
-    import tempfile
-
     from ..operators.temporal import HQ_BIN_WIDTH, HQ_PROBS
 
-    _tune_stream_session(spark)
-    root = tempfile.mkdtemp(prefix="stream_histq_")
+    def step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        part = batch_df.groupBy(
+            "event_type",
+            F.floor(F.col("value") / F.lit(HQ_BIN_WIDTH)).alias("bin"),
+        ).agg(F.count("*").alias("cnt"))
+        if prev is not None:
+            part = prev.unionByName(part)
+        return (
+            part.groupBy("event_type", "bin")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
 
-    src = _spc_staged_src(
+    hist = _fold(
         spark,
         sf_dir,
         "histq",
         lambda: load_table(spark, sf_dir, "events").select(
             "event_type", "value"
         ),
+        step,
     )
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    state = _PingPong(root)
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        part = batch_df.groupBy(
-            "event_type",
-            F.floor(F.col("value") / F.lit(HQ_BIN_WIDTH)).alias("bin"),
-        ).agg(F.count("*").alias("cnt"))
-        prev = state.read(spark)
-        if prev is not None:
-            part = prev.unionByName(part)
-        merged = (
-            part.groupBy("event_type", "bin")
-            .agg(F.sum("cnt").alias("cnt"))
-        )
-        state.write(merged, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .start()
-    )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    hist = state.final(spark)
     wc = (
         Window.partitionBy("event_type")
         .orderBy("bin")
@@ -2052,9 +1893,7 @@ stream_hist_quantiles AS (
 ORACLE_STREAM_HISTQ = _oracle_stream_histq()
 
 
-def run_stream_ab_monitor(
-    spark: SparkSession, sf_dir: str, name: str = "stream_ab_monitor"
-) -> DataFrame:
+def run_stream_ab_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming A/B monitor: the per-variant moment cells (n, Σcents,
     Σcents²) are the STANDING STATE, merged per micro-batch by simple
     addition — moments are the canonical mergeable statistic, so the
@@ -2070,12 +1909,22 @@ def run_stream_ab_monitor(
 
     Output (1 row): n0, n1, z, significant.
     """
-    import tempfile
 
-    _tune_stream_session(spark)
-    root = tempfile.mkdtemp(prefix="stream_abm_")
+    def step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        part = batch_df.groupBy("variant").agg(
+            F.count("*").alias("n"),
+            F.sum("c").alias("s"),
+            F.sum(F.col("c") * F.col("c")).alias("q"),
+        )
+        if prev is not None:
+            part = prev.unionByName(part)
+        return part.groupBy("variant").agg(
+            F.sum("n").alias("n"),
+            F.sum("s").alias("s"),
+            F.sum("q").alias("q"),
+        )
 
-    src = _spc_staged_src(
+    st = _fold(
         spark,
         sf_dir,
         "abm",
@@ -2085,42 +1934,8 @@ def run_stream_ab_monitor(
             (F.col("user_id") % 2).cast("int").alias("variant"),
             F.round(F.col("value") * 100, 0).cast("bigint").alias("c"),
         ),
+        step,
     )
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    state = _PingPong(root)
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        part = batch_df.groupBy("variant").agg(
-            F.count("*").alias("n"),
-            F.sum("c").alias("s"),
-            F.sum(F.col("c") * F.col("c")).alias("q"),
-        )
-        prev = state.read(spark)
-        if prev is not None:
-            part = prev.unionByName(part)
-        merged = part.groupBy("variant").agg(
-            F.sum("n").alias("n"),
-            F.sum("s").alias("s"),
-            F.sum("q").alias("q"),
-        )
-        state.write(merged, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .start()
-    )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    st = state.final(spark)
     cells = st.agg(
         F.sum(F.when(F.col("variant") == 0, F.col("n"))).alias("n0"),
         F.sum(F.when(F.col("variant") == 0, F.col("s"))).alias("s0"),
@@ -2199,9 +2014,7 @@ stream_ab_monitor AS (
 """
 
 
-def run_stream_sprt(
-    spark: SparkSession, sf_dir: str, name: str = "stream_sprt"
-) -> DataFrame:
+def run_stream_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Wald SPRT: the sequential test whose state is the
     minimal mergeable pair (n, s) — each micro-batch adds its trial
     and success counts to a 1-row standing state, and the cumulative
@@ -2218,8 +2031,6 @@ def run_stream_sprt(
 
     Output (1 row): n_trials, n_success, llr, decision.
     """
-    import tempfile
-
     from big_data_instacart_market_basket_analysis_spark.operators.temporal import (
         SPRT_L0,
         SPRT_L1,
@@ -2227,10 +2038,15 @@ def run_stream_sprt(
         SPRT_UPPER,
     )
 
-    _tune_stream_session(spark)
-    root = tempfile.mkdtemp(prefix="stream_sprt_")
+    def step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        part = batch_df.agg(
+            F.count("*").alias("n"), F.sum("y").alias("s")
+        )
+        if prev is not None:
+            part = prev.unionByName(part)
+        return part.agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
 
-    src = _spc_staged_src(
+    st = _fold(
         spark,
         sf_dir,
         "sprt",
@@ -2239,36 +2055,8 @@ def run_stream_sprt(
         .select(
             (F.col("event_type") == "purchase").cast("int").alias("y")
         ),
+        step,
     )
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    state = _PingPong(root)
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        part = batch_df.agg(
-            F.count("*").alias("n"), F.sum("y").alias("s")
-        )
-        prev = state.read(spark)
-        if prev is not None:
-            part = prev.unionByName(part)
-        merged = part.agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
-        state.write(merged, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .start()
-    )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    st = state.final(spark)
     llr = F.col("s") * F.lit(SPRT_L1) + (
         F.col("n") - F.col("s")
     ) * F.lit(SPRT_L0)
@@ -2319,9 +2107,7 @@ stream_sprt AS (
 ORACLE_STREAM_SPRT = _oracle_stream_sprt()
 
 
-def run_stream_extremes(
-    spark: SparkSession, sf_dir: str, name: str = "stream_extremes"
-) -> DataFrame:
+def run_stream_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming extreme-value monitor: the Gumbel block-maxima fit
     (``events_gumbel``) with its state kept as the ADDITIVE hour-grain
     revenue table — hourly sums split across micro-batches merge by
@@ -2343,16 +2129,17 @@ def run_stream_extremes(
     Output (1 row): n_blocks, mean_max_cents, sd_max_cents, beta, mu,
     ret30_cents.
     """
-    import tempfile
-
     from big_data_instacart_market_basket_analysis_spark.operators.temporal import (
         gumbel_from_hourly,
     )
 
-    _tune_stream_session(spark)
-    root = tempfile.mkdtemp(prefix="stream_extremes_")
+    def step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        part = batch_df.groupBy("h").agg(F.sum("c").alias("rev"))
+        if prev is not None:
+            part = prev.unionByName(part)
+        return part.groupBy("h").agg(F.sum("rev").alias("rev"))
 
-    src = _spc_staged_src(
+    hourly = _fold(
         spark,
         sf_dir,
         "extremes",
@@ -2362,39 +2149,12 @@ def run_stream_extremes(
             F.date_trunc("hour", "ts").alias("h"),
             F.round(F.col("value") * 100, 0).cast("bigint").alias("c"),
         ),
+        step,
     )
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    state = _PingPong(root)
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        part = batch_df.groupBy("h").agg(F.sum("c").alias("rev"))
-        prev = state.read(spark)
-        if prev is not None:
-            part = prev.unionByName(part)
-        merged = part.groupBy("h").agg(F.sum("rev").alias("rev"))
-        state.write(merged, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .start()
-    )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return gumbel_from_hourly(state.final(spark))
+    return gumbel_from_hourly(hourly)
 
 
-def run_stream_pchart(
-    spark: SparkSession, sf_dir: str, name: str = "stream_pchart"
-) -> DataFrame:
+def run_stream_pchart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming p-chart: the daily error-rate control chart
     (``events_pchart``) with its state kept as the ADDITIVE day-grain
     (n_events, n_errors) pair table — counts split across
@@ -2411,16 +2171,21 @@ def run_stream_pchart(
     Output: the batch p-chart columns (day, n_events, n_errors, p,
     ucl, lcl, out_of_control).
     """
-    import tempfile
-
     from big_data_instacart_market_basket_analysis_spark.operators.temporal import (
         pchart_from_daily,
     )
 
-    _tune_stream_session(spark)
-    root = tempfile.mkdtemp(prefix="stream_pchart_")
+    def step(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        part = batch_df.groupBy("day").agg(
+            F.count("*").alias("n"), F.sum("err").alias("e")
+        )
+        if prev is not None:
+            part = prev.unionByName(part)
+        return part.groupBy("day").agg(
+            F.sum("n").alias("n"), F.sum("e").alias("e")
+        )
 
-    src = _spc_staged_src(
+    daily = _fold(
         spark,
         sf_dir,
         "pchart",
@@ -2428,38 +2193,9 @@ def run_stream_pchart(
             F.to_date("ts").alias("day"),
             (F.col("event_type") == "error").cast("bigint").alias("err"),
         ),
+        step,
     )
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    state = _PingPong(root)
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        part = batch_df.groupBy("day").agg(
-            F.count("*").alias("n"), F.sum("err").alias("e")
-        )
-        prev = state.read(spark)
-        if prev is not None:
-            part = prev.unionByName(part)
-        merged = part.groupBy("day").agg(
-            F.sum("n").alias("n"), F.sum("e").alias("e")
-        )
-        state.write(merged, batch_id)
-
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", f"{root}/ckpt")
-        .start()
-    )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return pchart_from_daily(state.final(spark))
+    return pchart_from_daily(daily)
 
 
 # ---------------------------------------------------------------------------
@@ -2534,17 +2270,12 @@ def run_stream_hbos_alerts(
         )
         .filter(F.col("score") > HBOS_ALERT_MIN)
     )
-    q = (
+    _drain(
+        spark,
         alerts.writeStream.outputMode("append")
         .format("memory")
-        .queryName(name)
-        .start()
+        .queryName(name),
     )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(name)
 
 

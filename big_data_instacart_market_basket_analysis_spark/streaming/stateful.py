@@ -19,7 +19,7 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .events import _event_stream, _restore_stream_session
+from .events import _drain, _event_stream
 
 
 def _count_fn(
@@ -43,17 +43,12 @@ def run_stream_stateful_counts(
         outputMode="update",
         timeoutConf="NoTimeout",
     )
-    q = (
+    _drain(
+        spark,
         counted.writeStream.outputMode("update")
         .format("memory")
-        .queryName(name)
-        .start()
+        .queryName(name),
     )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(name)
 
 
@@ -172,17 +167,12 @@ def run_stream_tws_spend(
         outputMode="Update",
         timeMode="None",
     )
-    q = (
+    _drain(
+        spark,
         out.writeStream.outputMode("update")
         .format("memory")
-        .queryName(name)
-        .start()
+        .queryName(name),
     )
-    _restore_stream_session(spark)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return spark.table(name)
 
 

@@ -831,22 +831,41 @@ def test_jce_sketch_is_one_scan_per_side(spark):
     assert plan.count("Scan parquet") <= 8, plan
 
 
-def test_pingpong_state_is_materialized_table(spark):
-    """r10 batch 4: _PingPong keeps the per-batch standing state as an
-    eagerly localCheckpointed table — read() hands back the same
-    materialized frame write() stored, values intact, and final()
-    is the standing table the call sites collect from."""
+def test_fold_state_is_materialized_per_batch(spark):
+    """``_fold`` keeps the per-batch standing state as an eagerly
+    localCheckpointed table: the first step sees no state, each later
+    step sees exactly the previous step's values as a NEW materialized
+    frame (never aliased), the step runs once per staged file, and the
+    result is the last state."""
+    from pyspark.sql import functions as F
+
     from big_data_instacart_market_basket_analysis_spark.streaming.events import (
-        _PingPong,
+        _fold,
     )
 
-    st = _PingPong("/tmp/unused_root")
-    assert st.read(spark) is None
-    df1 = spark.range(3).toDF("v")
-    st.write(df1, 0)
-    got = st.read(spark)
-    assert got is st.final(spark)
-    assert sorted(r["v"] for r in got.collect()) == [0, 1, 2]
-    # batch k+1 writes a NEW table; the old one is never aliased
-    st.write(got.withColumn("v", got.v + 10), 1)
-    assert sorted(r["v"] for r in st.final(spark).collect()) == [10, 11, 12]
+    prevs, outs = [], []
+
+    def step(batch, prev):
+        prevs.append(prev)
+        out = batch.agg(F.sum("v").alias("s"), F.count("*").alias("n"))
+        if prev is not None:
+            out = prev.unionByName(out)
+        outs.append(sorted(tuple(r) for r in out.collect()))
+        return out
+
+    def materialized(df):
+        return df._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
+
+    got = _fold(
+        spark, SF_ORACLE, "fold_probe",
+        lambda: spark.range(40).toDF("v"), step,
+    )
+    assert len(prevs) == 4
+    assert prevs[0] is None
+    for k, prev in enumerate(prevs[1:]):
+        assert materialized(prev)
+        assert sorted(tuple(r) for r in prev.collect()) == outs[k]
+    assert len({id(p) for p in prevs[1:] + [got]}) == 4
+    assert materialized(got)
+    assert sorted(tuple(r) for r in got.collect()) == outs[-1]
+    assert sum(r["n"] for r in got.collect()) == 40

@@ -21,7 +21,9 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 import bench
 from big_data_instacart_market_basket_analysis_spark.operators import (
@@ -185,11 +187,11 @@ def test_stage_same_owner_variants_all_kept(spark, monkeypatch):
 # ------------------------------------------------- stream conf restore
 
 
-def test_stream_queries_restore_batch_shuffle_partitions(spark):
+def test_stream_queries_restore_batch_shuffle_partitions(spark, monkeypatch):
     """Stateful streams capture the lowered shuffle-partition setting
     at .start() (Spark clones the session there); the batch session
-    must get its original value back so later batch queries keep full
-    reduce-side parallelism (r9)."""
+    must get its original value back, also when start() raises, so
+    later batch queries keep full reduce-side parallelism (r9)."""
     from big_data_instacart_market_basket_analysis_spark.streaming import (
         events as SE,
     )
@@ -201,6 +203,20 @@ def test_stream_queries_restore_batch_shuffle_partitions(spark):
             spark, "/root/testdata/sf0.001", name="restore_pin"
         )
         assert df.count() > 0
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
+
+        seen = []
+
+        def failing_start(writer, *args, **kwargs):
+            seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+            raise RuntimeError("start failed")
+
+        monkeypatch.setattr(DataStreamWriter, "start", failing_start)
+        with pytest.raises(RuntimeError, match="start failed"):
+            SE.run_stream_tumbling(
+                spark, "/root/testdata/sf0.001", name="restore_fail"
+            )
+        assert seen == [str(SE.STREAM_STATE_PARTITIONS)]
         assert spark.conf.get("spark.sql.shuffle.partitions") == "32"
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", orig)

@@ -1,7 +1,12 @@
 """Streaming shape tests: batch/stream duality, watermarked append,
-session windows, custom stateful operator."""
+session windows, custom stateful operator, and the one stream driver
+(``_drain``/``_fold``/``_stream_root``)."""
 
 from __future__ import annotations
+
+import ast
+import tempfile
+from pathlib import Path
 
 import pytest
 
@@ -223,3 +228,55 @@ def test_available_now_trigger_terminates(spark):
         for r in events.groupBy("event_type").count().collect()
     }
     assert got == want
+
+
+def test_stream_roots_live_under_scratch_root(spark, monkeypatch):
+    """Checkpoints and file sinks go under the per-application scratch
+    root, never a driver-local temp dir; each call gets its own root,
+    so a second checkpoint/restart run in the session starts clean."""
+
+    def no_tempdir(*args, **kwargs):
+        raise AssertionError("stream asked for a driver-local temp dir")
+
+    monkeypatch.setattr(tempfile, "mkdtemp", no_tempdir)
+    assert ev.run_stream_sprt(spark, SF_SMOKE).count() == 1
+    first = _rows(ev.run_stream_checkpoint_restart(spark, SF_SMOKE), "*")
+    again = _rows(ev.run_stream_checkpoint_restart(spark, SF_SMOKE), "*")
+    assert first and first == again
+
+
+def _owners(match) -> list[str]:
+    """Top-level definition enclosing each AST node that ``match``es,
+    over every streaming module."""
+    found = []
+    for path in sorted(Path(ev.__file__).parent.glob("*.py")):
+        for top in ast.parse(path.read_text()).body:
+            found += [
+                getattr(top, "name", "<module>")
+                for node in ast.walk(top) if match(node)
+            ]
+    return found
+
+
+def _attr(name):
+    return lambda n: isinstance(n, ast.Attribute) and n.attr == name
+
+
+def test_one_stream_driver():
+    """Only ``_drain`` starts, drains and stops a query and touches the
+    shuffle-partition setting; only ``_fold`` and the two sinks that
+    write files per micro-batch use foreachBatch."""
+    conf_key = "spark.sql.shuffle.partitions"
+    assert _owners(_attr("processAllAvailable")) == ["_drain"]
+    assert _owners(_attr("start")) == ["_drain"]
+    assert set(
+        _owners(lambda n: isinstance(n, ast.Constant) and n.value == conf_key)
+    ) == {"_drain"}
+    assert sorted(_owners(_attr("foreachBatch"))) == [
+        "_fold", "run_stream_merge_state", "run_stream_partitioned_sink",
+    ]
+    for path in Path(ev.__file__).parent.glob("*.py"):
+        text = path.read_text()
+        for gone in ("tempfile", "_PingPong", "_ORIG_SHUFFLE_PARTS",
+                     "_tune_stream_session", "_restore_stream_session"):
+            assert gone not in text, (path.name, gone)
