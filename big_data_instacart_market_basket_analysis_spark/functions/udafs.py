@@ -118,6 +118,10 @@ def grouped_map_slope(events: DataFrame) -> DataFrame:
         import pandas as pd
 
         n = len(pdf)
+        # total over every group: a user with fewer than 3 purchases
+        # gets no row (for n = 1 the denominator below is 0)
+        if n < 3:
+            return pd.DataFrame()
         x = pdf["idx"].astype("int64")
         y = pdf["c"].astype("int64")
         sx, sy = int(x.sum()), int(y.sum())
@@ -140,7 +144,6 @@ def grouped_map_slope(events: DataFrame) -> DataFrame:
         .applyInPandas(
             _slope, schema="user_id bigint, n bigint, slope double"
         )
-        .filter(F.col("n") >= 3)
         .select("user_id", "n", F.round("slope", 6).alias("slope"))
     )
 

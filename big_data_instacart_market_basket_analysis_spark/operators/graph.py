@@ -1,26 +1,47 @@
-"""[EXT] Iterative graph analytics: PageRank over the product
-co-purchase graph.
+"""[EXT] Iterative graph analytics over the product co-purchase graph.
 
-Ranks products by co-occurrence centrality (which products anchor
-baskets — the graph view of the reference's frequent-pair mining,
-F.py:296-396 territory). Two design rules make it engine-portable and
-scale-shaped:
+The graph view of the reference's basket and frequent-pair mining
+(F.py:296-396 territory): centrality, traversal, triangles and cores,
+communities, link prediction and item similarity. Every query reads
+the session-staged distinct directed edge list (``_edges_staged``:
+(a, b) iff parts a != b share an order), which shuffles once on
+orderkey. Design rules:
 
-- **Integer arithmetic.** Ranks are scaled millionths with floor
-  division everywhere (``r' = 150000 + (85 * incoming) DIV 100``).
-  Float PageRank sums differ by accumulation order across engines and
-  partitions; integral ranks hash-match exactly.
-- **Fixed unrolled iterations, plan-only composition.** Each superstep
-  is one join + one hash-agg appended to the logical plan — no
-  driver-side collect, no lineage-breaking actions at fixture scale.
-  The DuckDB oracle unrolls the same three steps as chained CTEs
-  (recursive CTEs disallow aggregation in the recursive term). At
-  100 TB you'd localCheckpoint between supersteps to cut lineage depth
-  and let AQE re-plan each round — same per-round plan, same results.
+- **Integer arithmetic.** Ranks, distances and scores are integers
+  (scaled millionths with floor division, e.g. PageRank's
+  ``r' = 150000 + (85 * incoming) DIV 100``). Float sums differ by
+  accumulation order across engines and partitions; integers
+  hash-match exactly.
+- **Fixed unrolled supersteps.** Each iteration runs a fixed number
+  of rounds with no driver collect, and the DuckDB oracle unrolls the
+  same rounds as chained CTEs (recursive CTEs disallow aggregation in
+  the recursive term).
+- **One kernel per shared algorithm.** Four algorithms serve more
+  than one query; each is one private kernel that takes the queries'
+  one difference as an argument:
 
-The co-purchase edge list shuffles once on orderkey (self-join), then
-every superstep shuffles on the node key; out-degrees are computed once
-and rejoined (vocabulary-sized relative to edges, broadcast-eligible).
+  - ``_pagerank``: ``pagerank_products`` and ``personalized_pagerank``
+    (the seed predicate: every node, or partkey % PPR_SEED_MOD == 0);
+  - ``_bellman_ford``: ``bfs_distances`` and ``sssp_weighted`` (the
+    edge weight: 1, or the price gap);
+  - ``_link_scores``: ``link_prediction_ra`` and
+    ``adamic_adar_prediction`` (the per-centre ``give``: 1e6 DIV deg,
+    or floor(1e6 / ln deg));
+  - ``_node_triangles`` over ``_degrees``: ``triangle_counts``,
+    ``triangle_counts_from_edges`` and ``clustering_coefficient``
+    (staged or unstaged triangle list); ``_oriented_edges`` reuses
+    ``_degrees``.
+
+- **One per-round cut rule.** A superstep's state that the next step
+  reads more than once (the Bellman-Ford distance table, the k-core
+  survivors, the HITS half-steps, the pivot-BFS table) is cut each
+  round with a lazy ``localCheckpoint(eager=False)``: it materializes
+  inside the consuming action's first pass, so a round costs no
+  driver-synchronous job, while the plan stays one join + one agg per
+  round instead of doubling. State read once (PageRank's ranks, a
+  final round read only by the returned frame) is not cut. The k-truss
+  peel alone cuts eagerly: its later rounds filter, semi-join and
+  union the same tables.
 """
 
 from __future__ import annotations
@@ -64,15 +85,26 @@ def _edges_staged(lineitem: DataFrame) -> DataFrame:
     )
 
 
-def pagerank_products(
-    lineitem: DataFrame, iterations: int = PR_ITERATIONS
+def _pagerank(
+    lineitem: DataFrame, iterations: int, is_seed
 ) -> DataFrame:
-    """Integer PageRank over the co-purchase graph; returns
-    (node, rank_millionths) after ``iterations`` supersteps."""
+    """The PageRank kernel shared by ``pagerank_products`` and
+    ``personalized_pagerank``: integer ranks (node, rank) after
+    ``iterations`` supersteps. ``is_seed(node_col)`` is a boolean
+    Column: seed nodes start at PR_SCALE and take the restart mass
+    base = 15% of PR_SCALE each round, every other node starts at 0
+    and takes none. Each superstep is one join + one hash-agg on the
+    node key; the rank table is read once per round, so no round is
+    cut."""
     edges = _edges_staged(lineitem)
     out_deg = edges.groupBy("a").agg(F.count("*").alias("deg"))
+    base = (100 - PR_DAMP_PCT) * PR_SCALE // 100
     ranks = out_deg.select(
-        F.col("a").alias("node"), F.lit(PR_SCALE).alias("rank")
+        F.col("a").alias("node"),
+        F.when(is_seed(F.col("a")), F.lit(PR_SCALE))
+        .otherwise(F.lit(0))
+        .cast("bigint")
+        .alias("rank"),
     )
     for _ in range(iterations):
         contrib = (
@@ -91,10 +123,20 @@ def pagerank_products(
         ranks = contrib.select(
             F.col("b").alias("node"),
             (
-                F.lit((100 - PR_DAMP_PCT) * PR_SCALE // 100)
+                F.when(is_seed(F.col("b")), F.lit(base)).otherwise(F.lit(0))
                 + (F.col("incoming") * PR_DAMP_PCT / 100).cast("bigint")
             ).alias("rank"),
         )
+    return ranks
+
+
+def pagerank_products(
+    lineitem: DataFrame, iterations: int = PR_ITERATIONS
+) -> DataFrame:
+    """Integer PageRank over the co-purchase graph; returns
+    (node, rank_millionths) after ``iterations`` supersteps. Every
+    node is a seed: uniform start and restart."""
+    ranks = _pagerank(lineitem, iterations, lambda node: F.lit(True))
     return ranks.select("node", F.col("rank").alias("rank_millionths"))
 
 
@@ -153,6 +195,29 @@ TRIANGLE_SKEW_DEG_THRESHOLD = 1024
 _TRI_KEY_ID_BITS = 31
 
 
+def _degrees(und: DataFrame) -> DataFrame:
+    """(node, degree) of canonical undirected edges (a < b)."""
+    return (
+        und.select(F.col("a").alias("node"))
+        .unionByName(und.select(F.col("b").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("degree"))
+    )
+
+
+def _node_triangles(tri: DataFrame, deg: DataFrame) -> DataFrame:
+    """(node, n_triangles, degree) for every corner of a triangle list
+    (u, v, w) — the per-node count shared by the triangle and
+    clustering queries."""
+    return (
+        tri.select(F.explode(F.array("u", "v", "w")).alias("node"))
+        .groupBy("node")
+        .agg(F.count("*").alias("n_triangles"))
+        .join(deg, "node")
+        .select("node", "n_triangles", "degree")
+    )
+
+
 def _oriented_edges(
     und: DataFrame, skew_threshold: int = TRIANGLE_SKEW_DEG_THRESHOLD
 ) -> DataFrame:
@@ -164,13 +229,7 @@ def _oriented_edges(
     broadcast probes, none of the full rank-attach shuffles that made
     the always-degree-oriented variant 1.4x slower (measured, round 2
     docstring history)."""
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-    )
-    hubs = deg.filter(F.col("degree") > skew_threshold)
+    hubs = _degrees(und).filter(F.col("degree") > skew_threshold)
 
     def key(node_col: str, hdeg_col: str):
         hub = F.col(hdeg_col).isNotNull()
@@ -239,21 +298,7 @@ def triangle_counts_from_edges(
     10^12-pair bucket pure id-orientation would build. All three
     steps stay equi-joins (hash joins under AQE skew splitting).
     """
-    tri = _triangles(und, skew_threshold)
-    per_node = (
-        tri.select(F.explode(F.array("u", "v", "w")).alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").alias("n_triangles"))
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-    )
-    return per_node.join(deg, "node").select(
-        "node", "n_triangles", "degree"
-    )
+    return _node_triangles(_triangles(und, skew_threshold), _degrees(und))
 
 
 def _triangles(
@@ -302,21 +347,7 @@ def triangle_counts(lineitem: DataFrame) -> DataFrame:
     session that also peels the k-truss the wedge closure runs
     once."""
     und = _edges_staged(lineitem).filter(F.col("a") < F.col("b"))
-    tri = _triangles_staged(lineitem)
-    per_node = (
-        tri.select(F.explode(F.array("u", "v", "w")).alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").alias("n_triangles"))
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-    )
-    return per_node.join(deg, "node").select(
-        "node", "n_triangles", "degree"
-    )
+    return _node_triangles(_triangles_staged(lineitem), _degrees(und))
 
 
 ORACLE_TRIANGLE_COUNTS = """
@@ -362,6 +393,50 @@ BFS_SEEDS = 3
 BFS_HOPS = 4
 
 
+def _bellman_ford(edges: DataFrame, rounds: int, out: str) -> DataFrame:
+    """The fixed-round Bellman-Ford kernel shared by ``bfs_distances``
+    (weight 1) and ``sssp_weighted`` (the price gap): distances over
+    weighted edges (a, b, w) from the BFS_SEEDS lowest-id nodes (a
+    distributed TakeOrdered of 3 rows), exact for every path within
+    ``rounds`` edges. Returns (node, ``out``) for every node reached;
+    the distance has the type of ``w``.
+
+    Per superstep ONE equi-join relaxes every edge against the
+    distance table and ONE min-agg on the node key re-tightens it;
+    both partition on the node key.
+    """
+    nodes = edges.select(F.col("a").alias("node")).distinct()
+    dist = nodes.orderBy("node").limit(BFS_SEEDS).select(
+        "node", F.lit(0).cast(dict(edges.dtypes)["w"]).alias(out)
+    )
+    # r10 (guide §2.4/§5): dist is consumed TWICE per round (the relax
+    # join and the re-tighten union), so the lazy chain doubled the
+    # inlined prefix every round — 92 Exchanges in the captured SSSP
+    # before-plan for 4 rounds. dist is NODE-grain (bounded by the
+    # part vocabulary), so a per-round checkpoint caps the plan at one
+    # join+min-agg per round; the final round stays uncut (single
+    # consumer — the returned frame).
+    for rnd in range(rounds):
+        relax = edges.join(
+            dist.select(F.col("node").alias("a"), out), "a"
+        ).select(
+            F.col("b").alias("node"),
+            (F.col(out) + F.col("w")).alias(out),
+        )
+        dist = (
+            dist.unionByName(relax)
+            .groupBy("node")
+            .agg(F.min(out).alias(out))
+        )
+        if rnd < rounds - 1:
+            # lazy: materializes once inside the final action's first
+            # pass (no per-round driver-synchronous job — the eager
+            # variant measured SLOWER, 3.7 -> 4.7 s, because 3 extra
+            # small jobs outweighed the recompute they saved)
+            dist = dist.localCheckpoint(eager=False)
+    return dist
+
+
 def bfs_distances(
     lineitem: DataFrame, hops: int = BFS_HOPS
 ) -> DataFrame:
@@ -370,39 +445,17 @@ def bfs_distances(
     supersteps (unreached nodes are absent) — the traversal primitive
     under "within N recommendation hops" queries.
 
-    Same engine-portable recipe as PageRank: fixed unrolled
-    supersteps, integer distances, plan-only composition (no driver
-    collect; seed selection is a distributed TakeOrdered of 3 rows).
-    Each superstep is one equi-join frontier relax + one min-agg on
-    the node key — both hash-partitioned on the same key, so at scale
-    rounds reuse one partitioning. This full-relaxation form re-joins
-    the whole distance table each round (correct and simplest for
-    fixed small ``hops``); the production refinement for deep
-    traversals is delta-frontier expansion — join only rows whose
-    dist changed last round — which drops superstep cost to the
-    frontier size without changing results or the oracle.
+    ``_bellman_ford`` with every edge weighing 1: fixed unrolled
+    supersteps, integer distances, no driver collect, and the
+    distance table cut lazily each round like SSSP's. This
+    full-relaxation form re-joins the whole distance table each round
+    (correct and simplest for fixed small ``hops``); the production
+    refinement for deep traversals is delta-frontier expansion — join
+    only rows whose dist changed last round — which drops superstep
+    cost to the frontier size without changing results or the oracle.
     """
-    edges = _edges_staged(lineitem)
-    nodes = edges.select(F.col("a").alias("node")).distinct()
-    dist = nodes.orderBy("node").limit(BFS_SEEDS).select(
-        "node", F.lit(0).alias("dist")
-    )
-    for _ in range(hops):
-        relax = (
-            edges.join(
-                dist.select(F.col("node").alias("a"), "dist"), "a"
-            )
-            .select(
-                F.col("b").alias("node"),
-                (F.col("dist") + F.lit(1)).alias("dist"),
-            )
-        )
-        dist = (
-            dist.unionByName(relax)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-        )
-    return dist.select("node", "dist")
+    edges = _edges_staged(lineitem).select("a", "b", F.lit(1).alias("w"))
+    return _bellman_ford(edges, hops, "dist")
 
 
 def oracle_bfs_distances(hops: int = BFS_HOPS) -> str:
@@ -456,13 +509,10 @@ def sssp_weighted(
     the distance reads "cheapest sequence of natural substitutions
     from a seed product", the graph form of the substitution ladder.
 
-    Fixed-round Bellman-Ford: per superstep ONE equi-join relaxes
-    every edge against the current distance table and ONE min-agg on
-    the node key re-tightens it — the same engine-portable recipe as
-    BFS/PageRank (no driver collect, integer arithmetic end-to-end,
-    unrolled identically in the DuckDB oracle). Distances are exact
-    for all paths within ``rounds`` edges; seeds are the BFS_SEEDS
-    lowest-id products (a distributed TakeOrdered of 3 rows).
+    ``_bellman_ford`` with the price gap as the weight: integer
+    arithmetic end-to-end, unrolled identically in the DuckDB oracle.
+    Distances are exact for all paths within ``rounds`` edges; seeds
+    are the BFS_SEEDS lowest-id products.
 
     Scale: the weighted edge list attaches prices by TWO broadcast
     joins of the part dim onto the session-staged edges, then
@@ -514,36 +564,7 @@ def sssp_weighted(
         # when the query result itself is consumed once.
         .localCheckpoint(eager=False)
     )
-    nodes = edges.select(F.col("a").alias("node")).distinct()
-    dist = nodes.orderBy("node").limit(BFS_SEEDS).select(
-        "node", F.lit(0).cast("bigint").alias("dist_cents")
-    )
-    # r10 (guide §2.4/§5): dist is consumed TWICE per round (the relax
-    # join and the re-tighten union), so the lazy chain doubled the
-    # inlined prefix every round — 92 Exchanges in the captured
-    # before-plan for 4 rounds. dist is NODE-grain (bounded by the
-    # part vocabulary), so an eager per-round checkpoint costs one
-    # small job and caps the plan at one join+min-agg per round; the
-    # final round stays lazy (single consumer — the returned frame).
-    for rnd in range(rounds):
-        relax = edges.join(
-            dist.select(F.col("node").alias("a"), "dist_cents"), "a"
-        ).select(
-            F.col("b").alias("node"),
-            (F.col("dist_cents") + F.col("w")).alias("dist_cents"),
-        )
-        dist = (
-            dist.unionByName(relax)
-            .groupBy("node")
-            .agg(F.min("dist_cents").alias("dist_cents"))
-        )
-        if rnd < rounds - 1:
-            # lazy: materializes once inside the final action's first
-            # pass (no per-round driver-synchronous job — the eager
-            # variant measured SLOWER, 3.7 -> 4.7 s, because 3 extra
-            # small jobs outweighed the recompute they saved)
-            dist = dist.localCheckpoint(eager=False)
-    return dist.select("node", "dist_cents")
+    return _bellman_ford(edges, rounds, "dist_cents")
 
 
 def oracle_sssp_weighted(rounds: int = SSSP_ROUNDS) -> str:
@@ -1820,6 +1841,7 @@ def k_core_membership(
     alive = alive.localCheckpoint(eager=False)
     last = None
     for _ in range(rounds):
+        prev = alive
         ind_deg = (
             edges.join(alive, edges.a == alive.node, "leftsemi")
             .join(
@@ -1835,19 +1857,17 @@ def k_core_membership(
             last.filter(F.col("core_deg") >= k)
             .select(F.col("a").alias("node"))
         )
+    # converged iff round R dropped nobody from the round-(R-1)
+    # survivor set `prev` that produced `last`: compare the survivor
+    # counts of the last two rounds, as the oracle does (1-row
+    # broadcast crossJoin, the engine's standard scalar-attach shape).
     n_alive = alive.agg(F.count("*").alias("n_alive"))
-    n_prev = last.filter(F.col("core_deg") >= k).agg(
-        F.count("*").alias("n_prev")
-    )
-    # converged iff the final filter dropped nobody vs the round-(R-1)
-    # survivor set that produced `last`: compare survivor counts of the
-    # last two rounds (1-row broadcast crossJoin, the engine's standard
-    # scalar-attach shape).
+    n_prev = prev.agg(F.count("*").alias("n_prev"))
     conv = n_alive.crossJoin(n_prev).select(
         (F.col("n_alive") == F.col("n_prev")).cast("int").alias("converged")
     )
     surv = last.filter(F.col("core_deg") >= k)
-    out = (
+    return (
         deg0.join(surv, "a", "left")
         .select(
             F.col("a").alias("node"),
@@ -1857,7 +1877,6 @@ def k_core_membership(
         )
         .crossJoin(F.broadcast(conv))
     )
-    return out
 
 
 def oracle_k_core(
@@ -1947,6 +1966,51 @@ RA_SEED_MOD = 100
 RA_PER_SEED = 5
 
 
+def _link_scores(
+    lineitem: DataFrame, df_cap: int, per_seed: int, give, score: str
+) -> DataFrame:
+    """The seed-scoped wedge kernel shared by ``link_prediction_ra``
+    and ``adamic_adar_prediction``: every common neighbor z of a seed
+    (partkey % RA_SEED_MOD == 0) and a non-adjacent candidate adds
+    ``give`` — an integer Column over z's degree ``deg`` — to the
+    pair's ``score``; the top ``per_seed`` candidates per seed are
+    kept. Output: seed, cand, cn, ``score``, rank.
+
+    Centers of degree above ``df_cap`` are skipped, and so are centers
+    of degree 1: their one neighbor can only pair with itself, so no
+    wedge is lost, and ln(1) = 0 never reaches AA's division.
+    """
+    edges = _edges_staged(lineitem)
+    deg = edges.groupBy("a").agg(F.count("*").alias("deg"))
+    nbr = edges.join(
+        deg.filter((F.col("deg") <= df_cap) & (F.col("deg") >= 2)), "a"
+    ).select(F.col("a").alias("z"), F.col("b").alias("n"), give.alias("give"))
+    seed_side = nbr.filter(
+        F.col("n") % RA_SEED_MOD == 0
+    ).select("z", F.col("n").alias("seed"))
+    cand_side = nbr.select("z", F.col("n").alias("cand"), "give")
+    wedges = seed_side.join(cand_side, "z").filter(
+        F.col("seed") != F.col("cand")
+    )
+    scored = wedges.groupBy("seed", "cand").agg(
+        F.count("*").alias("cn"),
+        F.sum("give").alias(score),
+    )
+    non_adj = scored.join(
+        edges,
+        (scored.seed == edges.a) & (scored.cand == edges.b),
+        "left_anti",
+    )
+    w = Window.partitionBy("seed").orderBy(
+        F.desc(score), F.desc("cn"), F.asc("cand")
+    )
+    return (
+        non_adj.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= per_seed)
+        .select("seed", "cand", "cn", score, "rank")
+    )
+
+
 def link_prediction_ra(
     lineitem: DataFrame,
     df_cap: int = RA_DF_CAP,
@@ -1967,43 +2031,13 @@ def link_prediction_ra(
     nodes you actually want recommendations for is the production
     form. Hub centers above ``df_cap`` are skipped (tiny 1e6 DIV deg
     contributions), bounding every z-bucket. The per-seed window is
-    bounded by a seed's 2-hop neighborhood.
+    bounded by a seed's 2-hop neighborhood. Runs ``_link_scores``
+    with give = 1e6 DIV deg(z).
 
     Output: seed, cand, cn, ra_micros, rank (rank <= per_seed).
     """
-    edges = _edges_staged(lineitem)
-    deg = edges.groupBy("a").agg(F.count("*").alias("deg"))
-    nbr = edges.join(
-        deg.filter(F.col("deg") <= df_cap), "a"
-    ).select(
-        F.col("a").alias("z"),
-        F.col("b").alias("n"),
-        (F.lit(RA_SCALE) / F.col("deg")).cast("bigint").alias("give"),
-    )
-    seed_side = nbr.filter(
-        F.col("n") % RA_SEED_MOD == 0
-    ).select("z", F.col("n").alias("seed"))
-    cand_side = nbr.select("z", F.col("n").alias("cand"), "give")
-    wedges = seed_side.join(cand_side, "z").filter(
-        F.col("seed") != F.col("cand")
-    )
-    scored = wedges.groupBy("seed", "cand").agg(
-        F.count("*").alias("cn"),
-        F.sum("give").alias("ra_micros"),
-    )
-    non_adj = scored.join(
-        edges,
-        (scored.seed == edges.a) & (scored.cand == edges.b),
-        "left_anti",
-    )
-    w = Window.partitionBy("seed").orderBy(
-        F.desc("ra_micros"), F.desc("cn"), F.asc("cand")
-    )
-    return (
-        non_adj.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= per_seed)
-        .select("seed", "cand", "cn", "ra_micros", "rank")
-    )
+    give = (F.lit(RA_SCALE) / F.col("deg")).cast("bigint")
+    return _link_scores(lineitem, df_cap, per_seed, give, "ra_micros")
 
 
 def oracle_link_prediction_ra(
@@ -2657,49 +2691,17 @@ def personalized_pagerank(
 
     Non-seed sinks of the seeds' neighborhoods keep nonzero rank via
     incoming flow only; nodes unreachable from the seed set decay to
-    0 (floor division) — exactly the PPR semantics. Per superstep:
-    one join + one hash-agg on the node key, the edge list reused
-    from the session-staged co-purchase stage shared with
-    PageRank/triangles.
+    0 (floor division) — exactly the PPR semantics. Runs the
+    ``_pagerank`` kernel with the seed rule as its seed predicate.
 
     Output: (node, is_seed, rank_millionths).
     """
-    edges = _edges_staged(lineitem)
-    out_deg = edges.groupBy("a").agg(F.count("*").alias("deg"))
-    base = (100 - PR_DAMP_PCT) * PR_SCALE // 100
-    seed = F.col("node") % PPR_SEED_MOD == 0
-    ranks = out_deg.select(
-        F.col("a").alias("node"),
-        F.when(F.col("a") % PPR_SEED_MOD == 0, F.lit(PR_SCALE))
-        .otherwise(F.lit(0))
-        .cast("bigint")
-        .alias("rank"),
-    )
-    for _ in range(iterations):
-        contrib = (
-            edges.join(
-                ranks.join(out_deg, ranks.node == out_deg.a).select(
-                    F.col("node").alias("src"),
-                    (F.col("rank") / F.col("deg"))
-                    .cast("bigint")
-                    .alias("give"),
-                ),
-                edges.a == F.col("src"),
-            )
-            .groupBy("b")
-            .agg(F.sum("give").alias("incoming"))
-        )
-        ranks = contrib.select(
-            F.col("b").alias("node"),
-            (
-                F.when(F.col("b") % PPR_SEED_MOD == 0, F.lit(base))
-                .otherwise(F.lit(0))
-                + (F.col("incoming") * PR_DAMP_PCT / 100).cast("bigint")
-            ).alias("rank"),
-        )
-    return ranks.select(
+    def seed(node):
+        return node % PPR_SEED_MOD == 0
+
+    return _pagerank(lineitem, iterations, seed).select(
         "node",
-        seed.cast("int").alias("is_seed"),
+        seed(F.col("node")).cast("int").alias("is_seed"),
         F.col("rank").alias("rank_millionths"),
     )
 
@@ -3011,19 +3013,8 @@ def clustering_coefficient(lineitem: DataFrame) -> DataFrame:
     local_coef, global_transitivity (both round 6).
     """
     und = _edges_staged(lineitem).filter(F.col("a") < F.col("b"))
-    tri = _triangles_staged(lineitem)
-    per_node = (
-        tri.select(F.explode(F.array("u", "v", "w")).alias("node"))
-        .groupBy("node")
-        .agg(F.count("*").alias("n_triangles"))
-    )
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-    )
-    joined = per_node.join(deg, "node")
+    deg = _degrees(und)
+    joined = _node_triangles(_triangles_staged(lineitem), deg)
     glob = joined.agg(
         F.sum("n_triangles").alias("t3"),  # = 3*T over triangle nodes
     ).crossJoin(
@@ -3120,55 +3111,19 @@ def adamic_adar_prediction(
     citation-recommendation tradeoff (AA keeps mid-degree bridges
     that RA almost zeroes out).
 
-    Same scale shape as the RA kernel (seed-scoped wedges, df-capped
-    centers, per-seed 2-hop-bounded window); the float trap is
-    dodged the same way: each z contributes the PER-NODE integer
+    The RA query's ``_link_scores`` kernel (seed-scoped wedges,
+    df-capped centers, per-seed 2-hop-bounded window); the float trap
+    is dodged the same way: each z gives the PER-NODE integer
     floor(1e6 / ln(deg(z))) — ln is evaluated once per node, where
     both engines agree bitwise, and the wedge SUM is then exact
     BIGINT arithmetic in any fold order (a raw 1/ln float sum would
-    be fold-order jitter). deg >= 2 is structural for a common
-    neighbor, and the filter also guards ln(1) = 0.
+    be fold-order jitter). The kernel's deg >= 2 filter guards
+    ln(1) = 0.
 
     Output: seed, cand, cn, aa_micros, rank (rank <= per_seed).
     """
-    edges = _edges_staged(lineitem)
-    deg = edges.groupBy("a").agg(F.count("*").alias("deg"))
-    nbr = edges.join(
-        deg.filter(
-            (F.col("deg") <= df_cap) & (F.col("deg") >= 2)
-        ),
-        "a",
-    ).select(
-        F.col("a").alias("z"),
-        F.col("b").alias("n"),
-        F.floor(F.lit(RA_SCALE) / F.log(F.col("deg")))
-        .cast("bigint")
-        .alias("give"),
-    )
-    seed_side = nbr.filter(
-        F.col("n") % RA_SEED_MOD == 0
-    ).select("z", F.col("n").alias("seed"))
-    cand_side = nbr.select("z", F.col("n").alias("cand"), "give")
-    wedges = seed_side.join(cand_side, "z").filter(
-        F.col("seed") != F.col("cand")
-    )
-    scored = wedges.groupBy("seed", "cand").agg(
-        F.count("*").alias("cn"),
-        F.sum("give").alias("aa_micros"),
-    )
-    non_adj = scored.join(
-        edges,
-        (scored.seed == edges.a) & (scored.cand == edges.b),
-        "left_anti",
-    )
-    w = Window.partitionBy("seed").orderBy(
-        F.desc("aa_micros"), F.desc("cn"), F.asc("cand")
-    )
-    return (
-        non_adj.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= per_seed)
-        .select("seed", "cand", "cn", "aa_micros", "rank")
-    )
+    give = F.floor(F.lit(RA_SCALE) / F.log(F.col("deg"))).cast("bigint")
+    return _link_scores(lineitem, df_cap, per_seed, give, "aa_micros")
 
 
 def oracle_adamic_adar(

@@ -226,6 +226,22 @@ def test_pagerank_no_cartesian_and_bounded_shuffles(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
+def test_bfs_plan_joins_bounded_by_sssp(spark):
+    """BFS and SSSP run one Bellman-Ford kernel, which cuts the
+    node-grain distance table each round: BFS's optimized plan may
+    hold no more joins than SSSP's (one relax join), not one more
+    per round that re-inlines the whole distance chain."""
+    import re
+
+    def joins(name: str) -> int:
+        df = _QUERIES[name](spark, SF_ORACLE)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return len(re.findall(r"\bJoin\b", plan))
+
+    n_bfs, n_sssp = joins("graph_bfs"), joins("graph_sssp")
+    assert 1 <= n_bfs <= n_sssp, (n_bfs, n_sssp)
+
+
 def test_join_strategy_hints_are_honored(spark):
     """Join-strategy hints: the planner must honor explicit
     shuffle_hash and merge hints (the per-query override lever when

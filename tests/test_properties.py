@@ -1277,6 +1277,46 @@ def test_suppliers_waiting_null_suppkey_is_not_a_second_supplier(spark):
     assert got == want
 
 
+def test_grouped_map_slope_single_purchase_user(spark):
+    """A user with one purchase reaches the grouped-map UDF, where the
+    slope's denominator n*sxx - sx^2 is 0; the UDF must return no row
+    for any user with fewer than 3 purchases rather than raise. User 1
+    buys once, user 2 twice, users 3 and 4 three and four times (user
+    4 also clicks); the result hash-matches the DuckDB oracle."""
+    import datetime as dt
+
+    import duckdb
+
+    from big_data_instacart_market_basket_analysis_spark.functions import (
+        udafs,
+    )
+    from tests.oracle_harness import canon_rows
+
+    t0 = dt.datetime(2024, 1, 1)
+    buys = {1: [5.0], 2: [3.0, 4.5], 3: [1.0, 2.5, 2.0],
+            4: [9.99, 7.5, 8.25, 6.0]}
+    rows = [
+        (100 * u + i, t0 + dt.timedelta(hours=i), u, "purchase", v)
+        for u, vs in buys.items() for i, v in enumerate(vs)
+    ] + [(999, t0, 4, "click", None)]
+    schema = ("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
+              "event_type STRING, value DOUBLE")
+    df = udafs.grouped_map_slope(spark.createDataFrame(rows, schema))
+    got = canon_rows(df.columns, [tuple(r) for r in df.collect()])
+
+    con = duckdb.connect()
+    con.execute(f"CREATE TABLE events ({schema.replace('STRING', 'VARCHAR')})")
+    con.executemany("INSERT INTO events VALUES (?, ?, ?, ?, ?)", rows)
+    cur = con.execute(
+        "WITH " + udafs.ORACLE_GROUPED_MAP_SLOPE.strip()
+        + " SELECT * FROM grouped_map_slope"
+    )
+    want_rows = cur.fetchall()
+    want = canon_rows([d[0] for d in cur.description], want_rows)
+    assert sorted(r[0] for r in want_rows) == [3, 4]
+    assert got == want
+
+
 def test_approx_quantiles_within_rank_error(spark):
     """The approx_percentile sketch must land within the guaranteed
     rank error (n / accuracy) of the exact percentile — checked by
