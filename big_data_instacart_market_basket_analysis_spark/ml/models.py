@@ -9,7 +9,8 @@ through pandas (F.py:293). Here the whole path is DataFrame-native
 - M2 seeded ``randomSplit([0.7, 0.3])`` (F.py:214; seeded per SURVEY §5)
 - M3-M5 regressors with the reference's exact hyperparameters
 - M6 ``model.transform`` keeps label+features+prediction in one row,
-  eliminating the RDD ``zip`` re-join (J8, F.py:242-244)
+  eliminating the RDD ``zip`` re-join (J8, F.py:242-244); the three
+  holdout scorings chain into one pass and one aggregation
 - M7 MulticlassClassificationEvaluator on the 0.19-thresholded
   predictions (F.py:247-276)
 - M8 obsolete (no pandas re-attach needed)
@@ -17,7 +18,10 @@ through pandas (F.py:293). Here the whole path is DataFrame-native
 Distributed-scale notes: tree training in ``pyspark.ml`` aggregates
 split statistics per partition (no driver-side data pull); scoring is a
 broadcast of the model into executor-side codegen'd transforms. The only
-driver materialization anywhere is the final metrics row.
+driver materialization anywhere is the final metrics row. Every model
+query reads the candidate table ``candidates_staged`` persisted once per
+input; the assembled feature vectors are a projection over it, not a
+second cached copy.
 """
 
 from __future__ import annotations
@@ -90,19 +94,12 @@ def binarize(scored: DataFrame, score_col: str = "prediction") -> DataFrame:
 
 
 def _assembled(t: InstacartTables) -> DataFrame:
-    """Assembled candidate features, persisted once per
-    InstacartTables (instacart_tables stages t per session, so the
-    three per-model submission queries and train_metrics all share
-    ONE entry instead of leaking one per call)."""
-    from pyspark import StorageLevel
-
-    return _stage(
-        "assembled", t,
-        lambda: assemble(candidates_staged(t)).persist(
-            StorageLevel.MEMORY_AND_DISK
-        ),
-        checkpoint=False,
-    )
+    """Assembled candidate features: a projection over the staged,
+    persisted candidate table, so every model query reads that one
+    build. The VectorAssembler is row-local, so the result keeps the
+    candidate table's partitions (and with them ``randomSplit``'s
+    output) and needs no persisted copy of its own."""
+    return assemble(candidates_staged(t))
 
 
 def _weighted_prf(tp: int, fp: int, tn: int, fn: int) -> tuple[float, float, float]:
@@ -132,49 +129,62 @@ def train_metrics(t: InstacartTables) -> DataFrame:
     """M2+M7 (F.py:214-276): per-model precision/recall/F1 on the 30%
     holdout of the train candidates, scores thresholded at 0.19.
 
-    One scoring pass + one 4-count confusion-matrix aggregation per
-    model (round-1 version ran three evaluator jobs per model over an
-    uncached transform — 9 full passes). Returns one row per model —
-    the distributed replacement for the reference's printed
+    Each model is fitted with ``MODEL_BUILDERS[name]().fit``; then all
+    three score the holdout in ONE transform chain and ONE aggregation
+    of the 12 confusion counts (three per-model scoring jobs before,
+    three evaluator jobs per model in round 1). Returns one row per
+    model — the distributed replacement for the reference's printed
     "RF/GBT/DT summary on Train".
     """
     data = _assembled(t).filter(F.col("eval_set") == EVAL_TRAIN)
     train70, hold30 = data.randomSplit([0.7, 0.3], seed=SEED)
     train70 = train70.cache()
-    # r10: each of the three models transforms + aggregates hold30 —
-    # cache it too so the split sampling runs once, not three times
-    # (the split itself must NOT be repartitioned: randomSplit and the
-    # tree bootstraps are partition-seeded, results would change).
+    # r10: the split is cached as drawn, never repartitioned: randomSplit
+    # and the tree bootstraps are partition-seeded, results would change.
     hold30 = hold30.cache()
 
-    is1 = F.col("label") == 1.0
-    picked1 = F.col("picked") == 1.0
-
-    def _one(name_build: tuple) -> tuple:
-        name, build = name_build
-        model = build().fit(train70)
-        scored = binarize(model.transform(hold30))
-        cm = scored.agg(
-            F.count(F.when(is1 & picked1, 1)).alias("tp"),
-            F.count(F.when(~is1 & picked1, 1)).alias("fp"),
-            F.count(F.when(~is1 & ~picked1, 1)).alias("tn"),
-            F.count(F.when(is1 & ~picked1, 1)).alias("fn"),
-        ).first()
-        return (name, *_weighted_prf(cm["tp"], cm["fp"], cm["tn"],
-                                     cm["fn"]))
+    def _fit(name: str):
+        return MODEL_BUILDERS[name]().fit(train70)
 
     # the three fits are independent job chains — submit them from
     # threads so the scheduler interleaves their stages across the
     # executor pool instead of leaving it idle between iterations (the
     # driver loop is not the bottleneck; the per-iteration stage tail
-    # is). Results keep MODEL_BUILDERS order.
+    # is). The pool threads inherit the caller's job group and other
+    # local properties. Results keep MODEL_BUILDERS order.
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=len(MODEL_BUILDERS)) as pool:
-        rows = list(pool.map(_one, MODEL_BUILDERS.items()))
+    from pyspark.util import inheritable_thread_target
+
+    names = list(MODEL_BUILDERS)
+    with ThreadPoolExecutor(max_workers=len(names)) as pool:
+        models = list(pool.map(
+            inheritable_thread_target(t.orders.sparkSession)(_fit), names
+        ))
+
+    scored, cells = hold30, []
+    is1 = F.col("label") == 1.0
+    for name, model in zip(names, models):
+        scored = binarize(
+            model.setPredictionCol(f"score_{name}").transform(scored),
+            f"score_{name}",
+        ).withColumnRenamed("picked", f"picked_{name}")
+        picked1 = F.col(f"picked_{name}") == 1.0
+        cells += [
+            F.count(F.when(is1 & picked1, 1)).alias(f"tp_{name}"),
+            F.count(F.when(~is1 & picked1, 1)).alias(f"fp_{name}"),
+            F.count(F.when(~is1 & ~picked1, 1)).alias(f"tn_{name}"),
+            F.count(F.when(is1 & ~picked1, 1)).alias(f"fn_{name}"),
+        ]
+    cm = scored.agg(*cells).first()
     train70.unpersist()
     hold30.unpersist()
 
+    rows = [
+        (name, *_weighted_prf(cm[f"tp_{name}"], cm[f"fp_{name}"],
+                              cm[f"tn_{name}"], cm[f"fn_{name}"]))
+        for name in names
+    ]
     spark = t.orders.sparkSession
     return spark.createDataFrame(
         rows, "model string, precision double, recall double, f1 double"

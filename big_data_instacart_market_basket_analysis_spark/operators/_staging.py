@@ -1,26 +1,38 @@
 """The engine's one session-staging registry.
 
 Many operators reuse an intermediate (shingle sets, the co-purchase
-edge list, candidate tables, trained models, round-trip readers) across
-several consumers of the same input. ``stage`` builds each such
-artifact once per input and returns the same object to every later
-caller; nothing else in the package keeps a get-or-build cache.
+edge list, feature and candidate tables, trained models, round-trip
+readers) across several consumers of the same input. ``stage`` builds
+each such artifact once per input and returns the same object to every
+later caller; nothing else in the package keeps a get-or-build cache,
+and nothing else persists a DataFrame.
 
 - **Key.** ``(name, id(owner), *params)``: ``name`` names the artifact,
   ``owner`` is the object whose identity scopes it (the input
   DataFrame, the ``InstacartTables``, or the SparkSession for
   per-session handles and paths), ``params`` are the build parameters.
+  A SparkSession-owned artifact passes its input directory (``sf_dir``)
+  as the first param.
 - **Held owner.** The value is ``(owner, result)``. Holding the owner
   keeps it alive, so its ``id()`` cannot be recycled while the entry
   exists, and a lookup only hits if the held owner ``is`` the caller's.
-- **Eviction.** On a miss, entries of the same ``name`` whose owner is
-  older than the ``KEEP_OWNERS`` most recent owner generations (the
-  incoming one included, by first-touch order) are dropped; other
-  names are never touched, so the different inputs of one session
-  (documents, embeddings, lineitem, tables, the session itself) do not
-  evict each other. Two generations keep two inputs used in
-  alternation warm. Dropping the references releases a superseded
-  input's localCheckpoint blocks to Spark's ContextCleaner.
+- **Materialization.** ``checkpoint`` (the default) eagerly
+  localCheckpoints the built DataFrame; ``persist`` instead persists it
+  MEMORY_AND_DISK, lazily, so the first action that reads it fills the
+  cache and every later plan reads it as an ``InMemoryRelation``;
+  results that are not a single DataFrame (tuples, lists, paths,
+  tables) pass ``checkpoint=False`` and materialize inside ``build``.
+- **Eviction.** On a miss, entries of the same ``name`` older than the
+  ``KEEP_OWNERS`` most recent input generations (the incoming one
+  included, by first-touch order) are dropped. A generation is the
+  owner; for a SparkSession owner it is the owner and the ``sf_dir``,
+  so session-owned handles, views and tables are bounded per input
+  like the rest. Other names are never touched, so the different
+  inputs of one session (documents, embeddings, lineitem, tables) do
+  not evict each other. Two generations keep two inputs used in
+  alternation warm. A dropped persisted result is unpersisted; a
+  dropped localCheckpoint is released to Spark's ContextCleaner with
+  its last reference.
 - **Lock.** ``STAGING_LOCK`` serializes every lookup, eviction and
   build, so two threads (the plan-lint builders run in a pool) never
   both build one key. It is re-entrant because a build may stage a
@@ -37,7 +49,8 @@ from __future__ import annotations
 import threading
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, SparkSession
 
 
 def spread(df: DataFrame, *cols: str) -> DataFrame:
@@ -70,33 +83,47 @@ STAGING_LOCK = threading.RLock()
 
 
 def stage(name: str, owner, build: Callable[[], Any], *params,
-          checkpoint: bool = True):
+          checkpoint: bool = True, persist: bool = False):
     """Return the staged ``name`` artifact of ``owner`` for ``params``,
-    calling ``build`` on first touch. With ``checkpoint`` the built
-    DataFrame is eagerly localCheckpointed; results that are not a
-    single DataFrame (tuples, lists, paths, persisted frames)
-    materialize inside ``build`` and pass ``checkpoint=False``."""
+    calling ``build`` on first touch. With ``persist`` the built
+    DataFrame is persisted MEMORY_AND_DISK (and unpersisted when
+    evicted); otherwise, with ``checkpoint``, it is eagerly
+    localCheckpointed."""
     key = (name, id(owner), *params)
     with STAGING_LOCK:
         hit = _STAGED_CACHE.get(key)
         if hit is not None and hit[0] is owner:
             return hit[1]
-        _evict(name, owner)
+        _evict(name, _generation(key, owner))
         result = build()
-        if checkpoint:
+        if persist:
+            result = result.persist(StorageLevel.MEMORY_AND_DISK)
+        elif checkpoint:
             result = result.localCheckpoint(eager=True)
         _STAGED_CACHE[key] = (owner, result)
         return result
 
 
-def _evict(name: str, owner) -> None:
+def _generation(key: tuple, owner) -> tuple:
+    """The input generation of an entry: its owner, and for a session
+    owner also the ``sf_dir`` it was staged for. Every owner in the
+    store is held alive, so ``id()`` tells them apart."""
+    if isinstance(owner, SparkSession):
+        return (id(owner), *key[2:3])
+    return (id(owner),)
+
+
+def _evict(name: str, incoming: tuple) -> None:
     """Drop ``name`` entries of all but the newest ``KEEP_OWNERS - 1``
-    owners other than ``owner``."""
-    owners: list = []
+    generations other than ``incoming``, unpersisting persisted ones."""
+    gens: list = []
     for k, (o, _) in _STAGED_CACHE.items():
-        if k[0] == name and o is not owner and all(o is not p for p in owners):
-            owners.append(o)
-    stale = owners[: max(0, len(owners) - (KEEP_OWNERS - 1))]
+        g = _generation(k, o)
+        if k[0] == name and g != incoming and g not in gens:
+            gens.append(g)
+    stale = gens[: max(0, len(gens) - (KEEP_OWNERS - 1))]
     for k in [k for k, (o, _) in _STAGED_CACHE.items()
-              if k[0] == name and any(o is s for s in stale)]:
-        del _STAGED_CACHE[k]
+              if k[0] == name and _generation(k, o) in stale]:
+        result = _STAGED_CACHE.pop(k)[1]
+        if isinstance(result, DataFrame) and result.is_cached:
+            result.unpersist()

@@ -21,6 +21,11 @@ joins shuffle on (userID, productID) / productID with AQE skew handling.
 Candidate users without prior history are dropped (inner join) — the
 reference would KeyError on them (F.py:135); only-prior-history users
 generate candidates by construction.
+
+The three feature tables are the ones ``features`` stages per
+``InstacartTables``: once the feature queries have run on an input,
+this plan reads them as ``InMemoryRelation`` scans, so the only
+fact-table scan left in it is the one for the train labels.
 """
 
 from __future__ import annotations
@@ -218,13 +223,7 @@ def candidates_staged(t: InstacartTables) -> DataFrame:
     and consumed by the submission formatter, the SQL view, and three
     model scorers — re-deriving the explode join per consumer would
     repeat the widest shuffle in the whole pipeline."""
-    from pyspark import StorageLevel
-
-    return _stage(
-        "candidates", t,
-        lambda: candidates(t).persist(StorageLevel.MEMORY_AND_DISK),
-        checkpoint=False,
-    )
+    return _stage("candidates", t, lambda: candidates(t), persist=True)
 
 
 LIFT_BINS = 10

@@ -7,6 +7,17 @@ dimension-sized inputs are broadcast, fact-fact joins shuffle on their
 keys under AQE.
 
 Reference lineage is cited per function (F.py = the reference notebook).
+
+The reference computes its per-product, per-user and per-(user,
+product) feature frames once (F.py:69-118) and every later step reads
+them. Likewise ``product_features``, ``users_final`` and
+``user_product_features`` are staged once per ``InstacartTables``
+(``_staging.stage``, persisted MEMORY_AND_DISK): the feature queries,
+``candidates``, the submissions and the SQL views all read one build
+per input, as ``InMemoryRelation`` scans. Their sizes are product-,
+user- and user×product-grain (SCALE.md). ``prior_enriched`` and the
+fact table (``order_products``) stay uncached: they are fact-grain and
+each feature table reads them once.
 """
 
 from __future__ import annotations
@@ -16,9 +27,17 @@ from pyspark.sql import functions as F
 
 from ..functions.columns import safe_div
 from ..plans.instacart import InstacartTables
+from ._staging import stage as _stage
 
 
 def product_features(t: InstacartTables) -> DataFrame:
+    """A1-A3 + J2 (F.py:69-74), staged and persisted once per ``t``."""
+    return _stage(
+        "product_features", t, lambda: _product_features(t), persist=True
+    )
+
+
+def _product_features(t: InstacartTables) -> DataFrame:
     """A1-A3 + J2 (F.py:69-74): per-product order/reorder stats ⋈ dim.
 
     One hash-agg pass over prior order_products, then a broadcast join to
@@ -134,6 +153,11 @@ user_prior_features AS (
 
 
 def users_final(t: InstacartTables) -> DataFrame:
+    """J4 + A9 (F.py:105-106), staged and persisted once per ``t``."""
+    return _stage("users_final", t, lambda: _users_final(t), persist=True)
+
+
+def _users_final(t: InstacartTables) -> DataFrame:
     """J4 + A9 (F.py:105-106): user features assembled.
 
     Left join from the prior-derived side (pandas ``.join`` default) +
@@ -162,6 +186,15 @@ users_final AS (
 
 
 def user_product_features(t: InstacartTables) -> DataFrame:
+    """A10-A11 + J10 (F.py:111-118), staged and persisted once per
+    ``t``."""
+    return _stage(
+        "user_product_features", t, lambda: _user_product_features(t),
+        persist=True,
+    )
+
+
+def _user_product_features(t: InstacartTables) -> DataFrame:
     """A10-A11 + J10 (F.py:111-118): per-(user,product) aggregates.
 
     The reference fakes the composite key as ``userID*100000+productID``

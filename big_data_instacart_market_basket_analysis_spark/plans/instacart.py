@@ -149,9 +149,11 @@ def instacart_tables(
     standard "stage the enriched dim" call a 100 TB deployment would
     make (or materialize to parquet in an ETL step — same idea, this is
     the in-session form). The fact table (order_products) is never
-    cached. With ``persist`` the tables are staged per (session,
-    sf_dir), so every query in a session shares ONE persisted orders
-    view instead of stacking duplicate cache entries.
+    cached. With ``persist`` the tables and the persisted orders view
+    are staged per (session, sf_dir), so every query in a session
+    shares ONE persisted orders view instead of stacking duplicate
+    cache entries, and an input's view is unpersisted once it falls out
+    of the registry's input generations.
     """
     if persist:
         return _stage(
@@ -165,13 +167,14 @@ def instacart_tables(
 def _build_tables(
     spark: SparkSession, sf_dir: str, persist: bool
 ) -> InstacartTables:
-    orders = _orders_view(load_table(spark, sf_dir, "orders"))
-    if persist:
-        from pyspark import StorageLevel
+    def orders() -> DataFrame:
+        return _orders_view(load_table(spark, sf_dir, "orders"))
 
-        orders = orders.persist(StorageLevel.MEMORY_AND_DISK)
     return InstacartTables(
-        orders=orders,
+        orders=(
+            _stage("orders_view", spark, orders, sf_dir, persist=True)
+            if persist else orders()
+        ),
         order_products=_order_products_view(
             load_table(spark, sf_dir, "lineitem")
         ),

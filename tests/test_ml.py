@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from big_data_instacart_market_basket_analysis_spark.ml import models as ml
 from big_data_instacart_market_basket_analysis_spark.plans.instacart import (
+    EVAL_TRAIN,
     instacart_tables,
 )
 from tests.conftest import SF_SMOKE
@@ -22,6 +23,69 @@ def test_train_metrics(spark):
     for r in rows.values():
         for m in ("precision", "recall", "f1"):
             assert 0.0 <= r[m] <= 1.0, (r["model"], m, r[m])
+
+
+def test_train_metrics_equal_per_model_reference(spark, monkeypatch):
+    """The one scoring pass gives the rows of the per-model path: each
+    ``MODEL_BUILDERS`` model fitted on the same split, its holdout
+    scores binarized and counted on their own. The fits still go
+    through ``MODEL_BUILDERS[name]().fit``."""
+    t = instacart_tables(spark, SF_SMOKE)
+    fitted = []
+
+    def recording(name, build):
+        def make():
+            est = build()
+            fit = est.fit
+            est.fit = lambda *a, **k: fitted.append(name) or fit(*a, **k)
+            return est
+        return make
+
+    builders = dict(ml.MODEL_BUILDERS)
+    for name, build in builders.items():
+        monkeypatch.setitem(ml.MODEL_BUILDERS, name, recording(name, build))
+    got = [tuple(r) for r in ml.train_metrics(t).collect()]
+    assert sorted(fitted) == sorted(builders)
+
+    data = ml._assembled(t).filter(F.col("eval_set") == EVAL_TRAIN)
+    train70, hold30 = data.randomSplit([0.7, 0.3], seed=ml.SEED)
+    is1, picked1 = F.col("label") == 1.0, F.col("picked") == 1.0
+    want = []
+    for name, build in builders.items():
+        scored = ml.binarize(build().fit(train70).transform(hold30))
+        cm = scored.agg(
+            F.count(F.when(is1 & picked1, 1)),
+            F.count(F.when(~is1 & picked1, 1)),
+            F.count(F.when(~is1 & ~picked1, 1)),
+            F.count(F.when(is1 & ~picked1, 1)),
+        ).first()
+        want.append((name, *ml._weighted_prf(*cm)))
+    assert got == want
+
+
+def test_train_metrics_jobs_carry_callers_job_group(spark):
+    """The fits run on pool threads; every job the query starts, theirs
+    included, carries the job group the caller set."""
+    sc = spark.sparkContext
+    t = instacart_tables(spark, SF_SMOKE)
+
+    def marker(group: str) -> int:
+        sc.setJobGroup(group, group)
+        spark.range(1).collect()
+        return max(sc.statusTracker().getJobIdsForGroup(group))
+
+    try:
+        lo = marker("tm-before")
+        sc.setJobGroup("tm-query", "train_metrics")
+        ml.train_metrics(t).collect()
+        hi = marker("tm-after")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    started = set(range(lo + 1, hi)) - set(sc.statusTracker().getJobIdsForGroup("tm-after"))
+    in_group = set(sc.statusTracker().getJobIdsForGroup("tm-query"))
+    assert len(started) > 3
+    assert started == in_group
 
 
 def test_rf_submission_covers_all_test_orders(spark):

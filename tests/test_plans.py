@@ -10,7 +10,10 @@ UDFs), and AQE must be active to re-plan shuffles at runtime.
 from __future__ import annotations
 
 import io
+import shutil
 from contextlib import redirect_stdout
+
+from pyspark.sql import DataFrame
 
 import __spark_entry__ as entrymod
 from tests.conftest import SF_ORACLE
@@ -90,8 +93,16 @@ def test_aqe_and_partial_aggregation(spark):
     assert "AdaptiveSparkPlan" in plan
     assert "partial_max_by" in plan
     assert "partial_count" in plan
-    # exactly one shuffle lands on the (userID, productID) agg key
-    assert plan.count("Arguments: hashpartitioning(userID") == 1, plan
+    # exactly one shuffle lands on the (userID, productID) agg key. The
+    # table is staged (persisted): once materialized, the explain text
+    # renders its cached plan twice (AQE's final and initial plan), so
+    # the exchanges are counted on the plan that runs.
+    keys = [
+        x.outputPartitioning().toString()
+        for x in _nodes(_QUERIES["user_product_features"](spark, SF_ORACLE),
+                        "ShuffleExchangeExec", into_cache=True)
+    ]
+    assert sum(k.startswith("hashpartitioning(userID") for k in keys) == 1, keys
 
 
 def test_salted_agg_two_stage(spark):
@@ -885,3 +896,62 @@ def test_fold_state_is_materialized_per_batch(spark):
     assert materialized(got)
     assert sorted(tuple(r) for r in got.collect()) == outs[-1]
     assert sum(r["n"] for r in got.collect()) == 40
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _nodes(plan, kind: str, into_cache: bool = False) -> list:
+    """The ``kind`` nodes of a DataFrame's executed JVM plan (or of a
+    JVM plan node), read through AQE's wrappers (the current plan of
+    each); with ``into_cache`` also those of the plans that built the
+    cached tables it scans."""
+    if isinstance(plan, DataFrame):
+        plan = plan._jdf.queryExecution().executedPlan()
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        inner = [plan.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        inner = [plan.plan()]
+    elif name == "InMemoryTableScanExec":
+        inner = [plan.relation().cacheBuilder().cachedPlan()] if into_cache else []
+    else:
+        inner = _seq(plan.children())
+    return [plan] * (name == kind) + [
+        n for k in inner for n in _nodes(k, kind, into_cache)
+    ]
+
+
+def test_candidates_reads_staged_feature_tables(spark, tmp_path):
+    """Once the three feature queries have run on an input, the
+    candidate plan reads their staged tables as in-memory relations and
+    scans the fact table only for the train labels (before: once more
+    per feature table)."""
+    from big_data_instacart_market_basket_analysis_spark.operators import (
+        candidates as cand,
+        features as feat,
+    )
+    from big_data_instacart_market_basket_analysis_spark.plans.instacart import (
+        instacart_tables,
+    )
+
+    sf_dir = str(tmp_path / "input")
+    shutil.copytree(SF_ORACLE, sf_dir)
+    features = ("product_features", "users_final", "user_product_features")
+    for name in features:
+        assert _QUERIES[name](spark, sf_dir).count() > 0
+    t = instacart_tables(spark, sf_dir)
+    files = [
+        _seq(x.relation().location().rootPaths())[0].getName()
+        for x in _nodes(cand.candidates(t), "FileSourceScanExec")
+    ]
+    assert files.count("lineitem.parquet") == 1, files
+    def cached(plan) -> list:
+        return [x.relation().cacheBuilder()
+                for x in _nodes(plan, "InMemoryTableScanExec")]
+
+    in_candidates = cached(cand.candidates(t))
+    for name in features:
+        [table] = cached(getattr(feat, name)(t))
+        assert table in in_candidates, name

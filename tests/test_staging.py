@@ -5,7 +5,12 @@
 - threads: concurrent callers build each key exactly once, and owner
   generations stay bounded per artifact name.
 - structure: ``_staging._STAGED_CACHE`` is the engine's only
-  module-level ``_*_CACHE`` dict and the only user of ``STAGING_LOCK``.
+  module-level ``_*_CACHE`` dict and the only user of ``STAGING_LOCK``,
+  and ``_staging`` is the only module that persists a DataFrame.
+- eviction: an evicted persisted artifact is unpersisted, and
+  session-owned artifacts are bounded per input directory, so a session
+  that runs the pipeline on many inputs holds at most ``KEEP_OWNERS``
+  inputs' worth of cached tables.
 """
 
 from __future__ import annotations
@@ -23,6 +28,9 @@ from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
+from pyspark import StorageLevel
+
+import __spark_entry__ as entrymod
 import big_data_instacart_market_basket_analysis_spark as pkg
 from big_data_instacart_market_basket_analysis_spark.operators import _staging
 from big_data_instacart_market_basket_analysis_spark.sources.loaders import (
@@ -30,6 +38,8 @@ from big_data_instacart_market_basket_analysis_spark.sources.loaders import (
 )
 
 from tests.conftest import SF_SMOKE
+
+ROOT = Path(__file__).resolve().parents[1]
 
 
 class _Owner:
@@ -129,11 +139,101 @@ def test_one_staging_registry():
                 lock_users.append(f"{mod.__name__}.{attr}")
     assert caches == [f"{_staging.__name__}._STAGED_CACHE"]
     assert lock_users == []
-    sources = list(Path(pkg.__path__[0]).rglob("*.py"))
-    sources.append(Path(pkg.__path__[0]).parent / "__spark_entry__.py")
     assert [
-        str(p) for p in sources
+        str(p) for p in _package_sources()
         if p.name != "_staging.py" and "STAGING_LOCK" in p.read_text()
     ] == []
     params = inspect.signature(_staging.stage).parameters
     assert "cache" not in params and "keep_owners" not in params
+
+
+def _package_sources() -> list[Path]:
+    sources = list(Path(pkg.__path__[0]).rglob("*.py"))
+    sources.append(Path(pkg.__path__[0]).parent / "__spark_entry__.py")
+    return sources
+
+
+def test_only_staging_persists():
+    """Every persisted DataFrame is a staged one, so eviction can
+    unpersist it; the one other cache is ``train_metrics``' transient
+    split, cached and unpersisted inside the call."""
+    persisting = [p.name for p in _package_sources() if ".persist(" in p.read_text()]
+    assert persisting == ["_staging.py"]
+    caching = {
+        p.name: p.read_text().count(".cache()") for p in _package_sources()
+        if ".cache()" in p.read_text()
+    }
+    assert caching == {"models.py": 2}
+
+
+def test_evicted_persisted_artifact_is_unpersisted(spark, monkeypatch):
+    monkeypatch.setattr(_staging, "_STAGED_CACHE", {})
+    owners = [_Owner() for _ in range(3)]
+    # distinct plans: the cache manager shares one entry between equal
+    # plans, so equal ones would hide which entry was released
+    staged = [
+        _staging.stage("art", o, lambda i=i: spark.range(100 + i), persist=True)
+        for i, o in enumerate(owners)
+    ]
+    assert [df.count() for df in staged] == [100, 101, 102]
+    assert staged[0].storageLevel == StorageLevel.NONE
+    assert [df.storageLevel for df in staged[1:]] == [StorageLevel.MEMORY_AND_DISK] * 2
+    for df in staged[1:]:
+        df.unpersist()
+
+
+def test_session_artifacts_bounded_by_input(spark, monkeypatch):
+    """A SparkSession-owned artifact's generation is its ``sf_dir``: the
+    third input evicts the first input's entries of that name, all of
+    them, and keeps the second's."""
+    monkeypatch.setattr(_staging, "_STAGED_CACHE", {})
+    for sf_dir in ("in1", "in2", "in3"):
+        for table in ("orders", "part"):
+            _staging.stage("h", spark, lambda: (sf_dir, table), sf_dir, table,
+                           checkpoint=False)
+    assert sorted(k[2:] for k in _staging._STAGED_CACHE) == [
+        ("in2", "orders"), ("in2", "part"), ("in3", "orders"), ("in3", "part"),
+    ]
+
+
+_PIPELINE = ("ingest_orders", "product_features", "users_final",
+             "user_product_features", "candidates")
+
+
+def test_pipeline_on_many_inputs_keeps_cache_bounded(spark, monkeypatch, tmp_path):
+    """Four generated inputs through the pipeline's staged tables in one
+    session: cached RDDs and staged entries stay at ``KEEP_OWNERS``
+    inputs' worth instead of growing with every input."""
+    sys.path.insert(0, str(ROOT / "perfbench"))
+    import gen
+
+    monkeypatch.setattr(_staging, "_STAGED_CACHE", {})
+    shape = gen.Shape(customers=30, orders_per_customer=5, parts=40,
+                      suppliers=5, events=50, event_users=10, documents=10,
+                      dup_rate=0.1, embeddings=10)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    queries = entrymod.queries()
+
+    def cached_rdds() -> int:
+        return len(set(jsc.getPersistentRDDs().keySet()) - before)
+
+    def entries(name: str) -> int:
+        return sum(k[0] == name for k in _staging._STAGED_CACHE)
+
+    try:
+        for i in range(4):
+            sf_dir = str(tmp_path / f"in{i}")
+            gen.generate(sf_dir, 100 + i, shape)
+            for q in _PIPELINE:
+                assert queries[q](spark, sf_dir).count() > 0, q
+            if i == 0:
+                per_input = (cached_rdds(), entries("table_handle"))
+        assert per_input[0] > 0
+        assert cached_rdds() <= _staging.KEEP_OWNERS * per_input[0]
+        assert entries("instacart_tables") == _staging.KEEP_OWNERS
+        assert entries("table_handle") == _staging.KEEP_OWNERS * per_input[1]
+    finally:
+        for _, result in _staging._STAGED_CACHE.values():
+            if hasattr(result, "is_cached") and result.is_cached:
+                result.unpersist()
