@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ._staging import stage as _stage
-from .dedup import MAX_CC_ROUNDS, _large_star, _small_star
+from .dedup import _star_fixpoint
 
 #: epsilon in quantized coordinate units (euclidean, squared test) and
 #: the weighted min-points core threshold (closed neighborhood).
@@ -176,25 +176,9 @@ def _core_labels(events: DataFrame) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    edges = core_edges
-    converged = False
-    for _ in range(MAX_CC_ROUNDS):
-        new_edges = _small_star(_large_star(edges)).localCheckpoint(
-            eager=True
-        )
-        changed = (
-            1
-            if new_edges.count() != edges.count()
-            else new_edges.join(edges, ["src", "dst"], "leftanti").count()
-        )
-        edges = new_edges
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"dbscan_clusters CC did not converge in {MAX_CC_ROUNDS} rounds"
-        )
+    edges = _star_fixpoint(
+        core_edges, "dbscan_clusters CC did not converge in {rounds} rounds"
+    )
     linked = edges.groupBy(F.col("src").alias("key")).agg(
         F.min("dst").alias("cluster_id")
     )

@@ -617,6 +617,32 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
+def _star_fixpoint(edges: DataFrame, error: str) -> DataFrame:
+    """Alternate large-star/small-star rounds over ``edges`` (src, dst;
+    a distinct, checkpointed set) until the edge set stops changing and
+    return the fixpoint: min-rooted stars (v, root). Each round is cut
+    eagerly (see `connected_clusters`). Raises ``RuntimeError(error)``,
+    with ``{rounds}`` filled in, if ``MAX_CC_ROUNDS`` rounds pass first."""
+    for _ in range(MAX_CC_ROUNDS):
+        new_edges = _small_star(_large_star(edges)).localCheckpoint(
+            eager=True
+        )
+        # both sides are distinct sets, so set equality reduces to
+        # |new| == |old| AND new \ old == {} — one anti-join, not two
+        # exceptAll passes (counts on checkpointed data are near-free).
+        changed = (
+            1
+            if new_edges.count() != edges.count()
+            else new_edges.join(edges, ["src", "dst"], "leftanti").count()
+        )
+        # drop the superseded generation's reference -> context cleaner
+        # frees its checkpoint blocks.
+        edges = new_edges
+        if changed == 0:
+            return edges
+    raise RuntimeError(error.format(rounds=MAX_CC_ROUNDS))
+
+
 def connected_clusters(
     docs: DataFrame, pairs: DataFrame | None = None
 ) -> DataFrame:
@@ -675,31 +701,11 @@ def connected_clusters(
         .localCheckpoint(eager=True)
     )
 
-    converged = False
-    for _ in range(MAX_CC_ROUNDS):
-        new_edges = _small_star(_large_star(edges)).localCheckpoint(
-            eager=True
-        )
-        # both sides are distinct sets, so set equality reduces to
-        # |new| == |old| AND new \ old == {} — one anti-join, not two
-        # exceptAll passes (counts on checkpointed data are near-free).
-        changed = (
-            1
-            if new_edges.count() != edges.count()
-            else new_edges.join(edges, ["src", "dst"], "leftanti").count()
-        )
-        # drop the superseded generation's reference -> context cleaner
-        # frees its checkpoint blocks.
-        edges = new_edges
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_clusters did not converge in {MAX_CC_ROUNDS} "
-            "rounds — component structure exceeds the bound; raise "
-            "MAX_CC_ROUNDS"
-        )
+    edges = _star_fixpoint(
+        edges,
+        "connected_clusters did not converge in {rounds} rounds — "
+        "component structure exceeds the bound; raise MAX_CC_ROUNDS",
+    )
     # fixpoint edges form min-rooted stars: (v, root). groupBy-min is a
     # no-op safeguard for the (impossible at fixpoint) duplicate child.
     child_labels = edges.groupBy(F.col("src").alias("doc_id")).agg(

@@ -644,6 +644,37 @@ def _count_global_windows(plan_text: str) -> int:
     return hits
 
 
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _plan_nodes(plan, kind: str, into_cache: bool = False) -> list:
+    """The ``kind`` nodes (JVM simple class name) of a DataFrame's
+    executed plan (or of a JVM plan node), read through AQE's wrappers
+    (the current plan of each). A cached table's scan is a leaf: the
+    plan that built the table is only walked with ``into_cache``. Unlike
+    the executed plan's text, which also renders every scanned cached
+    table's plan (twice once it is materialized: AQE's final and initial
+    plans), this sees only the operators the query itself runs."""
+    if isinstance(plan, DataFrame):
+        plan = plan._jdf.queryExecution().executedPlan()
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        inner = [plan.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        inner = [plan.plan()]
+    elif name == "InMemoryTableScanExec":
+        inner = (
+            [plan.relation().cacheBuilder().cachedPlan()] if into_cache
+            else []
+        )
+    else:
+        inner = _seq(plan.children())
+    return [plan] * (name == kind) + [
+        n for k in inner for n in _plan_nodes(k, kind, into_cache)
+    ]
+
+
 def plan_lint(df: DataFrame, plan_name: str = "plan") -> list[dict]:
     """Lint one DataFrame's PHYSICAL plan for scale anti-patterns.
 
@@ -654,7 +685,8 @@ def plan_lint(df: DataFrame, plan_name: str = "plan") -> list[dict]:
     actually run), so optimizer rescues (e.g. a filter that turns a
     cross join back into an equi-join) are correctly NOT flagged.
     """
-    text = df._jdf.queryExecution().executedPlan().toString()
+    plan = df._jdf.queryExecution().executedPlan()
+    text = plan.toString()
     findings = []
     for rule, severity, marker, advice in PLAN_LINT_RULES:
         n = text.count(marker)
@@ -683,10 +715,14 @@ def plan_lint(df: DataFrame, plan_name: str = "plan") -> list[dict]:
                 " row_number + broadcast prefix offsets)",
             }
         )
-    # informational: shuffle count (not a defect, but the number a
-    # reviewer asks first; ReusedExchange is free and excluded)
-    n_shuffles = text.count("Exchange hashpartitioning") + text.count(
-        "Exchange rangepartitioning"
+    # informational: shuffle count (not a defect, but the first number
+    # asked of a plan; ReusedExchange is free and excluded). Counted on
+    # the plan tree, not the text: the text also renders the plans that
+    # built the cached tables the query scans.
+    n_shuffles = sum(
+        x.outputPartitioning().getClass().getSimpleName()
+        in ("HashPartitioning", "RangePartitioning")
+        for x in _plan_nodes(plan, "ShuffleExchangeExec")
     )
     findings.append(
         {

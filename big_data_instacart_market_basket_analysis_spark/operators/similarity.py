@@ -1,21 +1,29 @@
 """[EXT] Similarity search over the ``embeddings`` table
 (array<float> 64-dim vectors; SURVEY.md §7 phase 6).
 
-Two paths:
+Every neighbour search here is one pipeline — candidate generation,
+then scoring, then a per-query top-k — and the pipeline is one
+function, ``_topk``: a small query set is broadcast against the corpus,
+self-pairs are dropped, and a ranking window keeps each query's k best
+(score, neighbor_id) rows. Scale: the corpus-side scan is
+embarrassingly parallel; the only shuffle is the final per-query top-k.
+What varies is plugged in:
 
-- brute-force cosine top-k: the exactness baseline. Query vectors are a
-  small set broadcast against the corpus; cosine is computed in double
-  precision with sequential fold (zip_with + aggregate) so the DuckDB
-  oracle can reproduce the float ops. Per-query top-k via ranking
-  window. Scale: corpus-side scan is embarrassingly parallel; the only
-  shuffle is the final per-query top-k (k rows per partition per query
-  survive the partial TakeOrdered).
-- LSH-bucketed ANN: deterministic random-projection hyperplanes built
-  from integer arithmetic (exactly representable in doubles, so Spark
-  and DuckDB agree bit-for-bit on signs). Vectors sharing a bucket are
-  the candidate set; exact cosine re-ranks within the bucket. At 100 TB
-  the bucket id becomes the shuffle/partition key and each query probes
-  one bucket instead of the corpus.
+- candidate generators: all pairs (brute force, the exactness
+  baseline); an LSH bucket (deterministic random-projection hyperplanes
+  from integer arithmetic, exactly representable in doubles, so Spark
+  and DuckDB agree bit-for-bit on signs); an IVF cell (the query's
+  ``nprobe`` nearest centroids' inverted lists). At 100 TB the bucket
+  or cell id becomes the partition key and a query probes it instead of
+  the corpus.
+- scorers: exact cosine (double precision, sequential zip_with +
+  aggregate fold so the DuckDB oracle reproduces the float ops; norms
+  folded once per vector, ``_cosine_topk``); int8-quantized cosine
+  (exact integer sums); Hamming distance over 1-bit signatures (ranked
+  ascending); cosine in a random-projected or truncated space.
+
+Every approximate index is graded by one harness, ``_recall``: recall@k
+per query against the session-staged brute-force truth.
 
 Oracle-checked outputs expose (query, neighbor, rank) — ranks are
 stable across engines because the ordering key (cosine, id tiebreak) is
@@ -89,6 +97,78 @@ def _brute_topk_staged(
     )
 
 
+def _topk(queries: DataFrame, corpus: DataFrame, score: str,
+          expr: F.Column, k: int, on: str | None = None,
+          ascending: bool = False) -> DataFrame:
+    """The one per-query neighbour ranking: the small ``queries`` side
+    (query_id, ...) is broadcast against ``corpus`` (neighbor_id, ...),
+    over every pair or only the pairs sharing the ``on`` key (an LSH
+    bucket, an IVF cell). Self-pairs are dropped, ``expr`` is added as
+    column ``score``, and each query keeps its ``k`` best rows by
+    (score, neighbor_id) — descending for similarities, ascending for
+    distances — numbered in ``rank``.
+
+    Output: query_id, neighbor_id, rank, <score>.
+    """
+    q = F.broadcast(queries)
+    self_pair = F.col("query_id") != F.col("neighbor_id")
+    pairs = q.join(corpus, self_pair) if on is None else (
+        q.join(corpus, on).filter(self_pair)
+    )
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    return (
+        pairs.withColumn(score, expr)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", score)
+    )
+
+
+def _cosine_topk(vecs: DataFrame, n_queries: int, k: int,
+                 on: str | None = None) -> DataFrame:
+    """Exact cosine `_topk` over ``vecs`` (vec_id, v[, on]): the first
+    ``n_queries`` vec_ids against all of them, each norm folded once
+    per vector (see `_norm`). Output: query_id, neighbor_id, rank,
+    cosine."""
+    keys = [] if on is None else [on]
+    queries = vecs.filter(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"), F.col("v").alias("qv"), *keys
+    ).withColumn("qn", _norm("qv"))
+    corpus = vecs.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"), *keys
+    ).withColumn("cn", _norm("cv"))
+    return _topk(queries, corpus, "cosine",
+                 _cosine_pre("qv", "cv", "qn", "cn"), k, on)
+
+
+def _recall(emb: DataFrame, approx: DataFrame) -> DataFrame:
+    """The one recall@k harness: per query, ``n_hits`` = |approx ∩
+    staged brute-force truth| (a left-semi join on (query_id,
+    neighbor_id)) and ``recall_at_k`` = n_hits / TOP_K. A query with no
+    hit keeps a row with 0 (left join from the truth's query set).
+
+    Output: query_id, n_hits, recall_at_k.
+    """
+    truth = _brute_topk_staged(emb).select("query_id", "neighbor_id")
+    hits = (
+        approx.select("query_id", "neighbor_id")
+        .join(truth, ["query_id", "neighbor_id"], "leftsemi")
+        .groupBy("query_id")
+        .agg(F.count("*").alias("n_hits"))
+    )
+    n_hits = F.coalesce("n_hits", F.lit(0))
+    return (
+        truth.select("query_id").distinct()
+        .join(hits, "query_id", "left")
+        .select(
+            "query_id",
+            n_hits.alias("n_hits"),
+            F.round(n_hits / F.lit(TOP_K), 4).alias("recall_at_k"),
+        )
+    )
+
+
 def brute_force_topk(
     emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K
 ) -> DataFrame:
@@ -97,26 +177,8 @@ def brute_force_topk(
     Output: query_id, neighbor_id, rank, cosine. Self-matches excluded;
     ties broken by neighbor_id.
     """
-    queries = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), _as_double("embedding").alias("qv")
-    ).withColumn("qn", _norm("qv"))
-    corpus = emb.select(
-        F.col("vec_id").alias("neighbor_id"),
-        _as_double("embedding").alias("cv"),
-    ).withColumn("cn", _norm("cv"))
-    scored = (
-        F.broadcast(queries)
-        .join(corpus, F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _cosine_pre("qv", "cv", "qn", "cn"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    vecs = emb.select("vec_id", _as_double("embedding").alias("v"))
+    return _cosine_topk(vecs, n_queries, k)
 
 
 ORACLE_BRUTE_FORCE_TOPK = f"""
@@ -222,39 +284,10 @@ def lsh_ann_topk(emb: DataFrame, n_queries: int = N_QUERIES,
     """ANN top-k: exact cosine re-rank restricted to the query's LSH
     bucket. Output: query_id, neighbor_id, rank (approximate recall vs
     brute force; same-bucket candidates only)."""
-    with_bucket = _with_bucket_and_norm(emb)
-    queries = with_bucket.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("vnorm").alias("qnorm"),
-        "bucket",
-    )
-    scored = (
-        F.broadcast(queries)
-        .join(
-            with_bucket.select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("v").alias("cv"),
-                F.col("vnorm").alias("cnorm"),
-                "bucket",
-            ),
-            "bucket",
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.expr(_DOT.format(a="qv", b="cv"))
-            / (F.col("qnorm") * F.col("cnorm")),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    vecs = emb.select(
+        "vec_id", _as_double("embedding").alias("v")
+    ).withColumn("bucket", lsh_bucket_col("v"))
+    return _cosine_topk(vecs, n_queries, k, on="bucket").drop("cosine")
 
 
 def _oracle_bucket_sql(vec: str) -> str:
@@ -386,26 +419,13 @@ def ivf_ann_topk(emb: DataFrame, n_queries: int = N_QUERIES,
         vecs.filter(F.col("vec_id") < n_queries), cents, nprobe
     ).select(F.col("vec_id").alias("query_id"),
              F.col("v").alias("qv"), "centroid_id")
-    probes = probes.withColumn("qn", _norm("qv"))
-    scored = (
-        F.broadcast(probes)
-        .join(
-            lists.select(F.col("vec_id").alias("neighbor_id"),
-                         F.col("v").alias("cv"), "centroid_id")
-            .withColumn("cn", _norm("cv")),
-            "centroid_id",
-        )
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _cosine_pre("qv", "cv", "qn", "cn"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    corpus = lists.select(F.col("vec_id").alias("neighbor_id"),
+                          F.col("v").alias("cv"), "centroid_id")
+    return _topk(
+        probes.withColumn("qn", _norm("qv")),
+        corpus.withColumn("cn", _norm("cv")),
+        "cosine", _cosine_pre("qv", "cv", "qn", "cn"), k, on="centroid_id",
+    ).drop("cosine")
 
 
 _ORACLE_COS = (
@@ -695,26 +715,13 @@ def quantized_topk(
     corpus = quant.select(
         F.col("vec_id").alias("neighbor_id"), F.col("q").alias("qb")
     )
-    scored = (
-        F.broadcast(queries)
-        .join(corpus, F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "approx_cosine",
-            F.expr(idot.format(a="qa", b="qb"))
-            / (
-                F.sqrt(F.expr(idot.format(a="qa", b="qa")))
-                * F.sqrt(F.expr(idot.format(a="qb", b="qb")))
-            ),
-        )
+    approx_cosine = F.expr(idot.format(a="qa", b="qb")) / (
+        F.sqrt(F.expr(idot.format(a="qa", b="qa")))
+        * F.sqrt(F.expr(idot.format(a="qb", b="qb")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _topk(
+        queries, corpus, "approx_cosine", approx_cosine, k
+    ).drop("approx_cosine")
 
 
 ORACLE_QUANTIZED_TOPK = f"""
@@ -1185,24 +1192,7 @@ def ann_recall_eval(emb: DataFrame) -> DataFrame:
     independently oracle-checked queries, so this composition is
     fully replayable in SQL.
     """
-    truth = _brute_topk_staged(emb).select("query_id", "neighbor_id")
-    approx = ivf_ann_topk(emb).select("query_id", "neighbor_id")
-    hits = approx.join(truth, ["query_id", "neighbor_id"], "leftsemi")
-    per_query = hits.groupBy("query_id").agg(
-        F.count("*").alias("n_hits")
-    )
-    # queries with zero hits keep a row (left join vs the query set)
-    all_queries = truth.select("query_id").distinct()
-    return (
-        all_queries.join(per_query, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            F.round(
-                F.coalesce("n_hits", F.lit(0)) / F.lit(TOP_K), 4
-            ).alias("recall_at_k"),
-        )
-    )
+    return _recall(emb, ivf_ann_topk(emb))
 
 
 ORACLE_ANN_RECALL = f"""
@@ -1301,26 +1291,10 @@ def rp_topk(
     candidate pass a JL-compressed index answers. Same plan shape as
     ``brute_force_topk`` (broadcast queries, per-query rank window),
     but every dot product folds 16 elements instead of 64."""
-    proj = random_projection(emb)
-    queries = proj.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("proj").alias("qv")
-    ).withColumn("qn", _norm("qv"))
-    corpus = proj.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("proj").alias("cv")
-    ).withColumn("cn", _norm("cv"))
-    scored = (
-        F.broadcast(queries)
-        .join(corpus, F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", _cosine_pre("qv", "cv", "qn", "cn"))
+    vecs = random_projection(emb).select(
+        "vec_id", F.col("proj").alias("v")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _cosine_topk(vecs, n_queries, k).drop("cosine")
 
 
 def rp_ann_recall(emb: DataFrame) -> DataFrame:
@@ -1336,23 +1310,7 @@ def rp_ann_recall(emb: DataFrame) -> DataFrame:
     a pipeline gate the optimization on its own data instead of
     assuming. Composition is the same replayable left-semi hit count
     as ``ann_recall_eval``."""
-    truth = _brute_topk_staged(emb).select("query_id", "neighbor_id")
-    approx = rp_topk(emb).select("query_id", "neighbor_id")
-    hits = approx.join(truth, ["query_id", "neighbor_id"], "leftsemi")
-    per_query = hits.groupBy("query_id").agg(
-        F.count("*").alias("n_hits")
-    )
-    all_queries = truth.select("query_id").distinct()
-    return (
-        all_queries.join(per_query, "query_id", "left")
-        .select(
-            "query_id",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            F.round(
-                F.coalesce("n_hits", F.lit(0)) / F.lit(TOP_K), 4
-            ).alias("recall_at_k"),
-        )
-    )
+    return _recall(emb, rp_topk(emb))
 
 
 ORACLE_RP_RECALL = f"""
@@ -1982,18 +1940,7 @@ def pq_ann_topk(
 def pq_ann_recall(emb: DataFrame) -> DataFrame:
     """Recall@k of the PQ index vs exact brute-force truth — same
     harness as ``ann_recall_eval`` (both sides oracle-checked)."""
-    truth = _brute_topk_staged(emb).select("query_id", "neighbor_id")
-    approx = pq_ann_topk(emb).select("query_id", "neighbor_id")
-    hits = approx.join(truth, ["query_id", "neighbor_id"], "leftsemi")
-    per_query = hits.groupBy("query_id").agg(F.count("*").alias("n_hits"))
-    all_queries = truth.select("query_id").distinct()
-    return all_queries.join(per_query, "query_id", "left").select(
-        "query_id",
-        F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-        F.round(
-            F.coalesce("n_hits", F.lit(0)) / F.lit(TOP_K), 4
-        ).alias("recall_at_k"),
-    )
+    return _recall(emb, pq_ann_topk(emb))
 
 
 def oracle_pq_ann_topk(
@@ -2629,7 +2576,6 @@ def matryoshka_recall(emb: DataFrame) -> DataFrame:
     vector; all sweeps share the corpus scan via the unioned slice
     column. Output: dims, query_id, n_hits, recall_at_k.
     """
-    truth = _brute_topk_staged(emb).select("query_id", "neighbor_id")
     out = None
     for d in MRL_DIMS:
         sliced = emb.select(
@@ -2639,38 +2585,8 @@ def matryoshka_recall(emb: DataFrame) -> DataFrame:
                 " x -> CAST(x AS DOUBLE))"
             ).alias("v"),
         )
-        queries = sliced.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-        ).withColumn("qn", _norm("qv"))
-        corpus = sliced.select(
-            F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv")
-        ).withColumn("cn", _norm("cv"))
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), "neighbor_id"
-        )
-        approx = (
-            F.broadcast(queries)
-            .join(corpus, F.col("query_id") != F.col("neighbor_id"))
-            .withColumn("cosine", _cosine_pre("qv", "cv", "qn", "cn"))
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= TOP_K)
-            .select("query_id", "neighbor_id")
-        )
-        hits = approx.join(
-            truth, ["query_id", "neighbor_id"], "leftsemi"
-        ).groupBy("query_id").agg(F.count("*").alias("n_hits"))
-        rows = (
-            truth.select("query_id")
-            .distinct()
-            .join(hits, "query_id", "left")
-            .select(
-                F.lit(d).alias("dims"),
-                "query_id",
-                F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-                F.round(
-                    F.coalesce("n_hits", F.lit(0)) / F.lit(TOP_K), 4
-                ).alias("recall_at_k"),
-            )
+        rows = _recall(emb, _cosine_topk(sliced, N_QUERIES, TOP_K)).select(
+            F.lit(d).alias("dims"), "*"
         )
         out = rows if out is None else out.unionByName(rows)
     return out
@@ -3126,18 +3042,7 @@ def graph_ann_recall(emb: DataFrame) -> DataFrame:
     same harness every other index here ships (ann_recall_eval /
     rp_ann_recall / matryoshka): approximate indexes are graded, not
     trusted."""
-    truth = _brute_topk_staged(emb).select("query_id", "neighbor_id")
-    approx = graph_ann_topk(emb).select("query_id", "neighbor_id")
-    hits = approx.join(truth, ["query_id", "neighbor_id"], "leftsemi")
-    per_query = hits.groupBy("query_id").agg(F.count("*").alias("n_hits"))
-    all_queries = truth.select("query_id").distinct()
-    return all_queries.join(per_query, "query_id", "left").select(
-        "query_id",
-        F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-        F.round(F.coalesce("n_hits", F.lit(0)) / F.lit(TOP_K), 4).alias(
-            "recall_at_k"
-        ),
-    )
+    return _recall(emb, graph_ann_topk(emb))
 
 
 def oracle_graph_ann_topk() -> str:
@@ -3873,22 +3778,8 @@ def binary_ann_topk(
     corpus = sigs.select(
         F.col("vec_id").alias("neighbor_id"), "w1", "w2"
     )
-    scored = (
-        F.broadcast(queries)
-        .join(corpus, F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "hamming",
-            F.expr("bit_count(q1 ^ w1) + bit_count(q2 ^ w2)"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "hamming")
-    )
+    hamming = F.expr("bit_count(q1 ^ w1) + bit_count(q2 ^ w2)")
+    return _topk(queries, corpus, "hamming", hamming, k, ascending=True)
 
 
 def binary_ann_recall(emb: DataFrame) -> DataFrame:
@@ -3898,20 +3789,7 @@ def binary_ann_recall(emb: DataFrame) -> DataFrame:
 
     Output: query_id, n_hits, recall_at_k.
     """
-    truth = _brute_topk_staged(emb).select("query_id", "neighbor_id")
-    approx = binary_ann_topk(emb).select("query_id", "neighbor_id")
-    hits = approx.join(truth, ["query_id", "neighbor_id"], "leftsemi")
-    per_query = hits.groupBy("query_id").agg(
-        F.count("*").alias("n_hits")
-    )
-    all_queries = truth.select("query_id").distinct()
-    return all_queries.join(per_query, "query_id", "left").select(
-        "query_id",
-        F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-        F.round(
-            F.coalesce("n_hits", F.lit(0)) / F.lit(TOP_K), 4
-        ).alias("recall_at_k"),
-    )
+    return _recall(emb, binary_ann_topk(emb))
 
 
 _BIN_SIGS_SQL = """
@@ -4229,18 +4107,14 @@ def ivf_probe_sweep(emb: DataFrame) -> DataFrame:
     intersection — the corpus is never rescanned. Output per nprobe:
     nprobe, n_cells, scan_frac, hits, recall_at_k.
     """
-    truth = _brute_topk_staged(emb).select("query_id", "neighbor_id")
     ncells = _ivf_centroids(emb).agg(
         F.count("*").alias("n_cells")
     )
     out = None
     for p in IVF_SWEEP_PROBES:
-        approx = ivf_ann_topk(emb, nprobe=p).select(
-            "query_id", "neighbor_id"
+        hits = _recall(emb, ivf_ann_topk(emb, nprobe=p)).agg(
+            F.coalesce(F.sum("n_hits"), F.lit(0)).cast("bigint").alias("hits")
         )
-        hits = approx.join(
-            truth, ["query_id", "neighbor_id"], "leftsemi"
-        ).agg(F.count("*").cast("bigint").alias("hits"))
         row = hits.crossJoin(F.broadcast(ncells)).select(
             F.lit(p).alias("nprobe"),
             "n_cells",

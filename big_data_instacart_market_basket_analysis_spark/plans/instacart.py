@@ -134,9 +134,7 @@ def _products_view(part: DataFrame) -> DataFrame:
     )
 
 
-def instacart_tables(
-    spark: SparkSession, sf_dir: str, persist: bool = True
-) -> InstacartTables:
+def instacart_tables(spark: SparkSession, sf_dir: str) -> InstacartTables:
     """Build (or reuse) the Instacart-shaped views.
 
     The orders view carries two window functions (order_number,
@@ -149,32 +147,24 @@ def instacart_tables(
     standard "stage the enriched dim" call a 100 TB deployment would
     make (or materialize to parquet in an ETL step — same idea, this is
     the in-session form). The fact table (order_products) is never
-    cached. With ``persist`` the tables and the persisted orders view
-    are staged per (session, sf_dir), so every query in a session
-    shares ONE persisted orders view instead of stacking duplicate
-    cache entries, and an input's view is unpersisted once it falls out
-    of the registry's input generations.
+    cached. The tables and the persisted orders view are staged per
+    (session, sf_dir), so every query in a session shares ONE persisted
+    orders view instead of stacking duplicate cache entries, and an
+    input's view is unpersisted once it falls out of the registry's
+    input generations.
     """
-    if persist:
-        return _stage(
-            "instacart_tables", spark,
-            lambda: _build_tables(spark, sf_dir, True), sf_dir,
-            checkpoint=False,
-        )
-    return _build_tables(spark, sf_dir, False)
+    return _stage(
+        "instacart_tables", spark, lambda: _build_tables(spark, sf_dir),
+        sf_dir, checkpoint=False,
+    )
 
 
-def _build_tables(
-    spark: SparkSession, sf_dir: str, persist: bool
-) -> InstacartTables:
+def _build_tables(spark: SparkSession, sf_dir: str) -> InstacartTables:
     def orders() -> DataFrame:
         return _orders_view(load_table(spark, sf_dir, "orders"))
 
     return InstacartTables(
-        orders=(
-            _stage("orders_view", spark, orders, sf_dir, persist=True)
-            if persist else orders()
-        ),
+        orders=_stage("orders_view", spark, orders, sf_dir, persist=True),
         order_products=_order_products_view(
             load_table(spark, sf_dir, "lineitem")
         ),

@@ -75,3 +75,33 @@ def test_dbscan_diagonal_not_adjacent(spark):
     }
     assert got[(10, 2)] == ("core", 10 * 1000 + 2)
     assert got[(11, 3)] == ("core", 11 * 1000 + 3)
+
+
+def test_star_fixpoint_round_cap_raises(spark, monkeypatch):
+    """Both connected-component callers share one star-contraction
+    loop and its round cap: a 5-node chain is not a star, so one round
+    cannot reach the fixpoint and each caller raises its own error."""
+    import pytest
+
+    from big_data_instacart_market_basket_analysis_spark.operators import (
+        dedup,
+    )
+
+    monkeypatch.setattr(dedup, "MAX_CC_ROUNDS", 1)
+    docs = spark.createDataFrame([(i,) for i in range(1, 6)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 5)], "d1 long, d2 long"
+    )
+    with pytest.raises(RuntimeError, match="connected_clusters did not"
+                       " converge in 1 rounds"):
+        dedup.connected_clusters(docs, pairs=pairs)
+    # five points (10, 2..6), weight 2 each: every closed neighborhood
+    # weighs >= 4, so all are core and the core graph is a chain
+    chain = _events(spark, [(u, 2 + u // 2, 10) for u in range(10)])
+    with pytest.raises(RuntimeError, match="dbscan_clusters CC did not"
+                       " converge in 1 rounds"):
+        clustering.dbscan_clusters(chain)
+    monkeypatch.setattr(dedup, "MAX_CC_ROUNDS", 20)
+    got = {r["key"]: r["cluster_id"]
+           for r in clustering._core_labels(chain).collect()}
+    assert got == {10000 + y: 10002 for y in range(2, 7)}

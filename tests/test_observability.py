@@ -197,3 +197,32 @@ def test_plan_lint_clean_plan_and_shuffle_count(spark):
     findings = prof.plan_lint(df, "agg")
     assert [f["rule"] for f in findings] == ["shuffle-count"]
     assert findings[0]["n_hits"] == 1
+
+
+def test_plan_lint_shuffle_count_skips_cached_table_plans(spark):
+    """A query over a persisted, materialized aggregate runs one
+    exchange of its own; the cached table's plan (rendered twice in the
+    executed-plan text once it is materialized) is not counted."""
+    from big_data_instacart_market_basket_analysis_spark.operators import (
+        profiling as prof,
+    )
+
+    agg = (
+        spark.range(100)
+        .groupBy((F.col("id") % 10).alias("k"))
+        .agg(F.count("*").alias("n"))
+        .persist()
+    )
+    try:
+        assert agg.count() == 10
+        df = agg.groupBy((F.col("k") % 3).alias("g")).agg(F.sum("n"))
+        text = df._jdf.queryExecution().executedPlan().toString()
+        assert text.count("Exchange hashpartitioning") > 1, text
+        [row] = [f for f in prof.plan_lint(df, "q")
+                 if f["rule"] == "shuffle-count"]
+        assert row["n_hits"] == 1
+        assert row["n_hits"] == len(
+            prof._plan_nodes(df, "ShuffleExchangeExec")
+        )
+    finally:
+        agg.unpersist()

@@ -13,9 +13,11 @@ import io
 import shutil
 from contextlib import redirect_stdout
 
-from pyspark.sql import DataFrame
-
 import __spark_entry__ as entrymod
+from big_data_instacart_market_basket_analysis_spark.operators.profiling import (
+    _plan_nodes,
+    _seq,
+)
 from tests.conftest import SF_ORACLE
 
 _QUERIES = entrymod.queries()
@@ -99,8 +101,10 @@ def test_aqe_and_partial_aggregation(spark):
     # the exchanges are counted on the plan that runs.
     keys = [
         x.outputPartitioning().toString()
-        for x in _nodes(_QUERIES["user_product_features"](spark, SF_ORACLE),
-                        "ShuffleExchangeExec", into_cache=True)
+        for x in _plan_nodes(
+            _QUERIES["user_product_features"](spark, SF_ORACLE),
+            "ShuffleExchangeExec", into_cache=True,
+        )
     ]
     assert sum(k.startswith("hashpartitioning(userID") for k in keys) == 1, keys
 
@@ -898,31 +902,6 @@ def test_fold_state_is_materialized_per_batch(spark):
     assert sum(r["n"] for r in got.collect()) == 40
 
 
-def _seq(jseq) -> list:
-    return [jseq.apply(i) for i in range(jseq.size())]
-
-
-def _nodes(plan, kind: str, into_cache: bool = False) -> list:
-    """The ``kind`` nodes of a DataFrame's executed JVM plan (or of a
-    JVM plan node), read through AQE's wrappers (the current plan of
-    each); with ``into_cache`` also those of the plans that built the
-    cached tables it scans."""
-    if isinstance(plan, DataFrame):
-        plan = plan._jdf.queryExecution().executedPlan()
-    name = plan.getClass().getSimpleName()
-    if name == "AdaptiveSparkPlanExec":
-        inner = [plan.executedPlan()]
-    elif name.endswith("QueryStageExec"):
-        inner = [plan.plan()]
-    elif name == "InMemoryTableScanExec":
-        inner = [plan.relation().cacheBuilder().cachedPlan()] if into_cache else []
-    else:
-        inner = _seq(plan.children())
-    return [plan] * (name == kind) + [
-        n for k in inner for n in _nodes(k, kind, into_cache)
-    ]
-
-
 def test_candidates_reads_staged_feature_tables(spark, tmp_path):
     """Once the three feature queries have run on an input, the
     candidate plan reads their staged tables as in-memory relations and
@@ -944,12 +923,12 @@ def test_candidates_reads_staged_feature_tables(spark, tmp_path):
     t = instacart_tables(spark, sf_dir)
     files = [
         _seq(x.relation().location().rootPaths())[0].getName()
-        for x in _nodes(cand.candidates(t), "FileSourceScanExec")
+        for x in _plan_nodes(cand.candidates(t), "FileSourceScanExec")
     ]
     assert files.count("lineitem.parquet") == 1, files
     def cached(plan) -> list:
         return [x.relation().cacheBuilder()
-                for x in _nodes(plan, "InMemoryTableScanExec")]
+                for x in _plan_nodes(plan, "InMemoryTableScanExec")]
 
     in_candidates = cached(cand.candidates(t))
     for name in features:
