@@ -347,15 +347,13 @@ def q_plan_lint_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from concurrent.futures import ThreadPoolExecutor
 
     t = instacart_tables(spark, sf_dir)
-    # the stable events handle shares the session's staged feature
-    # tables with the ml_* queries, so building these plans does not
-    # re-execute the eager staging checkpoints (r8: the board line was
-    # 9s because every builder re-staged from a fresh load_table
-    # identity); the LINTED plan text is unchanged — staging affects
-    # the builders' inputs, not the lint rules.
+    # the feature rows lint the unstaged builders: the public
+    # product_features/users_final return the session's persisted
+    # tables, whose executed plan is one in-memory scan that no rule
+    # can fire on (shuffle-count would read 0)
     builders = {
-        "product_features": lambda: _feat.product_features(t),
-        "users_final": lambda: _feat.users_final(t),
+        "product_features": lambda: _feat._product_features(t),
+        "users_final": lambda: _feat._users_final(t),
         "events_sessionize": lambda: _ev.sessionize(
             load_table(spark, sf_dir, "events")
         ),

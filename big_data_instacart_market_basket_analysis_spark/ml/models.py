@@ -5,7 +5,8 @@ LabeledPoint RDDs (F.py:199-200, 219-225) and glues predictions back
 through pandas (F.py:293). Here the whole path is DataFrame-native
 ``pyspark.ml``:
 
-- M1 VectorAssembler replaces the LabeledPoint map (F.py:199-200)
+- M1 one ``array_to_vector`` projection replaces the LabeledPoint map
+  (F.py:199-200)
 - M2 seeded ``randomSplit([0.7, 0.3])`` (F.py:214; seeded per SURVEY §5)
 - M3-M5 regressors with the reference's exact hyperparameters
 - M6 ``model.transform`` keeps label+features+prediction in one row,
@@ -28,7 +29,7 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.ml.feature import VectorAssembler
+from pyspark.ml.functions import array_to_vector
 from pyspark.ml.regression import (
     DecisionTreeRegressor,
     GBTRegressor,
@@ -73,13 +74,21 @@ def assemble(cand: DataFrame) -> DataFrame:
     0.0 — the reference's pandas rows would carry inf/NaN into MLlib
     here, which is replicating a crash, not a semantic (SURVEY §2 bug
     list rationale).
+
+    The vector is ``array_to_vector`` over the double-cast columns, not a
+    ``VectorAssembler``: the assembler names its casts after its random
+    uid, and those names are compiled into the generated class, so every
+    call would compile its classes again instead of reusing the
+    session's compiled copy.
     """
-    filled = cand.na.fill(0.0, subset=FEATURE_COLS).withColumn(
-        "label", F.col("label").cast("double")
-    )
-    va = VectorAssembler(inputCols=FEATURE_COLS, outputCol="features")
-    return va.transform(filled).select(
-        "orderID", "productID", "eval_set", "label", "features"
+    return cand.na.fill(0.0, subset=FEATURE_COLS).select(
+        "orderID",
+        "productID",
+        "eval_set",
+        F.col("label").cast("double").alias("label"),
+        array_to_vector(
+            F.array(*[F.col(c).cast("double") for c in FEATURE_COLS])
+        ).alias("features"),
     )
 
 
@@ -96,7 +105,7 @@ def binarize(scored: DataFrame, score_col: str = "prediction") -> DataFrame:
 def _assembled(t: InstacartTables) -> DataFrame:
     """Assembled candidate features: a projection over the staged,
     persisted candidate table, so every model query reads that one
-    build. The VectorAssembler is row-local, so the result keeps the
+    build. The projection is row-local, so the result keeps the
     candidate table's partitions (and with them ``randomSplit``'s
     output) and needs no persisted copy of its own."""
     return assemble(candidates_staged(t))

@@ -20,6 +20,30 @@ Notable choices
 - AQE with coalesce + skew-join: the candidate-expansion explode join
   (SURVEY.md §4 "Generate") is the row-amplifying operator at scale;
   AQE re-plans the post-explode shuffles at runtime.
+- ``spark.sql.codegen.cache.maxEntries=CODEGEN_CACHE_ENTRIES`` (8000):
+  Spark compiles each whole-stage-codegen class with Janino and keeps
+  it in one JVM-wide cache keyed by the generated code text. The
+  default of 100 classes is smaller than one perfbench
+  ``reorder_pipeline`` pass (159 compiles), so every re-issued query
+  shape compiled all of its classes again. One pass over the whole
+  query surface (every ``queries()`` entry at sf0.001) compiles 6,718
+  distinct classes; the bound covers that with ~20% headroom, and a
+  second pass over a copy of the input then compiles 67 (10,444 with
+  100 entries). The conf is static: the JVM reads it once, when the
+  first class is compiled, so it can only be set here (see
+  ``loaders._RUNTIME_DEFAULTS``). Memory, measured after that surface
+  pass: a cached class holds ~50 KB of heap (its code text, which is
+  the key, and its bytecode) and ~8 KB of metaspace; heap after a full
+  GC was 736 MB against 386 MB with 100 entries, metaspace 311 MB
+  against 260 MB. A run that issues a few shapes, like perfbench,
+  never fills the cache.
+- ``spark.sql.codegen.useIdInClassName=false``: the class name would
+  carry the codegen stage id, which AQE hands out in the order its
+  query stages finish, so the same plan compiled again under another
+  name (``candidates``: 4-6 classes per re-issue). Without it, equal
+  plans share one class. With it and the uid-free feature vector of
+  ``ml.models.assemble``, the surface's distinct classes fell from
+  8,677 to 6,718.
 """
 
 from __future__ import annotations
@@ -27,6 +51,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+#: ``spark.sql.codegen.cache.maxEntries``: how many compiled classes the
+#: JVM keeps (see "Notable choices").
+CODEGEN_CACHE_ENTRIES = 8000
 
 
 def _cpus() -> int:
@@ -67,6 +96,8 @@ def get_spark(
         # rejects; read as epoch-nanos long, converted in the loader.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

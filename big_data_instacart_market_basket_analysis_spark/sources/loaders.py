@@ -37,6 +37,15 @@ NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 #: the grading driver supplies a stock session with none of our
 #: ``get_spark()`` builder defaults). All are dynamic SQL confs —
 #: settable post-startup via ``spark.conf.set``.
+#:
+#: The compiled-class cache size (``spark.sql.codegen.cache.maxEntries``,
+#: see ``session.py``) cannot be set here: it is a static conf, which
+#: ``spark.conf.set`` refuses, and the JVM reads it once, when the first
+#: class is compiled. A session the engine did not build keeps Spark's
+#: 100 entries and recompiles re-issued query shapes; results are the
+#: same. ``spark.sql.codegen.useIdInClassName=false`` stays in
+#: ``get_spark`` with it: it only pays off in a cache large enough to
+#: keep the classes it lets queries share.
 _RUNTIME_DEFAULTS = (
     # events fixture carries INT64 TIMESTAMP(NANOS); the reader rejects
     # it without this (read as epoch-nanos long, converted in the loader)

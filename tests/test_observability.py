@@ -10,6 +10,8 @@ correctness cliff.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
@@ -17,7 +19,7 @@ from big_data_instacart_market_basket_analysis_spark.operators import (
     similarity,
     textstats,
 )
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 def _docs(spark):
@@ -226,3 +228,18 @@ def test_plan_lint_shuffle_count_skips_cached_table_plans(spark):
         )
     finally:
         agg.unpersist()
+
+
+def test_plan_lint_report_lints_feature_build_plans(spark):
+    """The report's feature rows lint the feature builds, not the
+    session's persisted copies of them: at sf0.01 both builds run
+    shuffles of their own, so neither ``shuffle-count`` row reads 0."""
+    import __spark_entry__ as entry
+
+    sf001 = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+    rows = entry.queries()["plan_lint_report"](spark, sf001).collect()
+    shuffles = {
+        r["plan"]: r["n_hits"] for r in rows if r["rule"] == "shuffle-count"
+    }
+    assert shuffles["product_features"] > 0, shuffles
+    assert shuffles["users_final"] > 0, shuffles
