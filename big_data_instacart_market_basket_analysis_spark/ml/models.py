@@ -18,11 +18,14 @@ through pandas (F.py:293). Here the whole path is DataFrame-native
 
 Distributed-scale notes: tree training in ``pyspark.ml`` aggregates
 split statistics per partition (no driver-side data pull); scoring is a
-broadcast of the model into executor-side codegen'd transforms. The only
-driver materialization anywhere is the final metrics row. Every model
-query reads the candidate table ``candidates_staged`` persisted once per
-input; the assembled feature vectors are a projection over it, not a
-second cached copy.
+broadcast of the model into executor-side codegen'd transforms. What
+reaches the driver is bounded by the models, not the data: the fitted
+trees (each level's chosen splits), ``train_metrics``' one row of 12
+confusion counts and ``cv_model_selection``'s cross-fold means, whose
+3- and 4-row result tables go back to the JVM through ``local_rows``
+(no Python worker). Every model query reads the candidate table
+``candidates_staged`` persisted once per input; the assembled feature
+vectors are a projection over it, not a second cached copy.
 """
 
 from __future__ import annotations
@@ -41,6 +44,7 @@ from pyspark.sql import functions as F
 from ..operators._staging import stage as _stage
 from ..operators.candidates import FEATURE_COLS, candidates_staged
 from ..operators.submission import THRESHOLD, submission
+from ..sources.loaders import local_rows
 from ..plans.instacart import EVAL_TEST, EVAL_TRAIN, InstacartTables
 
 SEED = 42
@@ -195,8 +199,8 @@ def train_metrics(t: InstacartTables) -> DataFrame:
         for name in names
     ]
     spark = t.orders.sparkSession
-    return spark.createDataFrame(
-        rows, "model string, precision double, recall double, f1 double"
+    return local_rows(
+        spark, rows, "model string, precision double, recall double, f1 double"
     )
 
 
@@ -274,7 +278,8 @@ def cv_model_selection(t: InstacartTables) -> DataFrame:
         for i, pm in enumerate(grid)
     ]
     spark = t.orders.sparkSession
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         rows,
         "max_depth int, max_bins int, avg_rmse double, is_best boolean",
     )

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.loaders import local_rows
+
 SEED = 42
 
 #: LDA knobs: small k on a small fixture; at corpus scale k grows and
@@ -85,8 +87,8 @@ def lda_topics(documents: DataFrame) -> DataFrame:
             zip(t["termIndices"], t["termWeights"])
         )
     ]
-    return spark.createDataFrame(
-        rows, "topic int, rank int, term string, weight double"
+    return local_rows(
+        spark, rows, "topic int, rank int, term string, weight double"
     )
 
 
@@ -130,6 +132,6 @@ def word2vec_synonyms(documents: DataFrame) -> DataFrame:
             rows.append(
                 (term, rank, s["word"], round(float(s["similarity"]), 6))
             )
-    return spark.createDataFrame(
-        rows, "term string, rank int, synonym string, similarity double"
+    return local_rows(
+        spark, rows, "term string, rank int, synonym string, similarity double"
     )

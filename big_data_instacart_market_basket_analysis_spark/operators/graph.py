@@ -1861,9 +1861,12 @@ def k_core_membership(
     # survivor set `prev` that produced `last`: compare the survivor
     # counts of the last two rounds, as the oracle does (1-row
     # broadcast crossJoin, the engine's standard scalar-attach shape).
+    # The hint fixes the build side: left to AQE, either one-row count
+    # can be broadcast, and a flip swaps the operands in the generated
+    # class, which then compiles again.
     n_alive = alive.agg(F.count("*").alias("n_alive"))
     n_prev = prev.agg(F.count("*").alias("n_prev"))
-    conv = n_alive.crossJoin(n_prev).select(
+    conv = n_alive.crossJoin(F.broadcast(n_prev)).select(
         (F.col("n_alive") == F.col("n_prev")).cast("int").alias("converged")
     )
     surv = last.filter(F.col("core_deg") >= k)

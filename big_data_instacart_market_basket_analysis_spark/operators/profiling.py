@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.loaders import local_rows
+
 #: profiled columns of the documents fixture.
 DOC_PROFILE_COLUMNS = ("doc_id", "lang", "n_chars", "source", "text")
 
@@ -755,7 +757,8 @@ def lint_report(spark, plans: dict[str, DataFrame]) -> DataFrame:
     rows = []
     for findings in per_plan:
         rows.extend(findings)
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [
             (r["plan"], r["rule"], r["severity"], r["n_hits"], r["advice"])
             for r in rows

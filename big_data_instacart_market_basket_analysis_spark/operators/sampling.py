@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.loaders import local_rows
+
 #: split fractions: 90% train, 5% val, 5% test.
 SPLIT_TRAIN_FRAC = 0.90
 SPLIT_VAL_FRAC = 0.05
@@ -518,8 +520,8 @@ def setcover_selection(
         picks.append(pick["doc_id"])
         n_cov += int(pick["gain"])
         rows.append((rnd, pick["doc_id"], int(pick["gain"]), n_cov))
-    out = spark.createDataFrame(
-        rows, "round int, doc_id bigint, gain bigint, covered bigint"
+    out = local_rows(
+        spark, rows, "round int, doc_id bigint, gain bigint, covered bigint"
     )
     return out.crossJoin(F.broadcast(universe)).select(
         "round",

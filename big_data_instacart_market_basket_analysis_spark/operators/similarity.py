@@ -43,6 +43,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.loaders import local_rows
 from ._staging import spread as _spread
 from ._staging import stage as _stage
 
@@ -2759,7 +2760,8 @@ def pca_power_iteration(
         vvec = {i: round(av[i] / nrm, 12) for i in dims}
         top_dim = max(dims, key=lambda i: (abs(vvec[i]), -i))
         out_rows.append((rnd, evr, top_dim, vvec[top_dim]))
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         out_rows,
         "round int, evr double, top_dim int, top_loading double",
     ).select(

@@ -10,6 +10,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ...sources.loaders import local_rows
+
 from big_data_instacart_market_basket_analysis_spark.operators import (
     ranking as _rank,
 )
@@ -1149,8 +1151,8 @@ def markov_removal_attribution(events: DataFrame) -> DataFrame:
         for v in MRA_CHANNELS
         if p_base is not None and (v, "START") in a_cur
     ]
-    per_ch = spark.createDataFrame(
-        p_rows, "channel string, p_base bigint, p_conv bigint"
+    per_ch = local_rows(
+        spark, p_rows, "channel string, p_base bigint, p_conv bigint"
     ).select(
         "channel",
         F.col("p_base").alias("p_conv_base_mill"),

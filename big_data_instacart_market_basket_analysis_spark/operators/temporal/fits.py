@@ -14,6 +14,7 @@ from big_data_instacart_market_basket_analysis_spark.operators import (
     ranking as _rank,
 )
 
+from ...sources.loaders import local_rows
 from .twosample import _cent_prefix
 
 
@@ -1817,8 +1818,8 @@ def vonmises_fit(events: DataFrame) -> DataFrame:
     arithmetic after.
     """
     spark = events.sparkSession
-    trig = spark.createDataFrame(
-        VONMISES_TRIG, "h int, cosv double, sinv double"
+    trig = local_rows(
+        spark, VONMISES_TRIG, "h int, cosv double, sinv double"
     )
     hours = (
         events.filter(F.col("event_type") == "purchase")

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.loaders import local_rows
 from ._staging import spread as _spread
 from ._staging import stage as _stage
 from .ranking import bucket_prefix_offsets
@@ -2941,7 +2942,8 @@ def bpe_train_merges(docs: DataFrame, n_merges: int = BPE_MERGES) -> DataFrame:
     """
     spark = docs.sparkSession
     merges = _bpe_learn_staged(docs, n_merges)
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         merges,
         "step int, lhs string, rhs string, merged string,"
         " pair_count bigint",
@@ -6238,8 +6240,8 @@ def _unigram_viterbi_segs(
     every position is reachable, so the fold never dead-ends.
     """
     spark = words.sparkSession
-    vdf = spark.createDataFrame(
-        [(p, float(pr)) for p, pr in vocab], "piece string, prob double"
+    vdf = local_rows(
+        spark, [(p, float(pr)) for p, pr in vocab], "piece string, prob double"
     )
     occ = words.select(
         "w",
@@ -6411,8 +6413,8 @@ def unigram_train(docs: DataFrame) -> DataFrame:
         (i + 1, p, len(p), int(c))
         for i, (p, c) in enumerate(ranked)
     ]
-    return spark.createDataFrame(
-        rows, "rank int, piece string, piece_len int, cnt bigint"
+    return local_rows(
+        spark, rows, "rank int, piece string, piece_len int, cnt bigint"
     ).select(
         "rank",
         "piece",

@@ -37,6 +37,7 @@ from ..operators._staging import stage as _stage
 from ..sources.loaders import (
     ensure_nanos_conf,
     load_table,
+    local_rows,
     normalize_event_ts,
 )
 
@@ -456,7 +457,8 @@ def _write_sentinel_input(spark: SparkSession, sf_dir: str) -> str:
     sentinel_ts = events.select(
         (F.max("ts") + F.expr("INTERVAL 7 DAYS")).alias("t")
     ).first()["t"]
-    spark.createDataFrame(
+    local_rows(
+        spark,
         [
             (-1, sentinel_ts, -1, "click", 0.0, "{}"),
             (-2, sentinel_ts, -1, "purchase", 0.0, "{}"),

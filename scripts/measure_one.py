@@ -12,7 +12,10 @@ driver-coordinated supersteps or staging actions. The warm-up run has
 already compiled every shape the query has, so a nonzero ``compiles``
 means its generated code depends on the call (a literal, a random name
 or an input-derived value in the code text) and it pays Janino on every
-issue.
+issue. ``py_cpu`` is the CPU time of the Python worker processes under
+the JVM (``pyspark.daemon`` and its forks) during the reported run: a
+nonzero value means the query sends rows through Python (a pandas UDF,
+``mapInPandas``, an RDD ``map``), which no other column shows.
 """
 
 from __future__ import annotations
@@ -26,6 +29,31 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from big_data_instacart_market_basket_analysis_spark.session import get_spark  # noqa: E402
 
 import __spark_entry__ as e  # noqa: E402
+
+
+def _descendants_cpu_s(pid: int) -> float:
+    """CPU seconds (``utime + stime`` and the reaped children's
+    ``cutime + cstime``) of every process below ``pid``, read from
+    ``/proc``."""
+    stats = {}
+    for entry in os.listdir("/proc"):
+        if not entry.isdigit():
+            continue
+        try:
+            with open(f"/proc/{entry}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:  # the process ended while we read
+            continue
+        stats[int(entry)] = (int(fields[1]), sum(int(x) for x in fields[11:15]))
+    children: dict[int, list[int]] = {}
+    for child, (ppid, _) in stats.items():
+        children.setdefault(ppid, []).append(child)
+    todo, ticks = list(children.get(pid, [])), 0
+    while todo:
+        child = todo.pop()
+        ticks += stats[child][1]
+        todo.extend(children.get(child, []))
+    return ticks / os.sysconf("SC_CLK_TCK")
 
 
 def main() -> None:
@@ -42,12 +70,15 @@ def main() -> None:
     def compiles() -> int:
         return codegen.METRIC_COMPILATION_TIME().getCount()
 
+    def py_cpu() -> float:
+        return _descendants_cpu_s(sc._gateway.proc.pid)
+
     # warmup the session itself
     spark.range(1).write.format("noop").mode("overwrite").save()
 
     print(
         f"{'query':34s} {'build':>7s} {'act-min':>8s} {'jobs':>5s}"
-        f" {'compiles':>8s} {'total':>7s}"
+        f" {'compiles':>8s} {'py_cpu':>6s} {'total':>7s}"
     )
     for name in names:
         fn = qs[name]
@@ -55,10 +86,11 @@ def main() -> None:
         sc.setJobDescription(f"warmup:{name}")
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-        best_act, build_t, njobs, ncomp = None, None, None, None
+        best_act, build_t, njobs, ncomp, pcpu = None, None, None, None, None
         for i in range(n_runs):
             j0 = len(sc.statusTracker().getJobIdsForGroup(None) or [])
             c0 = compiles()
+            p0 = py_cpu()
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             t1 = time.perf_counter()
@@ -67,12 +99,13 @@ def main() -> None:
             t2 = time.perf_counter()
             j1 = len(sc.statusTracker().getJobIdsForGroup(None) or [])
             c1 = compiles()
+            p1 = py_cpu()
             if best_act is None or (t2 - t1) < best_act:
                 best_act, build_t = t2 - t1, t1 - t0
-                njobs, ncomp = j1 - j0, c1 - c0
+                njobs, ncomp, pcpu = j1 - j0, c1 - c0, p1 - p0
         print(
             f"{name:34s} {build_t:7.3f} {best_act:8.3f} {njobs:5d} "
-            f"{ncomp:8d} {build_t + best_act:7.3f}",
+            f"{ncomp:8d} {pcpu:6.2f} {build_t + best_act:7.3f}",
             flush=True,
         )
 
