@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from ._staging import spread as _spread
 from ._staging import stage as _stage
+from .ranking import global_ranked
 
 SHINGLE_WIDTH = 3
 JACCARD_THRESHOLD = 0.3
@@ -1707,17 +1708,12 @@ def sorted_neighborhood_pairs(
     (inverted index, LSH buckets, and now sorted neighborhoods), best
     when near-dups share PREFIXES rather than arbitrary shingles.
 
-    The global rank is assigned without a global sort (the
-    ``global_shuffle`` trick): prefix buckets keep key order, per-
-    bucket counts prefix-sum into offsets over a tiny table, and a
-    per-bucket row_number adds the offset — the corpus shuffles once
-    on the bucket key. Window pairs come from a (W-1)-way position
-    explode + ONE equi-join on partner position (never a range join);
-    exact Jaccard attaches from the shared staged pair-count kernel,
-    pairs outside it scoring 0. Skewed key prefixes (every doc
-    starting "the ") fatten one bucket — the prefix length is the
-    balance knob, and the window bound caps pair count at W·N
-    regardless.
+    The global rank is assigned without a global sort by
+    ``ranking.global_ranked`` (as in ``global_shuffle``). Window
+    pairs come from a (W-1)-way position explode + ONE equi-join on
+    partner position (never a range join); exact Jaccard attaches
+    from the shared staged pair-count kernel, pairs outside it
+    scoring 0. The window bound caps pair count at W·N.
 
     Output: (d1 < d2, pos_gap, jaccard) — all window candidates with
     their scores; consumers threshold.
@@ -1727,24 +1723,9 @@ def sorted_neighborhood_pairs(
         F.substring(F.lower(F.col("text")), 1, SNM_KEY_CHARS).alias(
             "skey"
         ),
-    ).withColumn("bucket", F.substring("skey", 1, 2))
-    counts = keyed.groupBy("bucket").agg(F.count("*").alias("n"))
-    w = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
     )
-    offsets = counts.select(
-        "bucket",
-        F.coalesce(F.sum("n").over(w), F.lit(0)).alias("offset"),
-    )
-    wb = Window.partitionBy("bucket").orderBy("skey", "doc_id")
-    ranked = (
-        keyed.join(F.broadcast(offsets), "bucket")
-        .select(
-            "doc_id",
-            (F.col("offset") + F.row_number().over(wb))
-            .cast("long")
-            .alias("pos"),
-        )
+    ranked = global_ranked(keyed, [F.col("skey"), F.col("doc_id")]).select(
+        "doc_id", F.col("_rk").alias("pos")
     )
     a = ranked.select(
         F.col("doc_id").alias("da"),

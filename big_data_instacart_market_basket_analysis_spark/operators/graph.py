@@ -1037,8 +1037,8 @@ def betweenness_stability_eval(
     ov = (
         topa.join(topb, "node")
         .agg(F.count("*").alias("n_top_overlap"))
-        .crossJoin(topa.agg(F.count("*").alias("n_a")))
-        .crossJoin(topb.agg(F.count("*").alias("n_b")))
+        .crossJoin(F.broadcast(topa.agg(F.count("*").alias("n_a"))))
+        .crossJoin(F.broadcast(topb.agg(F.count("*").alias("n_b"))))
     )
     st = both.agg(
         F.count("*").alias("n"),

@@ -1,12 +1,26 @@
-"""[EXT] Distributed global-rank kernel — total-order row_number,
-running sums, and exact ntile WITHOUT a single-partition sort.
+"""[EXT] Distributed rank and prefix-sum kernels — total-order
+row_number, running sums, cumulative counts and exact ntile WITHOUT a
+single-partition sort.
 
 The reference never ranks anything bigger than a pandas frame; at
 100 TB "rank every user" is the canonical driver-style bottleneck:
 ``Window.orderBy(...)`` with no partition key funnels the whole table
 through ONE task (Spark warns ``WindowExec: No Partition Defined``).
-This kernel is the scale-safe replacement, generalizing the
-prefix-sum-rank trick from ``dedup.sorted_neighborhood_pairs``:
+Every global rank or cumulative count in the engine goes through one
+of three kernels here instead:
+
+* ``global_ranked`` — a UNIQUE row rank (and inclusive running sums)
+  over a total order, for row-grain callers (``global_shuffle``,
+  ``sorted_neighborhood_pairs``, ``nb_gains_table``).
+* ``value_prefix`` — prefix sums at VALUE grain (one row per distinct
+  value, ties already aggregated), for the rank-test family (KS,
+  Mann-Whitney, Spearman, Wilcoxon, Kruskal-Wallis, ...), Gini,
+  quantiles and the NB AUC / PR sweep. Descending order is the
+  ascending prefix of the negated value.
+* ``bucket_prefix_offsets`` — exclusive prefix sums over a table
+  already at a bounded bucket grain; ``value_prefix`` builds on it.
+
+``global_ranked`` works in three steps:
 
 1. ``repartitionByRange`` on the order key — the range exchange is a
    real shuffle across ALL executors, and partition i holds keys
@@ -21,6 +35,17 @@ prefix-sum-rank trick from ``dedup.sorted_neighborhood_pairs``:
    all, so the `global-window` lint rule reads 0 on every consumer),
    then broadcast-joined back. Global rank = offset + local rank;
    global running sum = sum-offset + local running sum.
+
+``value_prefix`` buckets each value by the octave of its floor
+(``octave(floor(v))``: floor(log2(v + 1)) for v >= 0, and
+-1 - floor(log2(-v)) below), prefix-sums the bucket totals with
+``bucket_prefix_offsets`` and adds a within-bucket window partitioned
+by bucket. THE BUCKET MUST BE MONOTONE IN THE VALUE, or a value's
+offset counts rows above it: the octave of the raw value is monotone
+only on integers (−0.25 lands above 0.5), the octave of its floor is
+monotone for every numeric value and equal to the raw octave on
+integers. The bucket count is data-independent (<= ~128 octaves over
+the whole BIGINT range), so the offset table stays tiny at any scale.
 
 Consistency note: the per-partition stats and the final join both
 read the SAME range exchange; Spark's ReuseExchange dedupes it inside
@@ -143,21 +168,20 @@ def bucket_prefix_offsets(
     btot: DataFrame,
     bucket_col: str,
     value_cols: Sequence[str],
-    descending: bool = False,
 ) -> DataFrame:
     """EXCLUSIVE prefix sums over a bucket-grain table with ZERO
     WindowExec: pack the (bounded) bucket rows into one sorted
     struct-array, prefix-sum with array higher-order functions, and
     explode back — the same machinery as ``global_ranked``'s offsets
-    stage, factored out for the floor-bucket rank family
-    (``nb_pr_curve``, ``nb_quality_auc``, ``nb_gains_table``, ...).
+    stage, factored out for ``value_prefix``'s octave buckets and
+    ``textstats.ppl_bucket_report``'s perplexity buckets.
 
     Input must be BUCKET GRAIN (one row per bucket, counts already
     aggregated) — the collect_list is bounded by #buckets, which every
     call site bounds by construction (integer floor of a score whose
     range is data-independent). Returns one row per bucket with
     ``_off_{c}`` = sum of c over all buckets strictly BEFORE this one
-    in the (a|de)scending bucket order. O(B^2) slice-sums on B bucket
+    in ascending bucket order. O(B^2) slice-sums on B bucket
     elements, executor-side.
     """
     packed = btot.agg(
@@ -167,8 +191,7 @@ def bucket_prefix_offsets(
                     F.col(bucket_col),
                     *[F.col(c).cast("long").alias(c) for c in value_cols],
                 )
-            ),
-            asc=not descending,
+            )
         ).alias("_bs")
     )
 
@@ -193,6 +216,78 @@ def bucket_prefix_offsets(
             )
         ).alias("_o")
     ).select("_o.*")
+
+
+def value_prefix(
+    vg: DataFrame,
+    sum_cols: Sequence[str],
+    value_col: str,
+    inclusive: bool = False,
+    group_cols: Sequence[str] = (),
+) -> DataFrame:
+    """Prefix sums over a VALUE-grain table (one row per distinct
+    ``value_col``, per group) with ZERO global windows. Returns the
+    input columns plus ``_pre_{c}`` for each c in ``sum_cols`` = sum
+    of c over the rows whose value is strictly BELOW (or up to, when
+    ``inclusive``) this row's value. For a descending prefix, pass the
+    negated value.
+
+    Octave buckets of floor(value) (see the module docstring) get
+    exclusive offsets from ``bucket_prefix_offsets``; within-bucket
+    prefixes ride a window PARTITIONED by bucket. With ``group_cols``
+    the prefixes run independently per group: bucket totals and
+    offsets are keyed by (group, bucket) — the offsets window is
+    partitioned by group (<= ~128 rows per group), the within-bucket
+    window by (group, bucket).
+
+    Callers must drop NULL values upstream or accept that they drop
+    here: a NULL value has no bucket, so it falls out of the bucket
+    equi-join and out of every prefix.
+    """
+    v = F.floor(F.col(value_col))
+    bkt = (
+        F.when(v >= 0, F.floor(F.log2(v + 1)))
+        .otherwise(-1 - F.floor(F.log2(-v)))
+        .cast("bigint")
+    )
+    vgb = vg.select("*", bkt.alias("_bucket"))
+    gcols = list(group_cols)
+    btot = vgb.groupBy(*gcols, "_bucket").agg(
+        *[F.sum(c).alias(c) for c in sum_cols]
+    )
+    if gcols:
+        woff = (
+            Window.partitionBy(*gcols)
+            .orderBy("_bucket")
+            .rowsBetween(Window.unboundedPreceding, -1)
+        )
+        offs = btot.select(
+            *gcols,
+            "_bucket",
+            *[
+                F.coalesce(F.sum(c).over(woff), F.lit(0)).alias(
+                    f"_off_{c}"
+                )
+                for c in sum_cols
+            ],
+        )
+    else:
+        offs = bucket_prefix_offsets(btot, "_bucket", sum_cols)
+    w_in = (
+        Window.partitionBy(*gcols, "_bucket")
+        .orderBy(value_col)
+        .rowsBetween(Window.unboundedPreceding, 0 if inclusive else -1)
+    )
+    return vgb.join(F.broadcast(offs), gcols + ["_bucket"]).select(
+        *vg.columns,
+        *[
+            (
+                F.col(f"_off_{c}")
+                + F.coalesce(F.sum(c).over(w_in), F.lit(0))
+            ).alias(f"_pre_{c}")
+            for c in sum_cols
+        ],
+    )
 
 
 def ntile_expr(k: int, rk: Column, n: Column) -> Column:

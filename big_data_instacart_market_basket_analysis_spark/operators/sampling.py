@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.loaders import local_rows
+from . import ranking as _rank
 
 #: split fractions: 90% train, 5% val, 5% test.
 SPLIT_TRAIN_FRAC = 0.90
@@ -215,45 +216,22 @@ def global_shuffle(docs: DataFrame) -> DataFrame:
     gets a dense position 1..N in ``md5(seed:doc_id)`` order.
 
     A single ``row_number() OVER (ORDER BY key)`` collapses to one
-    partition, so the total order is assigned the way zipWithIndex
-    does it, entirely with DataFrame ops: (1) bucket each row by the
-    key's first hex byte (256 range buckets — the hash is uniform, so
-    buckets are balanced at any scale); (2) hash-agg the per-bucket
-    counts (256 rows) and turn them into exclusive prefix offsets
-    with a window over that TINY table; (3) broadcast the offsets
-    back and add a per-bucket ``row_number``. The corpus shuffles
-    once, on the bucket key; the global sort never materializes on
-    one node. Output order is encoded in ``global_pos``, so the
-    driver's order-insensitive hash still pins the exact permutation.
+    partition, so the total order is assigned by
+    ``ranking.global_ranked`` (range exchange on the key, partition-
+    local row numbers plus per-partition offsets); the global sort
+    never materializes on one node. Output order is encoded in
+    ``global_pos``, so the driver's order-insensitive hash still pins
+    the exact permutation.
     """
     key = F.md5(
         F.concat_ws(
             ":", F.lit(SHUFFLE_SEED), F.col("doc_id").cast("string")
         )
     )
-    keyed = docs.select(
-        "doc_id",
-        key.alias("shuffle_key"),
-    ).withColumn("bucket", F.substring("shuffle_key", 1, 2))
-    counts = keyed.groupBy("bucket").agg(F.count("*").alias("n"))
-    w = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = counts.select(
-        "bucket",
-        F.coalesce(F.sum("n").over(w), F.lit(0)).alias("offset"),
-    )
-    wb = Window.partitionBy("bucket").orderBy("shuffle_key", "doc_id")
-    return (
-        keyed.join(F.broadcast(offsets), "bucket")
-        .select(
-            "doc_id",
-            "shuffle_key",
-            (F.col("offset") + F.row_number().over(wb))
-            .cast("long")
-            .alias("global_pos"),
-        )
-    )
+    keyed = docs.select("doc_id", key.alias("shuffle_key"))
+    return _rank.global_ranked(
+        keyed, [F.col("shuffle_key"), F.col("doc_id")]
+    ).select("doc_id", "shuffle_key", F.col("_rk").alias("global_pos"))
 
 
 ORACLE_GLOBAL_SHUFFLE = f"""
@@ -610,10 +588,9 @@ def negative_samples(
     Output: userID, productID (negative), try_idx, label=0.
     """
     from .factorization import _ratings
-    from .ranking import global_ranked
 
     ratings = _ratings(t).localCheckpoint(eager=True)
-    prods = global_ranked(
+    prods = _rank.global_ranked(
         ratings.select("productID").distinct(), [F.col("productID")]
     ).select(
         "productID",
@@ -827,7 +804,6 @@ def pps_systematic_sample(
 
     Output per drawn part: l_partkey, size_cents, n_hits.
     """
-    from . import ranking as _rank
 
     sizes = lineitem.groupBy("l_partkey").agg(
         F.sum(

@@ -14,7 +14,6 @@ from big_data_instacart_market_basket_analysis_spark.operators import (
     ranking as _rank,
 )
 
-from .twosample import _cent_prefix
 
 
 
@@ -1581,8 +1580,8 @@ bootstrap_mean_ci AS (
 # quantile normalization (per-type -> pooled distribution alignment)
 # ---------------------------------------------------------------------------
 
-#: prefix-sum bucket width (cents) for the no-global-sort rank
-#: machinery shared with the KS/AUC computations.
+#: unused since the quantile-normalization ranks moved to
+#: ``ranking.value_prefix``; kept so the public name stays importable.
 QN_BUCKET_CENTS = 1000
 
 
@@ -1605,64 +1604,24 @@ def quantile_normalize(events: DataFrame) -> DataFrame:
     divides once at the rounded edge. Pooled rank→value lookup is an
     EQUI-join against the span-exploded pooled value grain (sequence
     per span — linear in rows, uniformly keyed); ranks come from
-    bucketed prefix-sums, so no data-sized single-partition window
-    exists anywhere.
+    ``ranking.value_prefix`` (per type, and pooled), so no data-sized
+    single-partition window exists anywhere.
 
     Output: (event_type, cents, c, norm_value).
     """
     cents = F.round(F.col("value") * 100, 0).cast("bigint")
     base = events.select("event_type", cents.alias("cents"))
     # (type, cents) grain with within-type start offsets
-    tv = base.groupBy("event_type", "cents").agg(
-        F.count("*").alias("c")
-    ).withColumn("bucket", F.expr(f"cents div {QN_BUCKET_CENTS}"))
-    tb = tv.groupBy("event_type", "bucket").agg(F.sum("c").alias("bc"))
-    wtb = (
-        Window.partitionBy("event_type")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    toff = tb.select(
-        "event_type",
-        "bucket",
-        F.coalesce(F.sum("bc").over(wtb), F.lit(0)).alias("off"),
-    )
-    wiv = (
-        Window.partitionBy("event_type", "bucket")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    tranked = (
-        tv.join(toff, ["event_type", "bucket"])
-        .withColumn(
-            "s", F.col("off") + F.coalesce(F.sum("c").over(wiv), F.lit(0))
-        )
-        .select("event_type", "cents", "c", "s")
-    )
+    tv = base.groupBy("event_type", "cents").agg(F.count("*").alias("c"))
+    tranked = _rank.value_prefix(
+        tv, ["c"], "cents", group_cols=("event_type",)
+    ).withColumnRenamed("_pre_c", "s")
     ng = base.groupBy("event_type").agg(F.count("*").alias("n_g"))
     ntot = base.agg(F.count("*").alias("n_pool"))
     # pooled value grain -> 0-based rank spans -> exploded rank table
-    pv = base.groupBy("cents").agg(F.count("*").alias("pc")).withColumn(
-        "bucket", F.expr(f"cents div {QN_BUCKET_CENTS}")
-    )
-    pb = pv.groupBy("bucket").agg(F.sum("pc").alias("bc"))
-    wpb = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    poff = pb.select(
-        "bucket", F.coalesce(F.sum("bc").over(wpb), F.lit(0)).alias("off")
-    )
-    wpv = (
-        Window.partitionBy("bucket")
-        .orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    pranked = (
-        pv.join(F.broadcast(poff), "bucket")
-        .withColumn(
-            "s0", F.col("off") + F.coalesce(F.sum("pc").over(wpv), F.lit(0))
-        )
-        .select("cents", "pc", "s0")
+    pv = base.groupBy("cents").agg(F.count("*").alias("pc"))
+    pranked = _rank.value_prefix(pv, ["pc"], "cents").withColumnRenamed(
+        "_pre_pc", "s0"
     )
     pool_ranks = pranked.select(
         F.col("cents").alias("pv"),
@@ -1865,8 +1824,8 @@ def median_ci(events: DataFrame) -> DataFrame:
     Cross-engine exactness: ranks are floor/ceil of the same IEEE
     expression on the exact integer n (identical in both engines);
     each order statistic is then "min value whose cumulative count
-    reaches the rank" on the cent grain — the KS bucketed-prefix-sum
-    shape, integers all the way.
+    reaches the rank" on the cent grain — the KS
+    ``ranking.value_prefix`` shape, integers all the way.
 
     Output (1 row): n, median_cents, ci_lo_cents, ci_hi_cents.
     """
@@ -1875,18 +1834,9 @@ def median_ci(events: DataFrame) -> DataFrame:
     ).select(
         F.round(F.col("value") * 100, 0).cast("bigint").alias("v")
     )
-    per_value = ev.groupBy("v").agg(F.count("*").alias("c")).withColumn(
-        "bucket", F.floor(F.col("v") / 100)
-    )
-    btot = per_value.groupBy("bucket").agg(F.sum("c").alias("bc"))
-    offsets = _rank.bucket_prefix_offsets(
-        btot, "bucket", ["bc"]
-    ).select("bucket", F.col("_off_bc").alias("off"))
-    win = Window.partitionBy("bucket").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = per_value.join(F.broadcast(offsets), "bucket").select(
-        "v", (F.col("off") + F.sum("c").over(win)).alias("cum")
+    per_value = ev.groupBy("v").agg(F.count("*").alias("c"))
+    cum = _rank.value_prefix(per_value, ["c"], "v", inclusive=True).select(
+        "v", F.col("_pre_c").alias("cum")
     )
     tot = ev.agg(F.count("*").alias("n"))
     nd = F.col("n").cast("double")
@@ -1980,7 +1930,7 @@ def quartile_skew(events: DataFrame) -> DataFrame:
         F.round(F.col("value") * 100, 0).cast("bigint").alias("c")
     )
     vg = ev.groupBy("c").agg(F.count("*").alias("cnt"))
-    cum = _cent_prefix(vg, ["cnt"], inclusive=True).select(
+    cum = _rank.value_prefix(vg, ["cnt"], "c", inclusive=True).select(
         "c", F.col("_pre_cnt").alias("cum")
     )
     tot = vg.agg(F.sum("cnt").alias("n"))

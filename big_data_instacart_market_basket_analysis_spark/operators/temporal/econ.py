@@ -127,8 +127,8 @@ def spend_gini(events: DataFrame) -> DataFrame:
     ranks over ascending spend. Ties are handled at the VALUE grain —
     for a tie group of c users with spend v at cumulative position p,
     Σ ranks = c·p + c(c+1)/2, all integral; the value-weighted rank
-    sum multiplies v once per group. Ranks come from the bucketed
-    prefix-sum (no data-sized global window).
+    sum multiplies v once per group. Ranks come from
+    ``ranking.value_prefix`` (no data-sized global window).
 
     Output (1 row): n_users, total_spend, gini (rounded 6).
     """
@@ -138,21 +138,8 @@ def spend_gini(events: DataFrame) -> DataFrame:
         .agg(F.round(F.sum("value"), 4).alias("v"))
     )
     per_value = per_user.groupBy("v").agg(F.count("*").alias("c"))
-    per_value = per_value.withColumn("bucket", F.floor("v"))
-    btot = per_value.groupBy("bucket").agg(F.sum("c").alias("bc"))
-    woff = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = btot.select(
-        "bucket",
-        F.coalesce(F.sum("bc").over(woff), F.lit(0)).alias("off"),
-    )
-    win = Window.partitionBy("bucket").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    ranked = per_value.join(F.broadcast(offsets), "bucket").withColumn(
-        "p",
-        F.col("off") + F.coalesce(F.sum("c").over(win), F.lit(0)),
+    ranked = _rank.value_prefix(per_value, ["c"], "v").withColumnRenamed(
+        "_pre_c", "p"
     )
     # per tie group: sum of ranks = c*p + c(c+1)/2 (ranks 1-based)
     agg = ranked.agg(

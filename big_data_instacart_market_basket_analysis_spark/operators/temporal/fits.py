@@ -15,7 +15,6 @@ from big_data_instacart_market_basket_analysis_spark.operators import (
 )
 
 from ...sources.loaders import local_rows
-from .twosample import _cent_prefix
 
 
 
@@ -1253,7 +1252,7 @@ def ks_exponential(events: DataFrame) -> DataFrame:
         .filter(F.col("g").isNotNull())
     )
     vg = gaps.groupBy("g").agg(F.count("*").alias("cnt"))
-    pre = _cent_prefix(vg, ["cnt"], value_col="g", inclusive=True)
+    pre = _rank.value_prefix(vg, ["cnt"], "g", inclusive=True)
     tot = vg.agg(
         F.sum("cnt").alias("n"),
         F.sum(F.col("g") * F.col("cnt")).alias("s"),

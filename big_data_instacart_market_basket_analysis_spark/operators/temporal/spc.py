@@ -1360,8 +1360,8 @@ HBOS_TOP_K = 20
 def hbos_outliers(events: DataFrame) -> DataFrame:
     """HBOS (Goldstein & Dengel 2012) over three bounded-grain event
     features — hour-of-day (24 bins), day-of-week (7), and the
-    sign-safe value octave (<= ~48 bins, the `_cent_prefix` bucket
-    law): score = sum_f -ln p_f(x), i.e. an event is anomalous when it
+    sign-safe value octave (<= ~48 bins, the `ranking.value_prefix`
+    bucket law): score = sum_f -ln p_f(x), i.e. an event is anomalous when it
     sits in RARE bins of several independent histograms at once. This
     is the histogram sibling of the shipped outlier family (MAD =
     per-key deviation, kNN/density = geometry, DBSCAN noise =

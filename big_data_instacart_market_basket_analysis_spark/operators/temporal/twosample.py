@@ -31,10 +31,9 @@ def ks_drift_test(events: DataFrame) -> DataFrame:
     choices; KS is distribution-free and exact).
 
     D = sup |F1 - F2| is evaluated at every distinct value via
-    cumulative counts. The cumulative sum is distributed with the
-    bucketed-prefix-sum trick (per-bucket totals -> tiny offset
-    table -> within-bucket window), so no global sort and no
-    corpus-wide single-partition window exists; the supremum itself
+    cumulative counts from ``ranking.value_prefix``, so no global
+    sort and no corpus-wide single-partition window exists; the
+    supremum itself
     is computed on INTEGERS (|c1*n2 - c2*n1|, max'd exactly) and
     divides by n1*n2 only at the output edge.
 
@@ -55,35 +54,17 @@ def ks_drift_test(events: DataFrame) -> DataFrame:
     per_value = sided.groupBy("value").agg(
         F.sum(F.when(F.col("first_half"), 1).otherwise(0)).alias("c1"),
         F.sum(F.when(F.col("first_half"), 0).otherwise(1)).alias("c2"),
-    ).withColumn("bucket", F.floor("value"))
-    btot = per_value.groupBy("bucket").agg(
-        F.sum("c1").alias("b1"), F.sum("c2").alias("b2")
-    )
-    woff = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = btot.select(
-        "bucket",
-        F.coalesce(F.sum("b1").over(woff), F.lit(0)).alias("off1"),
-        F.coalesce(F.sum("b2").over(woff), F.lit(0)).alias("off2"),
-    )
-    win = Window.partitionBy("bucket").orderBy("value").rowsBetween(
-        Window.unboundedPreceding, 0
     )
     totals = per_value.agg(
         F.sum("c1").alias("n1"), F.sum("c2").alias("n2")
     )
     cum = (
-        per_value.join(F.broadcast(offsets), "bucket")
-        .select(
-            "value",
-            (F.col("off1") + F.sum("c1").over(win)).alias("cum1"),
-            (F.col("off2") + F.sum("c2").over(win)).alias("cum2"),
-        )
+        _rank.value_prefix(per_value, ["c1", "c2"], "value", inclusive=True)
         .crossJoin(F.broadcast(totals))
         .select(
             F.abs(
-                F.col("cum1") * F.col("n2") - F.col("cum2") * F.col("n1")
+                F.col("_pre_c1") * F.col("n2")
+                - F.col("_pre_c2") * F.col("n1")
             ).alias("num"),
             "n1",
             "n2",
@@ -187,17 +168,16 @@ def wasserstein_drift(events: DataFrame) -> DataFrame:
 
     Exactness: values are exact BIGINT cents; at every distinct cent
     value the CDF gap numerator D = |cum1*n2 - cum2*n1| is an exact
-    integer (the KS trick) and the integral term D * gap_to_next_cent
-    is carried in DECIMAL(38,0); the single division by n1*n2*100
-    happens once at the output edge (round 6, dollars).
+    integer (the KS trick). The integral sum_i D(v_i) * (v_{i+1} - v_i)
+    telescopes to sum_v v * (D_below(v) - D_upto(v)), D_below from
+    the cumulative counts strictly below v and D_upto from those up to
+    v (D is 0 below the first value and at the last), so no value
+    needs its successor; the terms are carried in DECIMAL(38,0) and
+    the single division by n1*n2*100 happens once at the output edge
+    (round 6, dollars).
 
     Scale: same distributed shape as `ks_drift_test` — per-value cum
-    counts via the bucketed prefix sum (per-bucket totals -> tiny
-    offset table -> within-bucket window, no global sort); the gap to
-    the next distinct value is a within-bucket lead stitched across
-    bucket boundaries by a bucket-grain join against the next
-    non-empty bucket's min (offset-table-sized work). The last value
-    contributes nothing (both CDFs are 1 there, D = 0).
+    counts from ``ranking.value_prefix``, no global sort.
 
     Output (1 row): n1, n2, n_values, w1_dollars.
     """
@@ -217,59 +197,36 @@ def wasserstein_drift(events: DataFrame) -> DataFrame:
     per_value = sided.groupBy("v").agg(
         F.sum(F.when(F.col("first_half"), 1).otherwise(0)).alias("c1"),
         F.sum(F.when(F.col("first_half"), 0).otherwise(1)).alias("c2"),
-    ).withColumn("bucket", F.floor(F.col("v") / 100))
-    btot = per_value.groupBy("bucket").agg(
-        F.sum("c1").alias("b1"),
-        F.sum("c2").alias("b2"),
-        F.min("v").alias("bmin"),
     )
-    woff = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    wnext = Window.orderBy("bucket").rowsBetween(1, 1)
-    offsets = btot.select(
-        "bucket",
-        F.coalesce(F.sum("b1").over(woff), F.lit(0)).alias("off1"),
-        F.coalesce(F.sum("b2").over(woff), F.lit(0)).alias("off2"),
-        F.first("bmin").over(wnext).alias("next_bmin"),
-    )
-    win = Window.partitionBy("bucket").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    wlead = Window.partitionBy("bucket").orderBy("v").rowsBetween(1, 1)
     totals = per_value.agg(
         F.sum("c1").alias("n1"), F.sum("c2").alias("n2")
     )
+    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+
+    def gap(cum1, cum2):
+        return dec(F.abs(cum1 * F.col("n2") - cum2 * F.col("n1")))
+
+    below1, below2 = F.col("_pre_c1"), F.col("_pre_c2")
     cum = (
-        per_value.join(F.broadcast(offsets), "bucket")
-        .select(
-            "v",
-            (F.col("off1") + F.sum("c1").over(win)).alias("cum1"),
-            (F.col("off2") + F.sum("c2").over(win)).alias("cum2"),
-            F.coalesce(
-                F.first("v").over(wlead), F.col("next_bmin")
-            ).alias("v_next"),
-        )
-        .filter(F.col("v_next").isNotNull())
+        _rank.value_prefix(per_value, ["c1", "c2"], "v")
         .crossJoin(F.broadcast(totals))
         .select(
             "n1",
             "n2",
             (
-                F.abs(
-                    F.col("cum1") * F.col("n2")
-                    - F.col("cum2") * F.col("n1")
-                ).cast("decimal(38,0)")
-                * (F.col("v_next") - F.col("v")).cast("decimal(38,0)")
+                dec(F.col("v"))
+                * (
+                    gap(below1, below2)
+                    - gap(below1 + F.col("c1"), below2 + F.col("c2"))
+                )
             ).alias("term"),
         )
     )
+    # one distinct value spans no gap: no row, as the oracle's lead
     return (
         cum.groupBy("n1", "n2")
-        .agg(
-            (F.count("*") + 1).alias("n_values"),
-            F.sum("term").alias("s"),
-        )
+        .agg(F.count("*").alias("n_values"), F.sum("term").alias("s"))
+        .filter(F.col("n_values") > 1)
         .select(
             "n1",
             "n2",
@@ -340,8 +297,8 @@ def mannwhitney_test(events: DataFrame) -> DataFrame:
     tie-count c is the integer 2p + c + 1, so the doubled rank sum
     2R1 = sum(c1 * (2p + c + 1)) and 2U1 = 2R1 - n1(n1+1) stay
     integral until the z-score's final division (tie-corrected
-    variance). Cumulative positions come from the same bucketed
-    prefix-sum as the KS test — no global sort.
+    variance). Cumulative positions come from the same
+    ``ranking.value_prefix`` as the KS test — no global sort.
 
     Output (1 row): n1, n2, u1, z (rounded 6), significant (|z| >
     1.96).
@@ -357,30 +314,9 @@ def mannwhitney_test(events: DataFrame) -> DataFrame:
     per_value = per_user.groupBy("v").agg(
         F.sum(F.when(F.col("is_a"), 1).otherwise(0)).alias("c1"),
         F.sum(F.when(F.col("is_a"), 0).otherwise(1)).alias("c2"),
-    ).withColumn("c", F.col("c1") + F.col("c2")).withColumn(
-        "bucket", F.floor("v")
-    )
-    btot = per_value.groupBy("bucket").agg(F.sum("c").alias("bc"))
-    woff = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = btot.select(
-        "bucket",
-        F.coalesce(F.sum("bc").over(woff), F.lit(0)).alias("off"),
-    )
-    win = Window.partitionBy("bucket").orderBy("v").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    ranked = (
-        per_value.join(F.broadcast(offsets), "bucket")
-        .select(
-            "c1",
-            "c2",
-            "c",
-            (
-                F.col("off") + F.coalesce(F.sum("c").over(win), F.lit(0))
-            ).alias("p"),
-        )
+    ).withColumn("c", F.col("c1") + F.col("c2"))
+    ranked = _rank.value_prefix(per_value, ["c"], "v").withColumnRenamed(
+        "_pre_c", "p"
     )
     agg = ranked.agg(
         F.sum("c1").alias("n1"),
@@ -991,7 +927,8 @@ conversion_ztest AS (
 # Spearman rank correlation (engagement vs spend)
 # ---------------------------------------------------------------------------
 
-#: bucket width (cents) for the spend-side rank prefix-sum buckets.
+#: unused since the spend-side ranks moved to ``ranking.value_prefix``;
+#: kept so the public name stays importable.
 SPEARMAN_Y_BUCKET = 100_000
 
 
@@ -1010,8 +947,8 @@ def spearman_corr(events: DataFrame) -> DataFrame:
     rho is then Pearson on the doubled ranks — the doubling cancels —
     so all five moment sums are BIGINTs and both engines agree
     bit-for-bit until the one rounded division. Cumulative positions
-    come from bucketed prefix-sums over the DISTINCT-value grain (no
-    global sort); the value→rank maps join back to users on value
+    come from ``ranking.value_prefix`` over the DISTINCT-value grain
+    (no global sort); the value→rank maps join back to users on value
     equality.
 
     At 100 TB the doubled-rank products approach 4N^3 — past ~1e9
@@ -1032,41 +969,14 @@ def spearman_corr(events: DataFrame) -> DataFrame:
         ).alias("y"),
     )
 
-    def _doubled_ranks(col: str, bucket_div: int, out: str) -> DataFrame:
-        per_v = (
-            per_user.groupBy(col)
-            .agg(F.count("*").alias("c"))
-            .withColumn("bucket", F.expr(f"{col} DIV {bucket_div}"))
-        )
-        btot = per_v.groupBy("bucket").agg(F.sum("c").alias("bc"))
-        woff = Window.orderBy("bucket").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offsets = btot.select(
-            "bucket",
-            F.coalesce(F.sum("bc").over(woff), F.lit(0)).alias("off"),
-        )
-        win = Window.partitionBy("bucket").orderBy(col).rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        return (
-            per_v.join(F.broadcast(offsets), "bucket")
-            .select(
-                col,
-                (
-                    F.lit(2)
-                    * (
-                        F.col("off")
-                        + F.coalesce(F.sum("c").over(win), F.lit(0))
-                    )
-                    + F.col("c")
-                    + 1
-                ).alias(out),
-            )
+    def _doubled_ranks(col: str, out: str) -> DataFrame:
+        per_v = per_user.groupBy(col).agg(F.count("*").alias("c"))
+        return _rank.value_prefix(per_v, ["c"], col).select(
+            col, (F.lit(2) * F.col("_pre_c") + F.col("c") + 1).alias(out)
         )
 
-    paired = per_user.join(_doubled_ranks("x", 1, "dx"), "x").join(
-        _doubled_ranks("y", SPEARMAN_Y_BUCKET, "dy"), "y"
+    paired = per_user.join(_doubled_ranks("x", "dx"), "x").join(
+        _doubled_ranks("y", "dy"), "y"
     )
     m = paired.agg(
         F.count("*").alias("n"),
@@ -1590,7 +1500,7 @@ def wilcoxon_signed_rank(events: DataFrame) -> DataFrame:
     Mann-Whitney: pairing removes user-level variance, so it detects
     temporal shifts whales would otherwise drown out. Zero
     differences drop (the standard convention); |d| midranks come
-    from the doubled-rank prefix-sum machinery, W+ = Σ ranks of
+    from the doubled-rank ``ranking.value_prefix`` machinery, W+ = Σ ranks of
     positive diffs stays integral (doubled), and z uses the
     tie-corrected normal approximation.
 
@@ -1619,27 +1529,9 @@ def wilcoxon_signed_rank(events: DataFrame) -> DataFrame:
     per_v = per_user.groupBy(F.abs("d").alias("ad")).agg(
         F.sum(F.when(F.col("d") > 0, 1).otherwise(0)).alias("cp"),
         F.sum(F.when(F.col("d") < 0, 1).otherwise(0)).alias("cn"),
-    ).withColumn("c", F.col("cp") + F.col("cn")).withColumn(
-        "bucket", F.expr("ad DIV 100000")
-    )
-    btot = per_v.groupBy("bucket").agg(F.sum("c").alias("bc"))
-    woff = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = btot.select(
-        "bucket",
-        F.coalesce(F.sum("bc").over(woff), F.lit(0)).alias("off"),
-    )
-    win = Window.partitionBy("bucket").orderBy("ad").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    ranked = per_v.join(F.broadcast(offsets), "bucket").select(
-        "cp",
-        "cn",
-        "c",
-        (
-            F.col("off") + F.coalesce(F.sum("c").over(win), F.lit(0))
-        ).alias("p"),
+    ).withColumn("c", F.col("cp") + F.col("cn"))
+    ranked = _rank.value_prefix(per_v, ["c"], "ad").withColumnRenamed(
+        "_pre_c", "p"
     )
     agg = ranked.agg(
         F.sum(F.col("cp") + F.col("cn")).alias("n"),
@@ -1811,93 +1703,6 @@ mcnemar_test AS (
 
 
 # ---------------------------------------------------------------------------
-# shared octave-bucket prefix kernel for the cent-grain rank family
-# ---------------------------------------------------------------------------
-
-
-def _cent_prefix(
-    vg: DataFrame,
-    sum_cols: list,
-    value_col: str = "c",
-    inclusive: bool = False,
-    group_cols: tuple = (),
-) -> DataFrame:
-    """Octave-bucket prefix sums over a value-grain table with ZERO
-    global windows — the one home for the kernel the rank-test
-    family (Kruskal-Wallis, Mood, Ansari-Bradley, quartiles, energy
-    distance) previously repeated inline (round-6 review
-    consolidation). Sign-safe floor(log2) buckets (data-independent
-    <= ~48 octaves at any value range) get exclusive offsets via
-    ``ranking.bucket_prefix_offsets``; within-octave prefixes ride a
-    PARTITIONED window. Returns the input columns plus ``_pre_{col}``
-    = sum of col over values strictly BELOW (or up to, when
-    ``inclusive``) this row's value.
-
-    With ``group_cols`` the prefixes run INDEPENDENTLY per group
-    (Brown-Forsythe's per-type medians): bucket totals and offsets
-    are keyed by (group, bucket) — offsets ride a bucket-grain
-    window partitioned by group (<= ~48 rows per group), the
-    within-octave window partitions by (group, bucket). The
-    ungrouped path is byte-identical to before (round-7 review:
-    don't fork the kernel).
-
-    Callers must drop NULL values upstream: a NULL value key would
-    fall out of the bucket equi-join and silently vanish from every
-    prefix while the DuckDB oracles' plain windows still count it
-    (review finding) — the query-level IS NOT NULL filters keep both
-    engines counting the same rows.
-    """
-    v = F.col(value_col)
-    bkt = (
-        F.when(v >= 0, F.floor(F.log2(v + 1)))
-        .otherwise(-1 - F.floor(F.log2(-v)))
-        .cast("bigint")
-    )
-    vgb = vg.select("*", bkt.alias("bucket"))
-    gcols = list(group_cols)
-    btot = vgb.groupBy(*gcols, "bucket").agg(
-        *[F.sum(c).alias(c) for c in sum_cols]
-    )
-    if gcols:
-        woff = (
-            Window.partitionBy(*gcols)
-            .orderBy("bucket")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offs = btot.select(
-            *gcols,
-            "bucket",
-            *[
-                F.coalesce(F.sum(c).over(woff), F.lit(0)).alias(
-                    f"_off_{c}"
-                )
-                for c in sum_cols
-            ],
-        )
-    else:
-        offs = _rank.bucket_prefix_offsets(btot, "bucket", sum_cols)
-    w_in = (
-        Window.partitionBy(*gcols, "bucket")
-        .orderBy(value_col)
-        .rowsBetween(
-            Window.unboundedPreceding, 0 if inclusive else -1
-        )
-    )
-    out = [
-        (
-            F.col(f"_off_{c}")
-            + F.coalesce(F.sum(c).over(w_in), F.lit(0))
-        ).alias(f"_pre_{c}")
-        for c in sum_cols
-    ]
-    return vgb.join(F.broadcast(offs), gcols + ["bucket"]).select(
-        *vg.columns, *out
-    )
-
-
-
-
-# ---------------------------------------------------------------------------
 # Kruskal-Wallis H test (k-group rank test with exact tie handling)
 # ---------------------------------------------------------------------------
 
@@ -1915,12 +1720,11 @@ def kruskal_wallis(events: DataFrame) -> DataFrame:
 
     EXACT INTEGER ranks with zero global windows: values collapse to
     cent-grain (value, count) rows; the exclusive prefix count below
-    each distinct value comes from the octave-bucket rank kernel —
-    floor(log2) buckets (data-independent <= ~48 octaves at any
-    scale) get exclusive offsets via ``ranking.bucket_prefix_offsets``
-    (packed-array prefix sums, no WindowExec) and within-octave
-    prefixes via a PARTITIONED window over the cent-grain rows, the
-    same shape the verdict blessed for ``nb_pr_curve``. The doubled
+    each distinct value comes from ``ranking.value_prefix`` —
+    octave buckets (data-independent at any scale) get exclusive
+    offsets from packed-array prefix sums (no WindowExec) and
+    within-octave prefixes a PARTITIONED window over the cent-grain
+    rows. The doubled
     mid-rank 2r(v) = 2*pre(v) + cnt(v) + 1 is integer, so each
     group's doubled rank-sum R2_g = sum n_gv * 2r(v) is an exact
     DECIMAL(38,0) (HUGEINT in the oracle), as are the tie term
@@ -1941,7 +1745,7 @@ def kruskal_wallis(events: DataFrame) -> DataFrame:
         F.count("*").alias("ntc")
     )
     vg = tg.groupBy("c").agg(F.sum("ntc").alias("cnt"))
-    pre = _cent_prefix(vg, ["cnt"]).select(
+    pre = _rank.value_prefix(vg, ["cnt"], "c").select(
         "c", "cnt", F.col("_pre_cnt").alias("pre")
     )
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
@@ -2516,7 +2320,7 @@ def energy_distance(events: DataFrame) -> DataFrame:
     )
     cols = ["cx", "cy", "sx", "sy"]
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    pre = _cent_prefix(vg, cols, value_col="v").select(
+    pre = _rank.value_prefix(vg, cols, "v").select(
         "v",
         "cx",
         "cy",
@@ -2691,7 +2495,7 @@ def mood_median_test(events: DataFrame) -> DataFrame:
         F.round(F.col("value") * 100, 0).cast("bigint").alias("c"),
     )
     vg = cg.groupBy("c").agg(F.count("*").alias("cnt"))
-    cum = _cent_prefix(vg, ["cnt"], inclusive=True).select(
+    cum = _rank.value_prefix(vg, ["cnt"], "c", inclusive=True).select(
         "c", F.col("_pre_cnt").alias("cum")
     )
     tot = vg.agg(F.sum("cnt").alias("n"))
@@ -2961,7 +2765,7 @@ def ansari_bradley(events: DataFrame) -> DataFrame:
         F.sum(F.when(F.col("is_x"), 1).otherwise(0)).alias("cx"),
         F.count("*").alias("cnt"),
     )
-    pre = _cent_prefix(vg, ["cnt"]).select(
+    pre = _rank.value_prefix(vg, ["cnt"], "c").select(
         "c", "cx", "cnt", F.col("_pre_cnt").alias("pre")
     )
     tot = vg.agg(
@@ -3253,8 +3057,8 @@ def brown_forsythe(events: DataFrame) -> DataFrame:
         F.round(F.col("value") * 100, 0).cast("bigint").alias("c"),
     )
     vg = cg.groupBy("event_type", "c").agg(F.count("*").alias("cnt"))
-    cum = _cent_prefix(
-        vg, ["cnt"], inclusive=True, group_cols=("event_type",)
+    cum = _rank.value_prefix(
+        vg, ["cnt"], "c", inclusive=True, group_cols=("event_type",)
     ).select("event_type", "c", F.col("_pre_cnt").alias("cum"))
     ng = vg.groupBy("event_type").agg(F.sum("cnt").alias("ng"))
     med = (
@@ -3396,7 +3200,7 @@ def cliffs_delta(events: DataFrame) -> DataFrame:
     the Mann-Whitney z (significance, not magnitude).
 
     All three pair counts are EXACT integers from one pass of the
-    octave-bucket prefix kernel (``_cent_prefix``): on the cent
+    octave-bucket prefix kernel (``ranking.value_prefix``): on the cent
     grain, #(x>y) = sum c1(v) * (#y strictly below v), ties =
     sum c1(v)*c2(v), #(x<y) = n1*n2 - gt - ties — no pair join, no
     global window. Only the final delta divides, rounded 6 dp; the
@@ -3416,7 +3220,7 @@ def cliffs_delta(events: DataFrame) -> DataFrame:
         F.sum(F.when(F.col("is_x"), 1).otherwise(0)).alias("c1"),
         F.sum(F.when(F.col("is_x"), 0).otherwise(1)).alias("c2"),
     )
-    pre = _cent_prefix(vg, ["c2"], inclusive=False)
+    pre = _rank.value_prefix(vg, ["c2"], "c", inclusive=False)
     agg = pre.agg(
         F.sum("c1").alias("n1"),
         F.sum("c2").alias("n2"),
@@ -4000,7 +3804,7 @@ def cramer_von_mises(events: DataFrame) -> DataFrame:
         F.sum(F.when(F.col("is_x"), 1).otherwise(0)).alias("a"),
         F.sum(F.when(F.col("is_x"), 0).otherwise(1)).alias("b"),
     )
-    pre = _cent_prefix(vg, ["a", "b"], inclusive=True)
+    pre = _rank.value_prefix(vg, ["a", "b"], "c", inclusive=True)
     tot = vg.agg(F.sum("a").alias("n"), F.sum("b").alias("m"))
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     j = pre.crossJoin(F.broadcast(tot))
@@ -4135,7 +3939,7 @@ def anderson_darling_2s(events: DataFrame) -> DataFrame:
         F.sum(F.when(F.col("is_x"), 1).otherwise(0)).alias("a"),
         F.sum(F.when(F.col("is_x"), 0).otherwise(1)).alias("b"),
     ).withColumn("z", F.col("a") + F.col("b"))
-    pre = _cent_prefix(vg, ["a", "z"], inclusive=True)
+    pre = _rank.value_prefix(vg, ["a", "z"], "c", inclusive=True)
     tot = vg.agg(
         F.sum("a").alias("n"),
         F.sum("b").alias("m"),
@@ -4369,10 +4173,10 @@ def yuen_trimmed_test(events: DataFrame) -> DataFrame:
     stay in dollars.
 
     Exact order statistics on the cent grain via the octave-bucket
-    prefix kernel (``_cent_prefix``, group_cols): per group, g = n DIV
-    5, the winsorizing values L (rank g+1) and U (rank n-g), and the
-    partial-tail sums make every trimmed/winsorized moment an exact
-    BIGINT — sum of g smallest = prefix-sum below L plus
+    prefix kernel (``ranking.value_prefix``, group_cols): per group,
+    g = n DIV 5, the winsorizing values L (rank g+1) and U (rank
+    n-g), and the partial-tail sums make every trimmed/winsorized
+    moment an exact BIGINT — sum of g smallest = prefix-sum below L plus
     (g - count-below-L) copies of L, symmetric above. Only the final
     t/df chain divides: trimmed mean mt = trimsum/h with h = n - 2g,
     winsorized variance s2w = (wsum2 - wsum^2/n)/(n-1), d = s2w (n-1)
@@ -4402,7 +4206,9 @@ def yuen_trimmed_test(events: DataFrame) -> DataFrame:
         (F.col("c") * F.col("cnt")).alias("s"),
         (F.col("c") * F.col("c") * F.col("cnt")).alias("s2"),
     )
-    pre = _cent_prefix(vg, ["cnt", "s", "s2"], group_cols=("grp",))
+    pre = _rank.value_prefix(
+        vg, ["cnt", "s", "s2"], "c", group_cols=("grp",)
+    )
     pre2 = pre.select(
         "grp",
         "c",

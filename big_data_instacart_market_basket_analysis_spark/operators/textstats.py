@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from ..sources.loaders import local_rows
 from ._staging import spread as _spread
 from ._staging import stage as _stage
-from .ranking import bucket_prefix_offsets
+from .ranking import bucket_prefix_offsets, global_ranked, value_prefix
 
 # Marker (stopword) lists per language — n-gram-free heuristic language
 # ID by marker-token hit counts. Public common-word lists, truncated.
@@ -2593,26 +2593,12 @@ def nb_quality_auc(docs: DataFrame) -> DataFrame:
     per_value = scored.groupBy("log_odds").agg(
         F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("cp"),
         F.sum(F.when(F.col("keep"), 0).otherwise(1)).alias("cn"),
-    ).withColumn("c", F.col("cp") + F.col("cn")).withColumn(
-        "bucket", F.floor("log_odds")
-    )
-    # bucketed prefix-sum (the KS/Mann-Whitney rank machinery) — a
-    # bare ORDER BY window here would be a data-sized single-partition
+    ).withColumn("c", F.col("cp") + F.col("cn"))
+    # value_prefix (the KS/Mann-Whitney rank machinery) — a bare
+    # ORDER BY window here would be a data-sized single-partition
     # exchange, the exact anti-pattern plan_lint flags
-    btot = per_value.groupBy("bucket").agg(F.sum("c").alias("bc"))
-    woff = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = btot.select(
-        "bucket",
-        F.coalesce(F.sum("bc").over(woff), F.lit(0)).alias("off"),
-    )
-    win = Window.partitionBy("bucket").orderBy("log_odds").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    ranked = per_value.join(F.broadcast(offsets), "bucket").withColumn(
-        "p",
-        F.col("off") + F.coalesce(F.sum("c").over(win), F.lit(0)),
+    ranked = value_prefix(per_value, ["c"], "log_odds").withColumnRenamed(
+        "_pre_c", "p"
     )
     agg = ranked.agg(
         F.sum("cp").alias("n_pos"),
@@ -3514,11 +3500,9 @@ def nb_pr_curve(docs: DataFrame) -> DataFrame:
     Counts are exact; precision/recall/F1 are ratios of integral
     cumulative sums rounded at the edge. Distinct scores are 6-dp
     NB log-odds — near-unique per document, so "distinct scores" is
-    corpus-sized: the descending cumulative therefore uses the same
-    floor(log_odds) bucketed prefix-sum as ``nb_quality_auc`` /
-    ``nb_gains_table`` (bucket-grain offsets window over the handful
-    of integer buckets + a PARTITIONED within-bucket window), never
-    a corpus-sized single-partition sort.
+    corpus-sized: the descending cumulative is therefore the
+    ``ranking.value_prefix`` of the negated score (as in
+    ``nb_quality_auc``), never a corpus-sized single-partition sort.
     Output: threshold, n_pred_pos, tp, precision, recall, f1.
     """
     return _nb_pr_curve_full(docs).select(
@@ -3535,33 +3519,18 @@ def _nb_pr_curve_full(docs: DataFrame) -> DataFrame:
         F.col("keep").cast("int").alias("y"),
     )
     per_t = scored.groupBy("t").agg(
-        F.count("*").alias("n"), F.sum("y").alias("pos")
-    ).withColumn("bucket", F.floor("t"))
-    # bucketed prefix-sum, descending: bucket-grain offsets (bounded
-    # by the integer log-odds range, prefix-summed via the packed-
-    # array kernel — zero WindowExec) + within-bucket PARTITIONED
-    # cumulative — a bare ORDER BY t DESC window here would be a
-    # corpus-sized Exchange SinglePartition (plan_lint global-window)
-    btot = per_t.groupBy("bucket").agg(
-        F.sum("n").alias("bn"), F.sum("pos").alias("bpos")
+        F.count("*").alias("n"),
+        F.sum("y").alias("pos"),
+        (-F.col("t")).alias("neg_t"),
     )
-    offsets = bucket_prefix_offsets(
-        btot, "bucket", ["bn", "bpos"], descending=True
-    ).select(
-        "bucket",
-        F.col("_off_bn").alias("off_n"),
-        F.col("_off_bpos").alias("off_pos"),
-    )
-    win = (
-        Window.partitionBy("bucket")
-        .orderBy(F.desc("t"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    # descending cumulative = ascending prefix of -t; a bare ORDER BY
+    # t DESC window here would be a corpus-sized Exchange
+    # SinglePartition (plan_lint global-window)
     totals = scored.agg(F.sum("y").alias("n_pos"))
     return (
-        per_t.join(F.broadcast(offsets), "bucket")
-        .withColumn("n_pred_pos", F.col("off_n") + F.sum("n").over(win))
-        .withColumn("tp", F.col("off_pos") + F.sum("pos").over(win))
+        value_prefix(per_t, ["n", "pos"], "neg_t", inclusive=True)
+        .withColumnRenamed("_pre_n", "n_pred_pos")
+        .withColumnRenamed("_pre_pos", "tp")
         .crossJoin(F.broadcast(totals))
         .select(
             F.col("t").alias("threshold"),
@@ -3782,56 +3751,35 @@ def nb_gains_table(docs: DataFrame) -> DataFrame:
     "how much of the good data do the top-k% scores buy" readout that
     sizes a quality-filter threshold before a 100 TB scoring run.
 
-    Ranks come from the bucketed prefix-sum (floor(log_odds) buckets,
-    descending offsets) — the same no-global-sort machinery as the
-    AUC/KS rank computations; deciles, counts, and every numerator
-    are integers, with division only at the rounded edge. The final
-    cumulative window runs over exactly 10 aggregated rows.
+    Ranks and the running count of positives come from
+    ``ranking.global_ranked`` (no global sort); a decile's cumulative
+    positives are its largest running count. Deciles, counts, and
+    every numerator are integers, with division only at the rounded
+    edge.
 
     Output: decile (0 = best-scored), n, n_pos, pos_rate, lift,
     cum_gains.
     """
-    scored = nb_quality_scores(docs).select("doc_id", "log_odds", "keep")
-    per = scored.withColumn("bucket", F.floor("log_odds"))
-    btot = per.groupBy("bucket").agg(F.count("*").alias("bc"))
-    woff = Window.orderBy(F.desc("bucket")).rowsBetween(
-        Window.unboundedPreceding, -1
+    scored = nb_quality_scores(docs).select(
+        "doc_id",
+        "log_odds",
+        F.when(F.col("keep"), 1).otherwise(0).alias("pos"),
     )
-    offsets = btot.select(
-        "bucket",
-        F.coalesce(F.sum("bc").over(woff), F.lit(0)).alias("off"),
+    ranked = global_ranked(
+        scored, [F.desc("log_odds"), F.col("doc_id")], ["pos"]
     )
-    win = (
-        Window.partitionBy("bucket")
-        .orderBy(F.desc("log_odds"), "doc_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ranked = (
-        per.join(F.broadcast(offsets), "bucket")
-        .withColumn(
-            "r",
-            F.col("off")
-            + F.coalesce(F.count("*").over(win), F.lit(0))
-            + 1,
-        )
-    )
-    tot = scored.agg(
-        F.count("*").alias("n_all"),
-        F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("tp"),
-    )
+    tot = scored.agg(F.count("*").alias("n_all"), F.sum("pos").alias("tp"))
     dec = (
         ranked.crossJoin(F.broadcast(tot))
-        .withColumn("decile", F.expr("((r - 1) * 10) div n_all"))
+        .withColumn("decile", F.expr("((_rk - 1) * 10) div n_all"))
         .groupBy("decile")
         .agg(
             F.count("*").alias("n"),
-            F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("n_pos"),
+            F.sum("pos").alias("n_pos"),
+            F.max("_run_pos").alias("cum_pos"),
             F.first("n_all").alias("n_all"),
             F.first("tp").alias("tp"),
         )
-    )
-    wcum = Window.orderBy("decile").rowsBetween(
-        Window.unboundedPreceding, 0
     )
     return dec.select(
         "decile",
@@ -3845,9 +3793,9 @@ def nb_gains_table(docs: DataFrame) -> DataFrame:
             / (F.col("n") * F.col("tp")).cast("double"),
             6,
         ).alias("lift"),
-        F.round(
-            F.sum("n_pos").over(wcum) / F.col("tp").cast("double"), 6
-        ).alias("cum_gains"),
+        F.round(F.col("cum_pos") / F.col("tp").cast("double"), 6).alias(
+            "cum_gains"
+        ),
     )
 
 

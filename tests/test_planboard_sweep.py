@@ -23,7 +23,8 @@ from tests.conftest import SF_SMOKE
 #: it), a rise means a new unbounded window snuck in (fix it). Every
 #: grain here is data-independent or calendar-bounded:
 #:   bucket    — floor()/width-bucket tables: integer score range,
-#:               never row count (the nb_quality_auc machinery)
+#:               never row count (the prefix sums and ranks run
+#:               through ranking.py; see test_one_value_prefix_kernel)
 #:   day       — calendar days in the fixture window; grows with time,
 #:               not data volume (same for hour, t_days event ages)
 #:   lag       — fixed max-lag constant (ACF grid <= 14 rows)
@@ -32,12 +33,7 @@ from tests.conftest import SF_SMOKE
 #:   test      — one row per hypothesis = distinct event_type values
 #:   partstats — one row per shuffle partition (spark conf, not data)
 GLOBAL_WINDOW_WHITELIST: dict[str, tuple[int, str]] = {
-    "dedup_detector_matrix": (4, "bucket"),
-    "dedup_sorted_neighborhood": (2, "bucket"),
     "delta_advisor": (4, "bucket"),
-    "docs_global_shuffle": (1, "bucket"),
-    "docs_systematic_sample": (1, "bucket (inherits global_shuffle's "
-                                  "256-row offsets window)"),
     "events_acf": (2, "lag grid + day"),
     "events_ar2_forecast": (2, "day"),
     "events_durbin_watson": (1, "day (lag-1 diff over the daily "
@@ -50,7 +46,6 @@ GLOBAL_WINDOW_WHITELIST: dict[str, tuple[int, str]] = {
                         "gapfilled calendar; the first exchange below "
                         "it is the 1-row span agg the calendar "
                         "generator explodes from)"),
-    "events_gini": (1, "bucket"),
     "events_granger": (1, "day"),
     "events_perm_entropy": (1, "day (lead-2 ordinal patterns over the "
                                "gap-filled calendar)"),
@@ -58,17 +53,13 @@ GLOBAL_WINDOW_WHITELIST: dict[str, tuple[int, str]] = {
     # window runs inside the staged (localCheckpointed) template table,
     # so the FINAL plan the sweep sees carries zero global windows.
     "events_km_survival": (2, "t_days (event-age days)"),
-    "events_ks_drift": (1, "bucket"),
-    "events_wasserstein": (1, "bucket"),
     "events_logrank": (1, "t_days"),
-    "events_mannwhitney": (1, "bucket"),
     "events_matrix_profile": (7, "day (window-arm leads)"),
     "events_multi_test_bh": (3, "test (one row per event_type)"),
     "events_nelson_aalen": (2, "t_days"),
     "events_pacf": (1, "day"),
     "events_peaks": (1, "day"),
     "events_qini": (1, "decile"),
-    "events_quantile_norm": (2, "bucket"),
     "events_revenue_gini": (1, "decile"),
     "events_rmst": (3, "t_days"),
     "events_robust_trend": (2, "day"),
@@ -76,16 +67,12 @@ GLOBAL_WINDOW_WHITELIST: dict[str, tuple[int, str]] = {
     "events_seasonality": (2, "day — inherits stl_decompose's dense "
                               "day-grid MA window + dow re-join"),
     "events_skew_report": (1, "partstats"),
-    "events_spearman": (2, "bucket"),
     "events_stl_decompose": (2, "day"),
-    "events_wilcoxon": (1, "bucket"),
     "market_hhi": (1, "brand"),
     "ml_conformal_ols": (2, "bucket + 1-row total"),
     "orders_backlog": (1, "day"),
     "parts_pareto_skyline": (1, "bucket"),
     "text_heaps_curve": (1, "bucket"),
-    "text_nb_auc": (1, "bucket"),
-    "text_nb_gains": (2, "bucket + decile"),
 }
 
 

@@ -137,31 +137,27 @@ def test_kernel_range_exchange_is_reused_not_resampled(spark):
 
 def test_bucket_prefix_offsets_matches_window_prefix(spark):
     """The packed-array bucket offsets (zero WindowExec) must equal
-    the textbook exclusive-prefix window, ascending and descending."""
+    the textbook exclusive-prefix window."""
     rows = [(b, (b * 31) % 17 + 1, (b * 7) % 5) for b in range(-6, 9)]
     btot = spark.createDataFrame(rows, "bucket long, n long, pos long")
-    for desc in (False, True):
-        got = {
-            r["bucket"]: (r["_off_n"], r["_off_pos"])
-            for r in R.bucket_prefix_offsets(
-                btot, "bucket", ["n", "pos"], descending=desc
-            ).collect()
-        }
-        order = F.desc("bucket") if desc else F.asc("bucket")
-        w = Window.orderBy(order).rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        want = {
-            r["bucket"]: (r["on"], r["op"])
-            for r in btot.select(
-                "bucket",
-                F.coalesce(F.sum("n").over(w), F.lit(0)).alias("on"),
-                F.coalesce(F.sum("pos").over(w), F.lit(0)).alias("op"),
-            ).collect()
-        }
-        assert got == want, desc
+    got = {
+        r["bucket"]: (r["_off_n"], r["_off_pos"])
+        for r in R.bucket_prefix_offsets(
+            btot, "bucket", ["n", "pos"]
+        ).collect()
+    }
+    w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
+    want = {
+        r["bucket"]: (r["on"], r["op"])
+        for r in btot.select(
+            "bucket",
+            F.coalesce(F.sum("n").over(w), F.lit(0)).alias("on"),
+            F.coalesce(F.sum("pos").over(w), F.lit(0)).alias("op"),
+        ).collect()
+    }
+    assert got == want
     # and the helper's own plan carries no WindowExec at all
-    out = R.bucket_prefix_offsets(btot, "bucket", ["n"], descending=True)
+    out = R.bucket_prefix_offsets(btot, "bucket", ["n"])
     text = out._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in text
 
@@ -258,3 +254,181 @@ def test_fixed_user_grain_queries_lint_clean(spark):
     for name, (df, n_bounded) in expected.items():
         text = df._jdf.queryExecution().executedPlan().toString()
         assert P._count_global_windows(text) == n_bounded, name
+
+
+#: value-grain cases for ``value_prefix``: (value, count) rows, counts
+#: > 1 standing for tied rows. The octave of the raw value puts -0.25
+#: above 0.5, so the fractional case needs the octave of floor(value).
+VALUE_CASES = {
+    "fractional": (
+        "double",
+        [(-0.75, 2), (-0.25, 1), (0.5, 3), (-1.5, 1), (0.0, 2),
+         (2.25, 1), (-3.0, 4), (7.5, 1), (-0.001, 1), (0.999, 2)],
+    ),
+    "wide_ints": (
+        "long",
+        [(-(2**40), 1), (-(2**40) + 1, 2), (-5, 1), (-1, 3), (0, 1),
+         (1, 2), (2**20, 1), (2**40 - 1, 5), (2**40, 1)],
+    ),
+}
+
+
+def _plain_prefix(vg, cols, inclusive, group_cols=()):
+    """The textbook prefix: a ``Window.orderBy(value)`` running sum."""
+    w = (
+        Window.partitionBy(*group_cols)
+        .orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, 0 if inclusive else -1)
+    )
+    return {
+        tuple(r[:-len(cols)]): tuple(r[-len(cols):])
+        for r in vg.select(
+            *group_cols,
+            "v",
+            *[
+                F.coalesce(F.sum(c).over(w), F.lit(0)).alias(c)
+                for c in cols
+            ],
+        ).collect()
+    }
+
+
+def _kernel_prefix(vg, cols, inclusive, group_cols=()):
+    out = R.value_prefix(vg, cols, "v", inclusive, group_cols)
+    return {
+        tuple(r[:-len(cols)]): tuple(r[-len(cols):])
+        for r in out.select(
+            *group_cols, "v", *[f"_pre_{c}" for c in cols]
+        ).collect()
+    }
+
+
+@pytest.mark.parametrize("inclusive", [False, True])
+@pytest.mark.parametrize("case", sorted(VALUE_CASES))
+def test_value_prefix_matches_window_prefix(spark, case, inclusive):
+    vtype, rows = VALUE_CASES[case]
+    vg = spark.createDataFrame(
+        [(v, c, c * 3 - 1) for v, c in rows], f"v {vtype}, c long, s long"
+    )
+    assert _kernel_prefix(vg, ["c", "s"], inclusive) == _plain_prefix(
+        vg, ["c", "s"], inclusive
+    )
+
+
+@pytest.mark.parametrize("inclusive", [False, True])
+def test_value_prefix_grouped_matches_window_prefix(spark, inclusive):
+    """Per-group prefixes: the same value (a tie across groups) counts
+    only inside its own group."""
+    rows = [
+        (g, v, (g * 7 + i) % 4 + 1)
+        for g in range(3)
+        for i, v in enumerate([-2.5, -0.25, 0.5, 1.0, 3.75, -0.75][g:])
+    ]
+    vg = spark.createDataFrame(rows, "g int, v double, c long")
+    assert _kernel_prefix(vg, ["c"], inclusive, ("g",)) == _plain_prefix(
+        vg, ["c"], inclusive, ("g",)
+    )
+
+
+def test_value_prefix_plan_has_no_global_window(spark):
+    vtype, rows = VALUE_CASES["fractional"]
+    vg = spark.createDataFrame(rows, f"v {vtype}, c long")
+    out = R.value_prefix(vg, ["c"], "v", inclusive=True)
+    text = out._jdf.queryExecution().executedPlan().toString()
+    assert P._count_global_windows(text) == 0
+
+
+# ---------------------------------------------------------------------------
+# one prefix kernel: no hand-rolled bucketed prefix outside ranking.py
+# ---------------------------------------------------------------------------
+
+#: functions outside ranking.py that keep a window ordered by a bucket
+#: column, each with the reason the kernels here do not fit it.
+BUCKET_WINDOW_EXCEPTIONS = {
+    "analytics.pareto_skyline": "a prefix MAX, which no sum kernel gives",
+    "profiling.delta_encoding_advisor": "a lag of the previous bucket's "
+                                        "max, not a prefix",
+    "glm.conformal_ols": "a histogram with a fixed number of rows",
+    "textstats.heaps_curve": "a histogram with a fixed number of rows",
+    "calendar.concurrency_curve": "a row-level (ms, delta) sweep; its "
+                                  "ties are rows, not values",
+}
+
+
+def _window_columns(node) -> tuple[list, list]:
+    """(partitionBy columns, orderBy columns) of a ``Window....`` chain
+    ending at ``node``, or None when the chain is not rooted at
+    ``Window``. Columns are the string literals in the calls' args,
+    also inside ``F.col``/``F.desc``/``F.asc``."""
+    import ast
+
+    parts, orders = [], []
+    while isinstance(node, ast.Call) and isinstance(
+        node.func, ast.Attribute
+    ):
+        names = [
+            n.value
+            for a in node.args
+            for n in ast.walk(a)
+            if isinstance(n, ast.Constant) and isinstance(n.value, str)
+        ]
+        if node.func.attr == "partitionBy":
+            parts += names
+        elif node.func.attr == "orderBy":
+            orders += names
+        node = node.func.value
+    if isinstance(node, ast.Name) and node.id == "Window":
+        return parts, orders
+    return None
+
+
+def _bucket_windows(path) -> set[str]:
+    """Top-level functions of ``path`` holding a window ordered first
+    by a bucket column: a column named like a bucket, or one another
+    window of the same function partitions by (the within-bucket half
+    of a hand-rolled bucketed prefix)."""
+    import ast
+
+    hits = set()
+    tree = ast.parse(path.read_text())
+    for fn in tree.body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        specs = [
+            s for s in map(_window_columns, ast.walk(fn)) if s is not None
+        ]
+        partitioned = {c for parts, _ in specs for c in parts}
+        for _, orders in specs:
+            if orders and ("bucket" in orders[0] or orders[0] in partitioned):
+                hits.add(f"{path.stem}.{fn.name}")
+    return hits
+
+
+def _operator_sources():
+    from pathlib import Path
+
+    return sorted(Path(R.__file__).parent.rglob("*.py"))
+
+
+def test_one_value_prefix_kernel():
+    """Every bucketed prefix sum and row rank goes through ranking.py:
+    outside it, a window ordered by a bucket column remains only in
+    the named exceptions, and no module imports a private prefix
+    helper from another."""
+    import ast
+
+    hits = set()
+    private_imports = []
+    for path in _operator_sources():
+        tree = ast.parse(path.read_text())
+        private_imports += [
+            f"{path.stem}: {a.name}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.ImportFrom)
+            for a in node.names
+            if a.name.startswith("_") and "prefix" in a.name
+        ]
+        if path.name != "ranking.py":
+            hits |= _bucket_windows(path)
+    assert private_imports == []
+    assert hits == set(BUCKET_WINDOW_EXCEPTIONS)
