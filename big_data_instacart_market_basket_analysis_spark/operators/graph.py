@@ -742,8 +742,11 @@ def _pivot_bfs_from(
         front = dist.filter(F.col("dist") == r - 1).select(
             "s", F.col("node").alias("a"), "sigma"
         )
+        # the frontier is the hinted build side: unhinted, AQE
+        # broadcast one side on one issue of a query and the other on
+        # the next, and the flip changed the generated class
         cand = (
-            edges.join(front, "a")
+            edges.join(front.hint("shuffle_hash"), "a")
             .select("s", F.col("b").alias("node"), "sigma")
             .groupBy("s", "node")
             .agg(F.sum("sigma").alias("add"))
@@ -831,9 +834,11 @@ def _betweenness_from_bfs(
         cur = dist.filter(F.col("dist") == lvl).select(
             "s", F.col("node").alias("a"), "sigma"
         )
+        # build sides hinted, as in `_pivot_bfs_from`
         contrib = (
-            cur.join(edges, "a")
-            .join(succ, ["s", "b"])
+            cur.hint("shuffle_hash")
+            .join(edges, "a")
+            .join(succ.hint("shuffle_hash"), ["s", "b"])
             .groupBy("s", F.col("a").alias("node"))
             .agg(
                 F.round(
@@ -1029,7 +1034,8 @@ def betweenness_stability_eval(
         edges, _pivot_bfs_from(edges, pb, hops), hops
     ).select("node", F.col("betweenness").alias("y"))
     bb = bb.localCheckpoint(eager=False)  # lazy, r10
-    both = ba.join(bb, "node")
+    # build side hinted, as in `_pivot_bfs_from`
+    both = ba.join(bb.hint("shuffle_hash"), "node")
     topa = ba.orderBy(F.desc("x"), "node").limit(k).select("node")
     topb = bb.orderBy(F.desc("y"), "node").limit(k).select("node")
     # actual list sizes, not the nominal k (r5 advice): on graphs

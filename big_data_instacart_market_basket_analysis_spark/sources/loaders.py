@@ -1,16 +1,20 @@
 """Parquet fixture loaders (S1 replacement).
 
-One ``spark.read.parquet`` per table — columnar scan, predicate pushdown
-and column pruning come free from the vectorized reader. At cluster scale
-the same call reads a partitioned directory instead of a single file; no
-code change needed.
+One parquet read per table — columnar scan, predicate pushdown and
+column pruning come free from the vectorized reader. The reader gets
+each table's schema from its footer, read on the driver
+(``read_parquet``), so no table read starts a schema-inference job. At
+cluster scale the same call reads a directory of part files instead of
+a single file; no code change needed.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Iterable
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
@@ -134,15 +138,17 @@ def ensure_nanos_conf(spark: SparkSession) -> None:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """The table's DataFrame handle, staged per (session, sf_dir,
-    name). A bare spark.read.parquet costs ~70-90 ms of driver-side
-    metadata work (file listing + footer schema inference) EVERY call;
-    the entry module alone has 300+ load_table sites, so an unstaged
-    loader spends tens of seconds per bench pass re-resolving ten
-    immutable fixture files (guide §6: file listing/planning is
-    driver-side, single-process work). The handle is lazy — nothing is
-    computed or cached data-wise — and staging also makes its
-    identity stable, so the operators' per-input staging hits across
-    every call site."""
+    name). A table read (``read_parquet``) costs ~30 ms of
+    process-tree CPU on the driver: ~9 ms to read the footer, ~22 ms
+    to list the file and resolve the relation with that schema. A bare
+    ``spark.read.parquet`` adds a schema-inference job, ~146 ms in all
+    (per read, warm JVM, perfbench-sized inputs, 4 vCPUs). The entry
+    module alone has 300+ load_table sites, so an unstaged loader
+    would re-resolve ten immutable fixture files hundreds of times per
+    bench pass (guide §6: file listing/planning is driver-side,
+    single-process work). The handle is lazy — nothing is computed or
+    cached data-wise — and staging also makes its identity stable, so
+    the operators' per-input staging hits across every call site."""
     return _stage(
         "table_handle", spark, lambda: _read_table(spark, sf_dir, name),
         sf_dir, name, checkpoint=False,
@@ -151,10 +157,105 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_session_defaults(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events":
         df = normalize_event_ts(df)
     return df
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema given: the same
+    columns, types and rows, without the Spark job that infers them.
+
+    Given no schema, Spark infers one by running a job
+    (``SchemaMergeUtils.mergeSchemasInParallel``) whose only task reads
+    one footer. Here the footer is read on the calling thread
+    (``_footer_schema``) and its JVM ``StructType`` goes straight to
+    the reader; ``load_table`` gives the measured costs.
+    """
+    reader = spark._jsparkSession.read().schema(_footer_schema(spark, path))
+    return DataFrame(reader.parquet(path), spark)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` would infer, read from
+    one footer on the driver (see ``read_parquet``)."""
+    return StructType.fromJson(json.loads(_footer_schema(spark, path).json()))
+
+
+_SPARK_PARQUET = "org.apache.spark.sql.execution.datasources.parquet"
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def _footer_schema(spark: SparkSession, path: str):
+    """The JVM ``StructType`` of the parquet file or directory at
+    ``path``, converted by Spark's own code under the session's confs:
+    the row-metadata schema Spark writes into the footer if there is
+    one, else the parquet schema under ``nanosAsLong`` and the NTZ
+    inference conf, as inference converts it.
+
+    For a directory, the footer is the one inference reads without
+    ``mergeSchema``: ``_common_metadata``, else ``_metadata``, else the
+    first data file by path. A path that does not exist or holds no
+    readable footer raises.
+    """
+    def jclass(name: str) -> JavaClass:
+        # by full name: ``spark._jvm.org.apache...`` costs one py4j
+        # round trip per package component, ~2 ms per class
+        return JavaClass(name, spark._jvm._gateway_client)
+
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    file = jclass("org.apache.hadoop.fs.Path")(path)
+    fs = file.getFileSystem(conf)
+    if fs.getFileStatus(file).isDirectory():
+        file = _schema_file(fs, file)
+    meta = jclass(f"{_SPARK_PARQUET}.ParquetFooterReader").readFooter(
+        jclass("org.apache.parquet.hadoop.util.HadoopInputFile").fromPath(
+            file, conf
+        ),
+        jclass(
+            "org.apache.parquet.format.converter.ParquetMetadataConverter"
+        ).SKIP_ROW_GROUPS,
+    )
+    return jclass(f"{_SPARK_PARQUET}.ParquetFileFormat").readSchemaFromFooter(
+        jclass("org.apache.parquet.hadoop.Footer")(file, meta),
+        jclass(f"{_SPARK_PARQUET}.ParquetToSparkSchemaConverter")(
+            state.conf()
+        ),
+    )
+
+
+def _schema_file(fs, root):
+    """The file whose footer gives a directory's schema, picked from
+    its leaf files as Spark's file index lists them (names starting
+    with ``_`` or ``.`` hidden, except ``k=v`` directories and the
+    summary files) by Spark's rule for reads without ``mergeSchema``."""
+    leaves, todo = {}, [root]
+    while todo:
+        for status in fs.listStatus(todo.pop()):
+            child = status.getPath()
+            path = child.toString()
+            name = path.rsplit("/", 1)[1]
+            hidden = (
+                (name.startswith("_") and "=" not in name)
+                or name.startswith(".")
+                or name.endswith("._COPYING_")
+            )
+            if hidden and not name.startswith(_SUMMARY_FILES):
+                continue
+            if status.isDirectory():
+                todo.append(child)
+            else:
+                leaves[path] = child
+    if not leaves:
+        raise FileNotFoundError(f"no parquet file under {root.toString()}")
+
+    def rank(path: str) -> tuple[int, str]:
+        name = path.rsplit("/", 1)[1]
+        return (*_SUMMARY_FILES, name).index(name), path
+
+    return leaves[min(leaves, key=rank)]
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

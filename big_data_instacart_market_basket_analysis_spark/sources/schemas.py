@@ -1,15 +1,20 @@
 """Explicit read-time schemas.
 
 The reference imposes types via ``int()`` casts inside map lambdas
-(F.py:16-30); here every source has a ``StructType`` declared up front so
-the vectorized parquet/CSV readers never infer and Catalyst can prune
-columns at the scan (SURVEY.md §1 "Spark mapping").
+(F.py:16-30); here every reader is given its schema, so none infers one
+and Catalyst can prune columns at the scan (SURVEY.md §1 "Spark
+mapping"): CSV sources from the ``StructType`` declared below, parquet
+tables from their own footers.
 
 Two schema families:
 
 - ``FIXTURE_SCHEMAS``: the driver's synthetic TPC-H-ish parquet tables
-  (FIXTURES.md §B). Parquet is self-describing, so these serve as
-  documentation + validation, not as reader input.
+  (FIXTURES.md §B). They are documentation, not reader input: the
+  reader's schema is each file's own footer, which
+  ``loaders.read_parquet`` reads on the driver and passes to the
+  reader, so no read infers one in a Spark job, and a file whose
+  encoding differs from these (the events ``ts`` column has shipped
+  as two) is read as it is.
 - ``INSTACART_SCHEMAS``: the reference's four CSV inputs (FIXTURES.md §A)
   for the format-parity ingest path (csv_ingest.py).
 """

@@ -39,6 +39,7 @@ from ..sources.loaders import (
     load_table,
     local_rows,
     normalize_event_ts,
+    parquet_schema,
 )
 
 SESSION_GAP_MIN = 30
@@ -271,11 +272,12 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw ``ts`` encoding — nanos-long or NTZ — arrives exactly like the
     batch reader and is normalized the same way)."""
     ensure_nanos_conf(spark)
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
     # the file source wants a directory; glob-filter the one table out
     # of the shared fixture dir.
     stream = (
-        spark.readStream.schema(batch.schema)
+        spark.readStream.schema(
+            parquet_schema(spark, f"{sf_dir}/events.parquet")
+        )
         .format("parquet")
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
@@ -453,7 +455,7 @@ def _write_sentinel_input(spark: SparkSession, sf_dir: str) -> str:
     # few, larger files: the file source lists and plans per file, and
     # fixture-scale state batches are overhead-bound, not scan-bound.
     events.coalesce(4).write.mode("overwrite").parquet(in_dir)
-    schema = spark.read.parquet(in_dir).schema
+    schema = parquet_schema(spark, in_dir)
     sentinel_ts = events.select(
         (F.max("ts") + F.expr("INTERVAL 7 DAYS")).alias("t")
     ).first()["t"]
@@ -515,7 +517,7 @@ def _fold(
     state) is unchanged."""
     src = _spc_staged_src(spark, sf_dir, tag, build_src)
     stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
+        spark.readStream.schema(parquet_schema(spark, src))
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
@@ -561,7 +563,7 @@ def run_stream_interval_join_outer(
     """
     ensure_nanos_conf(spark)
     in_dir = _sentinel_staged_input(spark, sf_dir)
-    schema = spark.read.parquet(in_dir).schema
+    schema = parquet_schema(spark, in_dir)
 
     stream = (
         spark.readStream.schema(schema).format("parquet").load(in_dir)
@@ -923,7 +925,7 @@ def run_stream_checkpoint_restart(
     in_dir, out_dir, ckpt = f"{root}/in", f"{root}/out", f"{root}/ckpt"
     split = F.lit(CKPT_SPLIT_DAY).cast("date")
     events.filter(F.to_date("ts") < split).write.parquet(in_dir)
-    schema = spark.read.parquet(in_dir).schema
+    schema = parquet_schema(spark, in_dir)
 
     def _run_phase() -> None:
         agg = (
@@ -1148,7 +1150,7 @@ def run_stream_state_inspect(
     root = _stream_root(spark, sf_dir, "state")
     in_dir, out_dir, ckpt = f"{root}/in", f"{root}/out", f"{root}/ckpt"
     events.write.parquet(in_dir)
-    schema = spark.read.parquet(in_dir).schema
+    schema = parquet_schema(spark, in_dir)
     agg = (
         spark.readStream.schema(schema)
         .format("parquet")
@@ -1254,7 +1256,7 @@ def run_stream_merge_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         "stream_src", spark, write_src, sf_dir, "merge_state_src",
         checkpoint=False,
     )
-    schema = spark.read.parquet(src).schema
+    schema = parquet_schema(spark, src)
     stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -1398,11 +1400,11 @@ def run_stream_embedding_dedup(
         NEAR_DUP_COSINE,
         _with_bucket_and_norm,
     )
-    from ..sources.loaders import load_table
 
-    batch = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     stream = (
-        spark.readStream.schema(batch.schema)
+        spark.readStream.schema(
+            parquet_schema(spark, f"{sf_dir}/embeddings.parquet")
+        )
         .format("parquet")
         .option("pathGlobFilter", "embeddings.parquet")
         .load(sf_dir)
@@ -2229,9 +2231,7 @@ def run_stream_hbos_alerts(
     of an exact integer per event (see the batch twin), so the stream
     and the oracle agree bit-for-bit.
     """
-    batch = normalize_event_ts(
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-    )
+    batch = load_table(spark, sf_dir, "events")
 
     def _feats(df: DataFrame) -> DataFrame:
         c = F.round(F.col("value") * 100, 0).cast("bigint")

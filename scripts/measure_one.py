@@ -16,6 +16,11 @@ issue. ``py_cpu`` is the CPU time of the Python worker processes under
 the JVM (``pyspark.daemon`` and its forks) during the reported run: a
 nonzero value means the query sends rows through Python (a pandas UDF,
 ``mapInPandas``, an RDD ``map``), which no other column shows.
+
+The warm-up run is the query's first touch of the input: it reads the
+tables and builds the staged artifacts that the timed runs then reuse.
+``w-build`` and ``w-jobs`` are its construction time and the Spark jobs
+it submitted (build and action), the cost the timed columns never show.
 """
 
 from __future__ import annotations
@@ -76,19 +81,30 @@ def main() -> None:
     # warmup the session itself
     spark.range(1).write.format("noop").mode("overwrite").save()
 
+    def jobs() -> int:
+        """Jobs submitted so far. Job ids count up from 0; the number of
+        listed ids would stop growing at ``spark.ui.retainedJobs``."""
+        return max(sc.statusTracker().getJobIdsForGroup(None) or [-1]) + 1
+
     print(
         f"{'query':34s} {'build':>7s} {'act-min':>8s} {'jobs':>5s}"
         f" {'compiles':>8s} {'py_cpu':>6s} {'total':>7s}"
+        f" {'w-build':>7s} {'w-jobs':>6s}"
     )
     for name in names:
         fn = qs[name]
         # cold pass: warms file indexes/codegen like bench.py's warmup
         sc.setJobDescription(f"warmup:{name}")
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        wj0 = jobs()
+        t0 = time.perf_counter()
+        df = fn(spark, sf_dir)
+        warm_build = time.perf_counter() - t0
+        df.write.format("noop").mode("overwrite").save()
+        warm_jobs = jobs() - wj0
 
         best_act, build_t, njobs, ncomp, pcpu = None, None, None, None, None
         for i in range(n_runs):
-            j0 = len(sc.statusTracker().getJobIdsForGroup(None) or [])
+            j0 = jobs()
             c0 = compiles()
             p0 = py_cpu()
             t0 = time.perf_counter()
@@ -97,7 +113,7 @@ def main() -> None:
             sc.setJobDescription(f"measure:{name}")
             df.write.format("noop").mode("overwrite").save()
             t2 = time.perf_counter()
-            j1 = len(sc.statusTracker().getJobIdsForGroup(None) or [])
+            j1 = jobs()
             c1 = compiles()
             p1 = py_cpu()
             if best_act is None or (t2 - t1) < best_act:
@@ -105,7 +121,8 @@ def main() -> None:
                 njobs, ncomp, pcpu = j1 - j0, c1 - c0, p1 - p0
         print(
             f"{name:34s} {build_t:7.3f} {best_act:8.3f} {njobs:5d} "
-            f"{ncomp:8d} {pcpu:6.2f} {build_t + best_act:7.3f}",
+            f"{ncomp:8d} {pcpu:6.2f} {build_t + best_act:7.3f} "
+            f"{warm_build:7.3f} {warm_jobs:6d}",
             flush=True,
         )
 

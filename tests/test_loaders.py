@@ -11,17 +11,33 @@ UTC, AQE) hold on a session that never saw ``get_spark()``.
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
+import shutil
+import sys
+from decimal import Decimal
+from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
+from big_data_instacart_market_basket_analysis_spark.sources import (
+    loaders as L,
+)
 from big_data_instacart_market_basket_analysis_spark.sources.loaders import (
+    TABLES,
     ensure_session_defaults,
     load_table,
     normalize_event_ts,
+    parquet_schema,
+    read_parquet,
 )
 
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
+from tests.test_staging import ROOT, _package_sources
 
 
 def test_events_ts_is_plain_timestamp(spark):
@@ -143,3 +159,178 @@ def test_ignore_corrupt_files_skips_bad_parquet(spark, tmp_path):
         spark.read.option("ignoreCorruptFiles", "true").parquet(p).count()
     )
     assert n == 10
+
+
+# -- the reader's schema comes from the footer, read on the driver ---------
+
+
+@pytest.fixture(params=["engine", "stock"])
+def session(request, spark):
+    """The engine's session, and a stock one: a new session with every
+    conf ``ensure_session_defaults`` sets back at Spark's default, then
+    passed through it, as the entry module does with a session it is
+    handed."""
+    if request.param == "engine":
+        yield spark
+        return
+    stock = spark.newSession()
+    for conf, _ in L._RUNTIME_DEFAULTS:
+        stock.conf.unset(conf)
+    stock.conf.unset("spark.sql.shuffle.partitions")
+    assert stock.conf.get(L.NANOS_CONF) == "false"
+    ensure_session_defaults(stock)
+    try:
+        yield stock
+    finally:
+        L._tuned_sessions.pop(id(stock), None)
+
+
+def _assert_parity(spark, path: str) -> None:
+    """The footer schema is the inferred one, and the read gives the
+    inferring read's rows."""
+    want = spark.read.parquet(path)
+    assert parquet_schema(spark, path) == want.schema, path
+    got = read_parquet(spark, path)
+    assert got.schema == want.schema, path
+    assert got.collect() == want.collect(), path
+
+
+@pytest.mark.parametrize(
+    "sf_dir", [SF_SMOKE, str(Path(SF_SMOKE).with_name("sf0.01"))]
+)
+def test_footer_schema_matches_inference_on_fixtures(session, sf_dir):
+    for name in TABLES:
+        _assert_parity(session, f"{sf_dir}/{name}.parquet")
+
+
+def test_footer_schema_matches_inference_on_generated_input(
+    session, tmp_path
+):
+    sys.path.insert(0, str(ROOT / "perfbench"))
+    import gen
+    import run
+
+    gen.generate(str(tmp_path), 7, run.SHAPE)
+    for name in TABLES:
+        _assert_parity(session, str(tmp_path / f"{name}.parquet"))
+
+
+@pytest.mark.parametrize("unit", ["ns", "us"])
+def test_footer_schema_matches_inference_on_event_ts_encodings(
+    session, tmp_path, unit
+):
+    """INT64 TIMESTAMP(NANOS) and TIMESTAMP(MICROS,
+    isAdjustedToUTC=false): the footer is converted under the session's
+    nanosAsLong and NTZ confs, as inference converts it, and
+    ``load_table`` folds both to a plain timestamp."""
+    ts = [dt.datetime(2024, 1, 1, 0, 0, 1), dt.datetime(2024, 1, 2, 3, 4, 5)]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(ts, pa.timestamp(unit)),
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    _assert_parity(session, str(tmp_path / "events.parquet"))
+    events = load_table(session, str(tmp_path), "events")
+    assert dict(events.dtypes)["ts"] == "timestamp"
+    assert [r["ts"] for r in events.orderBy("event_id").collect()] == ts
+
+
+def test_footer_schema_matches_inference_on_spark_directory(
+    session, tmp_path
+):
+    """A Spark-written directory of several parts (and its ``_SUCCESS``
+    marker): the schema comes from Spark's row-metadata key."""
+    path = str(tmp_path / "parts")
+    session.createDataFrame(
+        [
+            (i, Decimal(f"{i}.25"), [i, i + 1], (i, f"s{i}"),
+             dt.datetime(2024, 1, 1, i % 24))
+            for i in range(40)
+        ],
+        "id bigint, amount decimal(12,2), xs array<int>,"
+        " st struct<k:int,v:string>, ts timestamp",
+    ).repartition(4).write.parquet(path)
+    assert len(list((tmp_path / "parts").glob("part-*"))) > 1
+    _assert_parity(session, path)
+
+
+def test_directory_schema_prefers_summary_files(spark, tmp_path):
+    """Without mergeSchema, inference reads ``_common_metadata``, else
+    ``_metadata``, else the first data file; so does the footer read.
+    Each of the three below has its own extra column."""
+    d = tmp_path / "summaries"
+    d.mkdir()
+
+    def schema(extra: str) -> pa.Schema:
+        return pa.schema([("id", pa.int64()), (extra, pa.int32())])
+
+    for part in ("b", "a"):
+        pq.write_table(
+            pa.table({"id": [1], "in_" + part: [1]},
+                     schema=schema("in_" + part)),
+            str(d / f"part-{part}.parquet"),
+        )
+    _assert_parity(spark, str(d))
+    assert parquet_schema(spark, str(d)).names == ["id", "in_a"]
+    for summary in ("_metadata", "_common_metadata"):
+        pq.write_metadata(schema("in" + summary), str(d / summary))
+        got = parquet_schema(spark, str(d))
+        assert got.names == ["id", "in" + summary]
+        assert got == spark.read.parquet(str(d)).schema
+
+
+def test_unreadable_footer_raises(spark, tmp_path):
+    """No fallback: a path with no readable footer fails the read."""
+    with pytest.raises(Py4JJavaError, match="FileNotFoundException"):
+        read_parquet(spark, str(tmp_path / "missing.parquet"))
+    (tmp_path / "empty").mkdir()
+    with pytest.raises(FileNotFoundError):
+        read_parquet(spark, str(tmp_path / "empty"))
+    (tmp_path / "bad.parquet").write_bytes(b"PAR1 not a parquet footer")
+    with pytest.raises(Py4JJavaError, match="not a Parquet file"):
+        read_parquet(spark, str(tmp_path / "bad.parquet"))
+
+
+def _jobs(spark, group: str, action) -> int:
+    """Spark jobs ``action`` starts, counted in a job group of its own."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_starts_no_job(spark, tmp_path):
+    """Every table of a fresh input loads without a Spark job; an
+    inferring read starts one per table."""
+    sf_dir = str(tmp_path / "copy")
+    shutil.copytree(SF_SMOKE, sf_dir)
+    assert _jobs(spark, "test_load_table", lambda: L.load_tables(spark, sf_dir)) == 0
+    assert _jobs(
+        spark, "test_infer_schema",
+        lambda: [spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in TABLES],
+    ) == len(TABLES)
+
+
+def test_no_schema_is_inferred_by_a_read():
+    """No ``spark.read.parquet(...).schema``: a read made only for its
+    schema starts an inference job; ``parquet_schema`` reads the
+    footer instead."""
+    sites = []
+    for path in _package_sources():
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Attribute)
+                and node.attr == "schema"
+                and isinstance(node.value, ast.Call)
+                and isinstance(node.value.func, ast.Attribute)
+                and node.value.func.attr == "parquet"
+                and isinstance(node.value.func.value, ast.Attribute)
+                and node.value.func.value.attr == "read"
+            ):
+                sites.append(f"{path.name}:{node.lineno}")
+    assert sites == []

@@ -80,3 +80,18 @@ def test_reissued_graph_kcore_compiles_nothing(spark, tmp_path):
         spark, tmp_path, ["graph_kcore"], ["graph_kcore"], copies=4
     )
     assert compiled == {"graph_kcore": 0}
+
+
+def test_reissued_betweenness_stability_compiles_nothing(spark, tmp_path):
+    """The stability eval runs the pivot BFS and the backward
+    accumulation again from a second pivot set, then joins the two
+    node-grain score tables. Unhinted, AQE broadcast one side of these
+    joins on one issue and the other side on the next, and the flip
+    compiled their classes again: 2 to 7 classes over five re-issues
+    in the runs tried. With the build sides hinted, five re-issues
+    compile nothing."""
+    compiled = _reissue_compiles(
+        spark, tmp_path, ["graph_betweenness_stability"],
+        ["graph_betweenness_stability"], copies=5,
+    )
+    assert compiled == {"graph_betweenness_stability": 0}
