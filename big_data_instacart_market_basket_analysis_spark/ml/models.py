@@ -115,6 +115,22 @@ def _assembled(t: InstacartTables) -> DataFrame:
     return assemble(candidates_staged(t))
 
 
+#: width of every ``_fit_input``: a module constant, not
+#: ``defaultParallelism``, so a different core count cannot move a model
+FIT_PARTITIONS = 8
+
+
+def _fit_input(data: DataFrame) -> DataFrame:
+    """``data`` hash-partitioned on the candidate key to
+    ``FIT_PARTITIONS`` and sorted within each partition by it. GBT/DT
+    split finding samples rows per partition and sums their statistics
+    in row order, and CrossValidator's ``rand(seed)`` folds are seeded
+    per partition, so a fit over the candidate table as built would
+    follow its layout, which tracks the join build side AQE picks."""
+    keys = ("orderID", "productID")
+    return data.repartition(FIT_PARTITIONS, *keys).sortWithinPartitions(*keys)
+
+
 def _weighted_prf(tp: int, fp: int, tn: int, fn: int) -> tuple[float, float, float]:
     """M7: label-frequency-weighted precision/recall/F1 from the four
     confusion-matrix counts — the same definitions
@@ -214,7 +230,7 @@ def model_submission(t: InstacartTables, model_name: str) -> DataFrame:
     """
     data = _assembled(t)
     model = MODEL_BUILDERS[model_name]().fit(
-        data.filter(F.col("eval_set") == EVAL_TRAIN)
+        _fit_input(data.filter(F.col("eval_set") == EVAL_TRAIN))
     )
     test_scored = model.transform(data.filter(F.col("eval_set") == EVAL_TEST))
     return submission(t, test_scored, score_col="prediction")
@@ -266,7 +282,7 @@ def cv_model_selection(t: InstacartTables) -> DataFrame:
         parallelism=4,
         seed=SEED,
     )
-    fitted = cv.fit(data)
+    fitted = cv.fit(_fit_input(data))
     best = min(range(len(grid)), key=lambda i: fitted.avgMetrics[i])
     rows = [
         (

@@ -16,8 +16,8 @@ and nothing else persists a DataFrame.
 - **Held owner.** The value is ``(owner, result)``. Holding the owner
   keeps it alive, so its ``id()`` cannot be recycled while the entry
   exists, and a lookup only hits if the held owner ``is`` the caller's.
-- **Materialization.** ``checkpoint`` (the default) eagerly
-  localCheckpoints the built DataFrame; ``persist`` instead persists it
+- **Materialization.** ``checkpoint`` (the default) passes the built
+  DataFrame through ``cut``; ``persist`` instead persists it
   MEMORY_AND_DISK, lazily, so the first action that reads it fills the
   cache and every later plan reads it as an ``InMemoryRelation``;
   results that are not a single DataFrame (tuples, lists, paths,
@@ -33,6 +33,18 @@ and nothing else persists a DataFrame.
   alternation warm. A dropped persisted result is unpersisted; a
   dropped localCheckpoint is released to Spark's ContextCleaner with
   its last reference.
+- **Cut.** ``cut(df)`` is the package's one lineage cut: every
+  operator that bounds an iterative plan or shares an intermediate
+  between several consumers calls it, and no other module calls
+  ``localCheckpoint``. Every cut is eager. Under AQE a lazy
+  ``localCheckpoint(eager=False)`` still runs each shuffle and
+  broadcast stage of its plan at the call, so the lazy form saved no
+  job and only deferred the final stage to the next action. A cut
+  block lives in executor storage and cannot be recomputed by Spark:
+  an action over a lost block fails with
+  ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``. ``cut`` is the seam for a
+  durable mode (reliable ``checkpoint`` or ``persist(DISK_ONLY)``),
+  which then changes this one function.
 - **Lock.** ``STAGING_LOCK`` serializes every lookup, eviction and
   build, so two threads (the plan-lint builders run in a pool) never
   both build one key. It is re-entrant because a build may stage a
@@ -73,6 +85,13 @@ def spread(df: DataFrame, *cols: str) -> DataFrame:
     return df.repartition(n, *cols) if cols else df.repartition(n)
 
 
+def cut(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now and return a frame whose plan starts at
+    the materialized blocks (see **Cut** above); ``localCheckpoint``
+    is eager by default."""
+    return df.localCheckpoint()
+
+
 #: owner generations kept per artifact name
 KEEP_OWNERS = 2
 
@@ -87,8 +106,7 @@ def stage(name: str, owner, build: Callable[[], Any], *params,
     """Return the staged ``name`` artifact of ``owner`` for ``params``,
     calling ``build`` on first touch. With ``persist`` the built
     DataFrame is persisted MEMORY_AND_DISK (and unpersisted when
-    evicted); otherwise, with ``checkpoint``, it is eagerly
-    localCheckpointed."""
+    evicted); otherwise, with ``checkpoint``, it is ``cut``."""
     key = (name, id(owner), *params)
     with STAGING_LOCK:
         hit = _STAGED_CACHE.get(key)
@@ -99,7 +117,7 @@ def stage(name: str, owner, build: Callable[[], Any], *params,
         if persist:
             result = result.persist(StorageLevel.MEMORY_AND_DISK)
         elif checkpoint:
-            result = result.localCheckpoint(eager=True)
+            result = cut(result)
         _STAGED_CACHE[key] = (owner, result)
         return result
 

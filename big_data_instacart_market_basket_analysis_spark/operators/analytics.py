@@ -47,6 +47,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ._staging import cut as _cut
+
 _DEC = "decimal(18,4)"
 
 
@@ -1441,7 +1443,7 @@ def nation_rca(
     (nation, type): n_name, p_type, rev_cents, rca, specialized.
     """
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    grid = (
+    grid = _cut(
         lineitem.join(
             F.broadcast(
                 supplier.select("s_suppkey", "s_nationkey")
@@ -1464,8 +1466,7 @@ def nation_rca(
                 )
             ).alias("rev_nt")
         )
-        .localCheckpoint(eager=True)  # 25 x 6 grid; 3 rollups
-    )
+    )  # 25 x 6 grid; 3 rollups
     by_n = grid.groupBy("n_name").agg(F.sum("rev_nt").alias("rev_n"))
     by_t = grid.groupBy("p_type").agg(F.sum("rev_nt").alias("rev_t"))
     tot = grid.agg(F.sum("rev_nt").alias("rev_all"))

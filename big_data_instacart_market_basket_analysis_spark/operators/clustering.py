@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ._staging import cut as _cut
 from ._staging import stage as _stage
 from .dedup import _star_fixpoint
 
@@ -162,19 +163,17 @@ def _core_labels(events: DataFrame) -> DataFrame:
         .filter(F.col("nbr_w") >= DBSCAN_MIN_PTS)
         .select(F.col("ka").alias("key"))
     )
-    core_edges = (
+    core_edges = _cut(
         nbr.filter(F.col("ka") < F.col("kb"))
         .join(core.select(F.col("key").alias("ka")), "ka", "leftsemi")
         .join(core.select(F.col("key").alias("kb")), "kb", "leftsemi")
         .select(F.col("ka").alias("src"), F.col("kb").alias("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    cc_nodes = (
+    cc_nodes = _cut(
         core_edges.select(F.col("src").alias("key"))
         .union(core_edges.select(F.col("dst").alias("key")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     edges = _star_fixpoint(
         core_edges, "dbscan_clusters CC did not converge in {rounds} rounds"

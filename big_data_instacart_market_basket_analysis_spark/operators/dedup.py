@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._staging import cut as _cut
 from ._staging import spread as _spread
 from ._staging import stage as _stage
 from .ranking import global_ranked
@@ -625,9 +626,7 @@ def _star_fixpoint(edges: DataFrame, error: str) -> DataFrame:
     eagerly (see `connected_clusters`). Raises ``RuntimeError(error)``,
     with ``{rounds}`` filled in, if ``MAX_CC_ROUNDS`` rounds pass first."""
     for _ in range(MAX_CC_ROUNDS):
-        new_edges = _small_star(_large_star(edges)).localCheckpoint(
-            eager=True
-        )
+        new_edges = _cut(_small_star(_large_star(edges)))
         # both sides are distinct sets, so set equality reduces to
         # |new| == |old| AND new \ old == {} — one anti-join, not two
         # exceptAll passes (counts on checkpointed data are near-free).
@@ -687,19 +686,17 @@ def connected_clusters(
     # materialize the edge list ONCE — the loop derives each round from
     # the previous round's edges, and an unmaterialized pair plan would
     # recompute the candidate-pair join per round.
-    edges = (
+    edges = _cut(
         pairs.select(F.col("d1").alias("src"), F.col("d2").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # graph nodes, fixed for the whole run: label lookups at the end
     # must cover nodes that converged edges no longer mention.
-    nodes = (
+    nodes = _cut(
         edges.select(F.col("src").alias("doc_id"))
         .union(edges.select(F.col("dst").alias("doc_id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     edges = _star_fixpoint(
@@ -994,7 +991,7 @@ def fuzzy_prefix_pairs(
     # exchange-free, AQE cannot coalesce it, and the per-pair
     # levenshtein runs at full width instead of on the 1-2 AQE
     # partitions the block window left behind.
-    keyed = _spread_blk(keyed).localCheckpoint(eager=False)
+    keyed = _cut(_spread_blk(keyed))
     a = keyed.select(
         F.col("doc_id").alias("id_a"),
         "lang",
@@ -1093,7 +1090,7 @@ def phonetic_er_pairs(
     )
     # r10 (guide §2.5): same join-key spread + checkpoint as the
     # fuzzy-prefix kernel above.
-    keyed = _spread_blk(keyed).localCheckpoint(eager=False)
+    keyed = _cut(_spread_blk(keyed))
     a = keyed.select(
         F.col("doc_id").alias("id_a"), "lang", "blk",
         F.col("prefix").alias("pa"),
@@ -1573,7 +1570,7 @@ def er_matches(docs: DataFrame) -> DataFrame:
     # doc-grain; 4 consumers below. Spread before the checkpoint so
     # the token-explode join and the levenshtein verify downstream run
     # at full width (r10, guide §2.5).
-    keyed = _spread(keyed, "doc_id").localCheckpoint(eager=True)
+    keyed = _cut(_spread(keyed, "doc_id"))
     tok = keyed.select(
         "doc_id", "lang", "blk", F.explode("toks").alias("tk")
     )
@@ -2067,20 +2064,17 @@ def winnowing_pairs(docs: DataFrame) -> DataFrame:
     # plan (129 operators, zero ReusedExchange at r9 measurement).
     # Both tables are the ~1/W winnowed sample (doc-grain bounded), so
     # two eager checkpoints buy back three recomputations (guide §2.4).
-    fps = (
+    fps = _cut(
         grams.withColumn("fp", F.min("h").over(ww))
         .join(F.broadcast(stats), "doc_id")
         .filter(F.col("pos") <= F.col("max_pos") - (WIN_W - 1))
         .select("doc_id", F.col("fp").alias("h"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     hot = fps.groupBy("h").agg(F.count("*").alias("df")).filter(
         F.col("df") <= WIN_DF_CAP
     )
-    kept = fps.join(hot.select("h"), "h", "leftsemi").localCheckpoint(
-        eager=True
-    )
+    kept = _cut(fps.join(hot.select("h"), "h", "leftsemi"))
     pairs = (
         kept.select(F.col("doc_id").alias("doc_a"), "h")
         .join(kept.select(F.col("doc_id").alias("doc_b"), "h"), "h")
@@ -2248,7 +2242,7 @@ def fellegi_sunter_weights(docs: DataFrame) -> DataFrame:
     # materialize the capped blocks hash-partitioned on the JOIN key
     # at explicit width so both self-join sides read it exchange-free
     # and the per-pair agreement vector runs at full width.
-    keyed = _spread_blk(keyed).localCheckpoint(eager=False)
+    keyed = _cut(_spread_blk(keyed))
     a = keyed.select(
         F.col("doc_id").alias("id_a"), "lang", "blk",
         F.col("toks").alias("ta"), F.col("source").alias("sa"),
@@ -2261,7 +2255,7 @@ def fellegi_sunter_weights(docs: DataFrame) -> DataFrame:
     )
     i = F.size(F.array_intersect("ta", "tb"))
     u = F.size("ta") + F.size("tb") - i
-    pat = (
+    pat = _cut(
         a.join(b, ["lang", "blk"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select(
@@ -2271,7 +2265,6 @@ def fellegi_sunter_weights(docs: DataFrame) -> DataFrame:
         )
         .groupBy("g1", "g2", "g3")
         .agg(F.count("*").alias("n"))
-        .localCheckpoint(eager=True)
     )
     params = pat.agg(
         F.lit(float(FS_INIT_P)).alias("p"),
@@ -2497,9 +2490,9 @@ def ppjoin_pairs(docs: DataFrame) -> DataFrame:
         .select("d1", "d2")
         .distinct()
     )
-    arrs = sh.groupBy("doc_id").agg(
+    arrs = _cut(sh.groupBy("doc_id").agg(
         F.sort_array(F.collect_list("sh")).alias("arr")
-    ).localCheckpoint(eager=True)
+    ))
     verified = (
         cand.join(
             arrs.select(F.col("doc_id").alias("d1"), F.col("arr").alias("a1")),

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.instacart import InstacartTables
+from ._staging import cut as _cut
 
 ALS_ROUNDS = 3
 
@@ -49,18 +50,18 @@ def _ratings(t: InstacartTables) -> DataFrame:
     )
 
 
-def als_rank1(t: InstacartTables, rounds: int = ALS_ROUNDS) -> DataFrame:
-    """Rank-1 ALS; one row per round: round, sse (post-update, over
-    observed entries), u_norm2, v_norm2 — the training curve IS the
-    verified artifact (sse must be monotone non-increasing; a property
-    test asserts it)."""
-    ratings = _ratings(t).localCheckpoint(eager=True)
+def _als_rounds(
+    t: InstacartTables, rounds: int = ALS_ROUNDS
+) -> tuple[DataFrame, list[tuple[DataFrame, DataFrame]]]:
+    """The verified ALS run: the cut ratings and every round's
+    (user, product) factor tables, each half-step cut."""
+    ratings = _cut(_ratings(t))
     v = ratings.select("productID").distinct().select(
         "productID", F.lit(1.0).alias("v")
     )
-    out = None
-    for rnd in range(1, rounds + 1):
-        u = (
+    factors = []
+    for _ in range(rounds):
+        u = _cut(
             ratings.join(F.broadcast(v), "productID")
             .groupBy("userID")
             .agg(
@@ -70,9 +71,8 @@ def als_rank1(t: InstacartTables, rounds: int = ALS_ROUNDS) -> DataFrame:
                     9,
                 ).alias("u")
             )
-            .localCheckpoint(eager=True)
         )
-        v = (
+        v = _cut(
             ratings.join(F.broadcast(u), "userID")
             .groupBy("productID")
             .agg(
@@ -82,8 +82,19 @@ def als_rank1(t: InstacartTables, rounds: int = ALS_ROUNDS) -> DataFrame:
                     9,
                 ).alias("v")
             )
-            .localCheckpoint(eager=True)
         )
+        factors.append((u, v))
+    return ratings, factors
+
+
+def als_rank1(t: InstacartTables, rounds: int = ALS_ROUNDS) -> DataFrame:
+    """Rank-1 ALS; one row per round: round, sse (post-update, over
+    observed entries), u_norm2, v_norm2 — the training curve IS the
+    verified artifact (sse must be monotone non-increasing; a property
+    test asserts it)."""
+    ratings, factors = _als_rounds(t, rounds)
+    out = None
+    for rnd, (u, v) in enumerate(factors, start=1):
         sse = (
             ratings.join(F.broadcast(u), "userID")
             .join(F.broadcast(v), "productID")
@@ -169,45 +180,6 @@ als_rank1 AS (
 )"""
 
 
-def _als_factors(
-    t: InstacartTables, rounds: int = ALS_ROUNDS
-) -> tuple[DataFrame, DataFrame]:
-    """Final (user, product) factor tables of the verified ALS run —
-    same trajectory as ``als_rank1``, returned as tables instead of a
-    curve."""
-    ratings = _ratings(t).localCheckpoint(eager=True)
-    v = ratings.select("productID").distinct().select(
-        "productID", F.lit(1.0).alias("v")
-    )
-    u = None
-    for _ in range(rounds):
-        u = (
-            ratings.join(F.broadcast(v), "productID")
-            .groupBy("userID")
-            .agg(
-                F.round(
-                    F.sum(F.col("r") * F.col("v"))
-                    / F.sum(F.col("v") * F.col("v")),
-                    9,
-                ).alias("u")
-            )
-            .localCheckpoint(eager=True)
-        )
-        v = (
-            ratings.join(F.broadcast(u), "userID")
-            .groupBy("productID")
-            .agg(
-                F.round(
-                    F.sum(F.col("r") * F.col("u"))
-                    / F.sum(F.col("u") * F.col("u")),
-                    9,
-                ).alias("v")
-            )
-            .localCheckpoint(eager=True)
-        )
-    return u, v
-
-
 def als_bpr_auc(t: InstacartTables) -> DataFrame:
     """Closes the verified recsys loop: BPR-AUC of the trained rank-1
     ALS model against the deterministic negative samples — the
@@ -223,7 +195,8 @@ def als_bpr_auc(t: InstacartTables) -> DataFrame:
     """
     from .sampling import negative_samples
 
-    u, v = _als_factors(t)
+    _, factors = _als_rounds(t)
+    u, v = factors[-1]
     pos = (
         _ratings(t)
         .join(F.broadcast(v), "productID")

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from big_data_instacart_market_basket_analysis_spark.operators import (
     ranking as _rank,
 )
+from ._staging import cut as _cut
 
 LR_ROUNDS = 4
 LR_RATE = 2.0
@@ -66,7 +67,7 @@ def logreg_train(docs: DataFrame, rounds: int = LR_ROUNDS) -> DataFrame:
     """Full-batch GD logistic regression; one row per round with the
     post-update weights and the PRE-update loss/accuracy (the metrics
     that motivated the step — same convention as the oracle)."""
-    feats = _lr_features(docs).localCheckpoint(eager=True)
+    feats = _cut(_lr_features(docs))
     w = None  # 1-row (w0, w1, w2)
     out = None
     for rnd in range(1, rounds + 1):
@@ -114,7 +115,7 @@ def logreg_train(docs: DataFrame, rounds: int = LR_ROUNDS) -> DataFrame:
             F.first("w1").alias("w1"),
             F.first("w2").alias("w2"),
         )
-        w = stats.select(
+        w = _cut(stats.select(
             F.round(F.col("w0") - F.lit(LR_RATE) * F.col("g0"), 9).alias(
                 "w0"
             ),
@@ -124,7 +125,7 @@ def logreg_train(docs: DataFrame, rounds: int = LR_ROUNDS) -> DataFrame:
             F.round(F.col("w2") - F.lit(LR_RATE) * F.col("g2"), 9).alias(
                 "w2"
             ),
-        ).localCheckpoint(eager=True)
+        ))
         row = w.crossJoin(
             F.broadcast(stats.select("log_loss", "accuracy"))
         ).select(
@@ -1204,17 +1205,16 @@ def poisson_train(events: DataFrame) -> DataFrame:
     span = daily.agg(
         F.min("day").alias("d0"), F.count("*").alias("n_days")
     )
-    days = (
+    days = _cut(
         daily.crossJoin(F.broadcast(span))
         .select("y", F.datediff("day", "d0").alias("t"))
-        .localCheckpoint(eager=True)
     )
     mid = days.agg(
         (F.sum("t") / F.count("*")).alias("tbar")
     )
-    base = days.crossJoin(F.broadcast(mid)).select(
+    base = _cut(days.crossJoin(F.broadcast(mid)).select(
         "y", (F.col("t").cast("double") - F.col("tbar")).alias("z")
-    ).localCheckpoint(eager=True)
+    ))
     beta = base.agg(
         F.lit(0.0).alias("b0"), F.lit(0.0).alias("b1")
     ).select("b0", "b1")
@@ -1535,7 +1535,7 @@ def platt_calibration(events: DataFrame) -> DataFrame:
             (F.col("event_type") == "purchase").cast("int")
         ).alias("y"),
     )
-    bins = (
+    bins = _cut(
         per_user.select(
             F.least(F.col("x"), F.lit(ISO_BINS - 1))
             .cast("int")
@@ -1544,8 +1544,7 @@ def platt_calibration(events: DataFrame) -> DataFrame:
         )
         .groupBy("b")
         .agg(F.count("*").alias("sw"), F.sum("y").alias("sy"))
-        .localCheckpoint(eager=True)  # <= 32 rows, reused per round
-    )
+    )  # <= 32 rows, reused per round
     s = F.col("b").cast("double") / F.lit(float(ISO_BINS))
     w = None  # 1-row (a, c)
     for _ in range(PLATT_ROUNDS):

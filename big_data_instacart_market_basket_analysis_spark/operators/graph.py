@@ -35,13 +35,9 @@ orderkey. Design rules:
 - **One per-round cut rule.** A superstep's state that the next step
   reads more than once (the Bellman-Ford distance table, the k-core
   survivors, the HITS half-steps, the pivot-BFS table) is cut each
-  round with a lazy ``localCheckpoint(eager=False)``: it materializes
-  inside the consuming action's first pass, so a round costs no
-  driver-synchronous job, while the plan stays one join + one agg per
-  round instead of doubling. State read once (PageRank's ranks, a
-  final round read only by the returned frame) is not cut. The k-truss
-  peel alone cuts eagerly: its later rounds filter, semi-join and
-  union the same tables.
+  round with ``_staging.cut``, so the plan stays one join + one agg
+  per round instead of doubling. State read once (PageRank's ranks, a
+  final round read only by the returned frame) is not cut.
 """
 
 from __future__ import annotations
@@ -49,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._staging import cut as _cut
 from ._staging import stage as _stage
 
 #: rank scale (millionths), damping as integer percent, supersteps.
@@ -429,11 +426,7 @@ def _bellman_ford(edges: DataFrame, rounds: int, out: str) -> DataFrame:
             .agg(F.min(out).alias(out))
         )
         if rnd < rounds - 1:
-            # lazy: materializes once inside the final action's first
-            # pass (no per-round driver-synchronous job — the eager
-            # variant measured SLOWER, 3.7 -> 4.7 s, because 3 extra
-            # small jobs outweighed the recompute they saved)
-            dist = dist.localCheckpoint(eager=False)
+            dist = _cut(dist)
     return dist
 
 
@@ -447,7 +440,7 @@ def bfs_distances(
 
     ``_bellman_ford`` with every edge weighing 1: fixed unrolled
     supersteps, integer distances, no driver collect, and the
-    distance table cut lazily each round like SSSP's. This
+    distance table cut each round like SSSP's. This
     full-relaxation form re-joins the whole distance table each round
     (correct and simplest for fixed small ``hops``); the production
     refinement for deep traversals is delta-frontier expansion — join
@@ -530,7 +523,7 @@ def sssp_weighted(
         .cast("bigint")
         .alias("cents"),
     )
-    edges = (
+    edges = _cut(
         _edges_staged(lineitem)
         .join(
             F.broadcast(
@@ -558,11 +551,6 @@ def sssp_weighted(
                 + F.abs(F.col("ca") - F.col("cb"))
             ).cast("bigint").alias("w"),
         )
-        # lazy (r10): referenced every round, but an EAGER checkpoint
-        # here is a driver-sync job per call; materializing inside the
-        # action's first pass costs the same write once and nothing
-        # when the query result itself is consumed once.
-        .localCheckpoint(eager=False)
     )
     return _bellman_ford(edges, rounds, "dist_cents")
 
@@ -732,12 +720,12 @@ def _pivot_bfs_from(
     """Forward supersteps from an explicit pivot frame (column ``s``)
     — the kernel behind `_pivot_bfs` and the stability eval's
     disjoint pivot sets."""
-    dist = piv.select(
+    dist = _cut(piv.select(
         "s",
         F.col("s").alias("node"),
         F.lit(0).alias("dist"),
         F.lit(1).cast("bigint").alias("sigma"),
-    ).localCheckpoint(eager=False)
+    ))
     for r in range(1, hops + 1):
         front = dist.filter(F.col("dist") == r - 1).select(
             "s", F.col("node").alias("a"), "sigma"
@@ -751,7 +739,7 @@ def _pivot_bfs_from(
             .groupBy("s", "node")
             .agg(F.sum("sigma").alias("add"))
         )
-        dist = (
+        dist = _cut(
             dist.join(cand, ["s", "node"], "full")
             .select(
                 "s",
@@ -759,10 +747,6 @@ def _pivot_bfs_from(
                 F.coalesce(F.col("dist"), F.lit(r)).alias("dist"),
                 F.coalesce(F.col("sigma"), F.col("add")).alias("sigma"),
             )
-            # lazy (r10): materializes once inside the consuming
-            # action; the eager per-round variant cost a driver-sync
-            # job per superstep (guide SS1.2)
-            .localCheckpoint(eager=False)
         )
     return dist
 
@@ -856,7 +840,7 @@ def _betweenness_from_bfs(
                 ).alias("delta")
             )
         )
-        delta_prev = contrib.localCheckpoint(eager=False)  # lazy, r10
+        delta_prev = _cut(contrib)
         level_frames.append(delta_prev)
     allv = level_frames[0]
     for fr in level_frames[1:]:
@@ -1033,7 +1017,7 @@ def betweenness_stability_eval(
     bb = _betweenness_from_bfs(
         edges, _pivot_bfs_from(edges, pb, hops), hops
     ).select("node", F.col("betweenness").alias("y"))
-    bb = bb.localCheckpoint(eager=False)  # lazy, r10
+    bb = _cut(bb)
     # build side hinted, as in `_pivot_bfs_from`
     both = ba.join(bb.hint("shuffle_hash"), "node")
     topa = ba.orderBy(F.desc("x"), "node").limit(k).select("node")
@@ -1414,7 +1398,7 @@ SIM_TOP_K = 5
 #: `rec_coverage_diversity` each rebuilt the identical distinct
 #: (order, part) self-join + pair agg + degree joins — the captured
 #: rec_coverage before-plan inlines that prefix FOUR times (2213 plan
-#: lines). One eager checkpoint of the scored pair table (co-occurring
+#: lines). One cut of the scored pair table (co-occurring
 #: pair grain, the same table the DuckDB oracle MATERIALIZEs) plus the
 #: part-grain degree table serves every consumer.
 def _cooc_staged(lineitem: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -1841,10 +1825,7 @@ def k_core_membership(
     edges = _edges_staged(lineitem)
     deg0 = edges.groupBy("a").agg(F.count("*").alias("deg0"))
     alive = deg0.filter(F.col("deg0") >= k).select(F.col("a").alias("node"))
-    # lazy (r10): each eager per-round checkpoint was a driver-
-    # synchronous job; the lazy variant materializes once inside the
-    # consuming action (the sssp/hits batch-1 lesson, guide §5).
-    alive = alive.localCheckpoint(eager=False)
+    alive = _cut(alive)
     last = None
     for _ in range(rounds):
         prev = alive
@@ -1858,7 +1839,7 @@ def k_core_membership(
             .groupBy("a")
             .agg(F.count("*").alias("core_deg"))
         )
-        last = ind_deg.localCheckpoint(eager=False)
+        last = _cut(ind_deg)
         alive = (
             last.filter(F.col("core_deg") >= k)
             .select(F.col("a").alias("node"))
@@ -2120,7 +2101,7 @@ def rec_coverage_diversity(
     # width). catalog_size = |ords| — the same distinct-part set the
     # old separate distinct-scan counted.
     ords, pairs = _cooc_staged(lineitem)
-    recs = item_similarity(lineitem, k).localCheckpoint(eager=True)
+    recs = _cut(item_similarity(lineitem, k))
     catalog = ords.agg(F.count("*").alias("catalog_size"))
     cover = recs.agg(
         F.count_distinct("item").alias("n_anchors"),
@@ -2360,19 +2341,17 @@ def ktruss_edges(
     all-integer parity with the unrolled materialized-CTE oracle.
     """
     min_sup = k - 2
-    edges = (
+    edges = _cut(
         _edges_staged(lineitem)
         .filter(F.col("a") < F.col("b"))
-        .localCheckpoint(eager=True)
     )
     # credit derives map-only from the SESSION-STAGED triangle list
     # (shared with graph_triangles), so the wedge closure never
     # re-runs for the peel — and needs no checkpoint of its own.
     credit = _credit_from_triangles(_triangles_staged(lineitem))
-    sup0 = (
+    sup0 = _cut(
         credit.groupBy("a", "b")
         .agg(F.count("*").alias("support"))
-        .localCheckpoint(eager=True)
     )
     cur_sup = sup0
     dead_tris = None
@@ -2380,7 +2359,7 @@ def ktruss_edges(
         last_round = r == rounds - 2
         # peeled is consumed by exactly ONE semi-join and derives from
         # the checkpointed cur_sup — no checkpoint needed (r9: each
-        # eager checkpoint is a driver-synchronous job; guide §1.2).
+        # cut is a driver-synchronous job; guide §1.2).
         peeled = cur_sup.filter(F.col("support") < min_sup).select(
             "a", "b"
         )
@@ -2396,9 +2375,9 @@ def ktruss_edges(
         if dead_tris is not None:
             nd = nd.join(dead_tris, ["u", "v", "w"], "leftanti")
         # last round: nd feeds only `lost` (the union below is
-        # skipped), so it can stay lazy too.
+        # skipped), so it is not cut.
         if not last_round:
-            nd = nd.localCheckpoint(eager=True)
+            nd = _cut(nd)
         # cumulative dead set: checkpointed per round so the
         # unionByName chain's lineage stays O(1) per round instead of
         # O(rounds) (r6 verdict task 4). First round skips the
@@ -2408,9 +2387,7 @@ def ktruss_edges(
             dead_tris = (
                 nd
                 if dead_tris is None
-                else dead_tris.unionByName(nd).localCheckpoint(
-                    eager=True
-                )
+                else _cut(dead_tris.unionByName(nd))
             )
         lost = (
             credit.join(nd, ["u", "v", "w"], "leftsemi")
@@ -2430,10 +2407,10 @@ def ktruss_edges(
             )
         )
         # the final round's support table feeds ONE consumer (the
-        # output join) — leave it lazy; earlier rounds feed two
-        # filters next round, so materialize.
+        # output join) — leave it uncut; earlier rounds feed two
+        # filters next round, so cut.
         if not last_round:
-            cur_sup = cur_sup.localCheckpoint(eager=True)
+            cur_sup = _cut(cur_sup)
     final = cur_sup.filter(F.col("support") >= min_sup).select(
         "a", "b", F.col("support").alias("support_final")
     )
@@ -2557,7 +2534,7 @@ def hits_scores(
     independent global, broadcast back. Output per part:
     l_partkey, n_buyers, authority (millionths).
     """
-    edges = (
+    edges = _cut(
         orders.select(
             F.col("o_orderkey").alias("ok"),
             F.col("o_custkey").alias("cust"),
@@ -2571,9 +2548,6 @@ def hits_scores(
         )
         .select("cust", "part")
         .distinct()
-        # lazy (r10): consumed by every half-step, but materialization
-        # inside the first pass replaces the per-call driver-sync job
-        .localCheckpoint(eager=False)
     )
     idiv = lambda a, b: F.call_function(  # noqa: E731
         "div", a.cast("long"), b.cast("long")
@@ -2583,20 +2557,19 @@ def hits_scores(
     )
     auth = None
     # r10 (guide §2.4/§5): araw feeds BOTH its own max-normalizer and
-    # the next half-step, and hraw likewise — left lazy, every
+    # the next half-step, and hraw likewise — left uncut, every
     # consumer re-inlined the whole alternating prefix (the captured
     # before-plan is 102 Exchanges of the edge list for 2 iterations,
     # with zero ReusedExchange). Each half-step result is KEY-grain
-    # (parts / customers, never edges), so an eager checkpoint per
-    # half-step bounds the plan at one join+agg per job. The final
-    # round's hub is dead (the return consumes only auth) and stays
-    # lazy — the ktruss last-round trim.
+    # (parts / customers, never edges), so a cut per half-step
+    # bounds the plan at one join+agg per job. The final round's hub
+    # is dead (the return consumes only auth) and is not computed —
+    # the ktruss last-round trim.
     for it in range(iters):
-        araw = (
+        araw = _cut(
             edges.join(hub, "cust")
             .groupBy("part")
             .agg(F.sum("h").alias("ar"))
-            .localCheckpoint(eager=False)
         )
         amax = araw.agg(F.max("ar").alias("am"))
         auth = araw.crossJoin(F.broadcast(amax)).select(
@@ -2605,11 +2578,10 @@ def hits_scores(
         )
         if it == iters - 1:
             break
-        hraw = (
+        hraw = _cut(
             edges.join(auth, "part")
             .groupBy("cust")
             .agg(F.sum("a").alias("hr"))
-            .localCheckpoint(eager=False)
         )
         hmax = hraw.agg(F.max("hr").alias("hm"))
         hub = hraw.crossJoin(F.broadcast(hmax)).select(

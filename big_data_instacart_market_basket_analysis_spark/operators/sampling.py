@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.loaders import local_rows
+from ._staging import cut as _cut
 from . import ranking as _rank
 
 #: split fractions: 90% train, 5% val, 5% test.
@@ -589,7 +590,7 @@ def negative_samples(
     """
     from .factorization import _ratings
 
-    ratings = _ratings(t).localCheckpoint(eager=True)
+    ratings = _cut(_ratings(t))
     prods = _rank.global_ranked(
         ratings.select("productID").distinct(), [F.col("productID")]
     ).select(

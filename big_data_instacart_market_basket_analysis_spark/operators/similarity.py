@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.loaders import local_rows
+from ._staging import cut as _cut
 from ._staging import spread as _spread
 from ._staging import stage as _stage
 
@@ -1848,14 +1849,13 @@ def _pq_index_staged(emb: DataFrame) -> tuple:
 
     def build() -> tuple:
         cents_by_sub = _pq_codebook_rows(emb)
-        codes = (
+        codes = _cut(
             _pq_subvectors(emb)
             .select(
                 F.col("vec_id").alias("neighbor_id"),
                 "sub",
                 (_pq_key_lit(cents_by_sub) % 256).alias("cid"),
             )
-            .localCheckpoint(eager=True)
         )
         return cents_by_sub, codes
 
@@ -2252,7 +2252,9 @@ def mmr_select(
     w_rel = Window.partitionBy("query_id").orderBy(
         F.col("rel").desc(), "neighbor_id"
     )
-    cand = (
+    # |Q|*k1 rows: cut once so the k unrolled rounds (whose lineage
+    # would otherwise nest k deep) each read memory, not the corpus
+    cand = _cut(
         F.broadcast(queries)
         .join(corpus, F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
@@ -2266,10 +2268,6 @@ def mmr_select(
         .withColumn("rn", F.row_number().over(w_rel))
         .filter(F.col("rn") <= k1)
         .select("query_id", "neighbor_id", "rel", "nv", "nnorm")
-        # |Q|*k1 rows: stage once so the k unrolled rounds (whose
-        # lineage would otherwise nest k deep) each read memory, not
-        # the corpus
-        .localCheckpoint(eager=True)
     )
     sel = (
         cand.withColumn("rn", F.row_number().over(w_rel))
@@ -2327,7 +2325,7 @@ def mmr_select(
                 "query_id", F.lit(r).alias("pick"), "neighbor_id", "score"
             )
         )
-        sel = sel.unionByName(pick).localCheckpoint(eager=True)
+        sel = _cut(sel.unionByName(pick))
     return sel
 
 
@@ -2727,7 +2725,7 @@ def pca_power_iteration(
     # digit vs the oracle at some other scale factor; the 12-dp iterate
     # re-round per round is what bounds the drift (same argument that
     # made the nondeterministic Spark fold match DuckDB at every SF).
-    a = pca_gram(emb).localCheckpoint(eager=True)
+    a = _cut(pca_gram(emb))
     # r9 optimization (guide §1.2): the 8 power rounds iterate a
     # dims-grain state (64 doubles) against the EXACT-integer 4096-row
     # A — bounded by the embedding dimensionality, never by corpus
@@ -2915,12 +2913,11 @@ def _gann_index_build(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
         .filter(F.col("r") <= GANN_NAV_DEGREE)
         .select("src", "dst")
     )
-    edges = (
+    edges = _cut(
         cell_edges.unionByName(cg_edges)
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    return edges, cents.localCheckpoint(eager=True)
+    return edges, _cut(cents)
 
 
 def graph_ann_topk(
@@ -2993,11 +2990,10 @@ def graph_ann_topk_plan(
         # nodes at 3+3 rounds). The frontier is n_queries x beam rows
         # (tiny), so an eager checkpoint per round keeps the plan
         # linear for the price of a millisecond job.
-        nav = (
+        nav = _cut(
             scored.withColumn("r", F.row_number().over(wq_c))
             .filter(F.col("r") <= GANN_NAV_BEAM)
             .select("query_id", "cid")
-            .localCheckpoint(eager=True)
         )
     frontier = nav.select("query_id", F.col("cid").alias("node"))
     wq_n = Window.partitionBy("query_id").orderBy(
@@ -3017,11 +3013,10 @@ def graph_ann_topk_plan(
             .join(F.broadcast(queries_n), "query_id")
             .withColumn("s", _cosine_pre("qv", "v", "qn", "vn"))
         )
-        frontier = (
+        frontier = _cut(
             scored.withColumn("r", F.row_number().over(wq_n))
             .filter(F.col("r") <= GANN_BEAM)
             .select("query_id", "node", "s")
-            .localCheckpoint(eager=True)
         )
     out = frontier.filter(F.col("node") != F.col("query_id"))
     wk = Window.partitionBy("query_id").orderBy(

@@ -15,6 +15,7 @@ from ...sources.loaders import local_rows
 from big_data_instacart_market_basket_analysis_spark.operators import (
     ranking as _rank,
 )
+from .._staging import cut as _cut
 
 
 
@@ -1102,9 +1103,7 @@ def markov_removal_attribution(events: DataFrame) -> DataFrame:
     tot = var_counts.groupBy("variant", "src").agg(
         F.sum("cnt").alias("n_src")
     )
-    trans = var_counts.join(tot, ["variant", "src"]).localCheckpoint(
-        eager=True
-    )
+    trans = _cut(var_counts.join(tot, ["variant", "src"]))
     # Absorption rounds run DRIVER-SIDE on the collected transition
     # table (r9 optimization, guide §1.2): the table is state-machine
     # grain — (1 + |MRA_CHANNELS|) variants x (event-type vocabulary
@@ -1754,13 +1753,12 @@ def ipf_raking(events: DataFrame) -> DataFrame:
     # round references the weight table twice (margin agg + rescale
     # join), so without a lineage cut the fact agg re-runs 4^rounds
     # times (measured 12 s -> ~1 s at sf0.01).
-    cells = (
+    cells = _cut(
         events.groupBy(
             "event_type",
             (F.col("user_id") % 2).cast("int").alias("variant"),
         )
         .agg(F.count("*").alias("n_obs"))
-        .localCheckpoint(eager=True)
     )
     tot = cells.agg(F.sum("n_obs").alias("n"), F.count("*").alias("k"))
     # target margins: each type gets n/n_types, each variant n/2 —
@@ -2049,7 +2047,7 @@ def adstock_daily(events: DataFrame) -> DataFrame:
     join is days x WINDOW rows, calendar-bounded. Output per day:
     day, clicks, rev_cents, adstock (round 6), saturated (round 6).
     """
-    daily = (
+    daily = _cut(
         events.groupBy(F.to_date("ts").alias("day"))
         .agg(
             F.sum(
@@ -2062,8 +2060,7 @@ def adstock_daily(events: DataFrame) -> DataFrame:
                 ).otherwise(0)
             ).alias("rev_cents"),
         )
-        .localCheckpoint(eager=True)  # day-grain; 3 consumers
-    )
+    )  # day-grain; 3 consumers
     contrib = (
         daily.alias("t")
         .join(

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from big_data_instacart_market_basket_analysis_spark.operators import (
     ranking as _rank,
 )
+from .._staging import cut as _cut
 
 from .causal import AB_METRIC_TYPE
 from .fits import AR2_VAL_SCALE
@@ -57,7 +58,7 @@ def rfm_segments(events: DataFrame) -> DataFrame:
         ("m_score", [F.desc("monetary"), F.col("user_id")]),
     )
     for i, (score, order) in enumerate(passes):
-        # lazy checkpoint between passes (r10, guide §2.4/§1.2):
+        # cut between passes (r10, guide §2.4/§1.2):
         # each pass's repartitionByRange runs a SAMPLING job over its
         # child, so chained passes re-execute every preceding pass's
         # full lineage once per later pass — O(k²) passes over the
@@ -66,7 +67,7 @@ def rfm_segments(events: DataFrame) -> DataFrame:
         # ranks are pure integer functions of the total order, so the
         # result is bit-identical.
         if i > 0:
-            cur = cur.localCheckpoint(eager=False)
+            cur = _cut(cur)
         ranked = _rank.global_ranked(cur, order)
         cur = ranked.withColumn(
             score,
@@ -760,15 +761,14 @@ def newsvendor_stock(lineitem: DataFrame) -> DataFrame:
     # identical and the plan drops one lineitem scan chain and the
     # tot join (r10, guide §2.4 — two operations keyed the same way
     # share one exchange). cum then feeds two consumers (pick,
-    # achieved); the lazy checkpoint stops the remaining subtree from
+    # achieved); the cut stops the remaining subtree from
     # inlining twice (4 scans -> 1, measured).
     wp = Window.partitionBy("product")
-    cum = (
+    cum = _cut(
         per_v.withColumn("cum", F.sum("c").over(wv))
         .withColumn("n_days", F.sum("c").over(wp))
         .filter(F.col("n_days") >= NV_MIN_DAYS)
         .drop("c")
-        .localCheckpoint(eager=False)
     )
     qualifying = cum.filter(
         F.col("cum") * NV_CR_DEN >= NV_CR_NUM * F.col("n_days")

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from big_data_instacart_market_basket_analysis_spark.operators import (
     ranking as _rank,
 )
+from .._staging import cut as _cut
 
 from .fits import AR2_VAL_SCALE
 
@@ -405,9 +406,7 @@ def markov_stationary(
         .agg(F.count("*").alias("n"))
     )
     totals = pairs.groupBy("from_type").agg(F.sum("n").alias("n_from"))
-    trans = pairs.join(F.broadcast(totals), "from_type").localCheckpoint(
-        eager=True
-    )
+    trans = _cut(pairs.join(F.broadcast(totals), "from_type"))
     n_states = totals.agg(F.count("*").alias("k"))
     pi = totals.select(F.col("from_type").alias("state")).crossJoin(
         F.broadcast(n_states)
@@ -1712,15 +1711,15 @@ def haar_energy(events: DataFrame) -> DataFrame:
         .filter(F.col("rn") <= HAAR_N)
         .select("rn", "rev")
     )
-    cur = first.groupBy().agg(
+    cur = _cut(first.groupBy().agg(
         F.expr(
             "transform(array_sort(collect_list(struct(rn, rev))),"
             " x -> x.rev)"
         ).alias("a0")
-    ).localCheckpoint(eager=True)
+    ))
     for lv in range(1, HAAR_LEVELS + 1):
         m = HAAR_N >> lv
-        cur = cur.select(
+        cur = _cut(cur.select(
             "*",
             F.expr(
                 f"transform(sequence(0, {m - 1}), i ->"
@@ -1735,7 +1734,7 @@ def haar_energy(events: DataFrame) -> DataFrame:
             ).alias(f"e{lv}"),
         ).select(
             f"a{lv}", *[f"e{j}" for j in range(1, lv + 1)]
-        ).localCheckpoint(eager=True)
+        ))
     return cur.selectExpr(
         "stack({}, {}) AS (level, n_coeffs, detail_energy)".format(
             HAAR_LEVELS,
@@ -3486,9 +3485,9 @@ def sample_entropy(events: DataFrame) -> DataFrame:
     # self-join references it twice, and an unstaged subtree would
     # duplicate the global window (and its single-partition sort) in
     # the physical plan — the sweep whitelist pins this at ONE.
-    win_t = win.crossJoin(
+    win_t = _cut(win.crossJoin(
         F.broadcast(tot.select(rt.alias("r_tol"), "n_days"))
-    ).localCheckpoint(eager=True)
+    ))
     a_ = win_t.alias("a")
     b_ = win_t.alias("b")
     pairs = a_.join(

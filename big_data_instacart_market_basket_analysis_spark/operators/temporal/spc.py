@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from big_data_instacart_market_basket_analysis_spark.operators import (
     ranking as _rank,
 )
+from .._staging import cut as _cut
 
 from .fits import AR2_VAL_SCALE
 
@@ -831,13 +832,13 @@ def changepoint_split(events: DataFrame) -> DataFrame:
     (last day of the left segment), n_left, n_right, sum_left_cents,
     sum_right_cents, mean_left, mean_right, delta_mean (round 6).
     """
-    daily = events.filter(F.col("event_type") == "purchase").groupBy(
+    daily = _cut(events.filter(F.col("event_type") == "purchase").groupBy(
         F.to_date("ts").alias("day")
     ).agg(
         F.sum(F.round(F.col("value") * 100, 0).cast("bigint")).alias(
             "x"
         )
-    ).localCheckpoint(eager=True)  # day-grain; consumed by 4 branches
+    ))  # day-grain; consumed by 4 branches
     tot = daily.agg(
         F.count("*").alias("n"), F.sum("x").alias("s")
     )
@@ -1051,14 +1052,14 @@ def sprt_monitor(events: DataFrame) -> DataFrame:
     Output per day: day, n_cum, s_cum, llr (round 6), decision
     ('accept_h1' / 'accept_h0' / 'continue').
     """
-    daily = events.filter(
+    daily = _cut(events.filter(
         F.col("event_type").isin("click", "purchase")
     ).groupBy(F.to_date("ts").alias("day")).agg(
         F.count("*").alias("n"),
         F.sum(
             (F.col("event_type") == "purchase").cast("int")
         ).alias("s"),
-    ).localCheckpoint(eager=True)
+    ))
     cum = (
         daily.alias("a")
         .join(daily.alias("b"), F.col("b.day") <= F.col("a.day"))
@@ -1148,7 +1149,7 @@ def grubbs_extreme(events: DataFrame) -> DataFrame:
     exceeds_three_sigma.
     """
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    daily = (
+    daily = _cut(
         events.filter(F.col("event_type") == "purchase")
         .groupBy(F.to_date("ts").alias("day"))
         .agg(
@@ -1156,8 +1157,7 @@ def grubbs_extreme(events: DataFrame) -> DataFrame:
                 F.round(F.col("value") * 100, 0).cast("bigint")
             ).alias("x")
         )
-        .localCheckpoint(eager=True)  # day-grain; read twice
-    )
+    )  # day-grain; read twice
     m = daily.agg(
         F.count("*").alias("n"),
         F.sum("x").alias("s"),

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from big_data_instacart_market_basket_analysis_spark.operators import (
     ranking as _rank,
 )
+from .._staging import cut as _cut
 
 
 
@@ -641,16 +642,15 @@ def cox_ph_train(events: DataFrame) -> DataFrame:
         .alias("x"),
         F.col("dp").isNotNull().cast("int").alias("event"),
     )
-    cell = (
+    cell = _cut(
         users.groupBy("t", "x")
         .agg(
             F.count("*").alias("n_exit"),
             F.sum("event").alias("n_event"),
         )
-        .localCheckpoint(eager=True)  # calendar x bins grid
-    )
+    )  # calendar x bins grid
     s = F.col("x").cast("double") / F.lit(float(COX_BINS))
-    ev = (
+    ev = _cut(
         cell.groupBy("t")
         .agg(
             F.sum("n_event").alias("d"),
@@ -658,12 +658,11 @@ def cox_ph_train(events: DataFrame) -> DataFrame:
         )
         .filter(F.col("d") > 0)
         .select(F.col("t").alias("te"), "d", "s_sum")
-        .localCheckpoint(eager=True)
     )
     # bounded risk-set expansion: every grid cell joins every event
     # day it is at risk for (|ev_days| x |grid| rows, both
     # calendar/bin-bounded)
-    risk = (
+    risk = _cut(
         ev.select("te")
         .join(
             cell.select("t", "x", "n_exit"),
@@ -671,7 +670,6 @@ def cox_ph_train(events: DataFrame) -> DataFrame:
         )
         .groupBy("te", "x")
         .agg(F.sum("n_exit").alias("r"))
-        .localCheckpoint(eager=True)
     )
     beta = None  # 1-row (beta)
     out = None
@@ -707,13 +705,13 @@ def cox_ph_train(events: DataFrame) -> DataFrame:
             F.sum("u_t").alias("u"),
             F.sum("i_t").alias("i"),
         )
-        beta = stat.select(
+        beta = _cut(stat.select(
             F.round(
                 F.col("beta_prev") + F.col("u") / F.col("i"), 9
             ).alias("beta"),
             F.col("u").alias("u"),
             F.col("i").alias("i"),
-        ).localCheckpoint(eager=True)
+        ))
         row = beta.select(
             F.lit(rnd).alias("round"),
             "beta",

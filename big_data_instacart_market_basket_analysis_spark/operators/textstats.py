@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..sources.loaders import local_rows
+from ._staging import cut as _cut
 from ._staging import spread as _spread
 from ._staging import stage as _stage
 from .ranking import bucket_prefix_offsets, global_ranked, value_prefix
@@ -2356,24 +2357,23 @@ def nb_quality_cv(docs: DataFrame, n_folds: int = NB_CV_FOLDS) -> DataFrame:
     k = n_folds
     # labels (doc grain, 3 consumers) and tok_fold (vocab x k grain,
     # 4 consumers: totals, fold scalars, exclusive-vocab, contrib)
-    # are both bounded and multiply-consumed — lazy checkpoints stop
+    # are both bounded and multiply-consumed — cuts stop
     # the gopher pass and the (t, fold) agg from re-running per
     # consumer (r10, guide §2.4). Values are exact integers.
-    labels = (
+    labels = _cut(
         gopher_rules(docs)
         .select("doc_id", "keep")
         .withColumn("fold", F.pmod("doc_id", F.lit(k)))
-        .localCheckpoint(eager=False)
     )
     toks = (
         docs.select("doc_id", F.explode(_tokens_col()).alias("t"))
         .filter(F.col("t") != "")
         .join(labels, "doc_id")
     )
-    tok_fold = toks.groupBy("t", "fold").agg(
+    tok_fold = _cut(toks.groupBy("t", "fold").agg(
         F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("ckf"),
         F.sum(F.when(F.col("keep"), 0).otherwise(1)).alias("crf"),
-    ).localCheckpoint(eager=False)
+    ))
     tok_tot = tok_fold.groupBy("t").agg(
         F.sum("ckf").alias("ck"), F.sum("crf").alias("cr")
     )
@@ -2864,9 +2864,9 @@ def _bpe_learn(docs: DataFrame, n_merges: int) -> list:
         .groupBy("w")
         .agg(F.count("*").alias("freq"))
     )
-    state = vocab.select(
+    state = _cut(vocab.select(
         F.regexp_replace("w", "(.)", r"|$1|").alias("s"), "freq"
-    ).localCheckpoint(eager=True)
+    ))
     merges = []
     for step in range(1, n_merges + 1):
         syms = F.split(
@@ -2892,12 +2892,12 @@ def _bpe_learn(docs: DataFrame, n_merges: int) -> list:
             break
         a, b, c = best[0]["a"], best[0]["b"], best[0]["c"]
         merges.append((step, a, b, a + b, c))
-        state = state.withColumn(
+        state = _cut(state.withColumn(
             "s",
             F.replace(
                 F.col("s"), F.lit(f"|{a}||{b}|"), F.lit(f"|{a}{b}|")
             ),
-        ).localCheckpoint(eager=True)
+        ))
     return merges
 
 
@@ -4887,14 +4887,13 @@ def source_vocab_overlap(docs: DataFrame) -> DataFrame:
     Output per source pair (s1 < s2): source_1, source_2, vocab_1,
     vocab_2, n_shared, jaccard.
     """
-    sv = (
+    sv = _cut(
         docs.select(
             "source", F.explode(_tokens_col()).alias("w")
         )
         .filter(F.col("w") != "")
         .distinct()
-        .localCheckpoint(eager=True)  # (source, token) grain
-    )
+    )  # (source, token) grain
     vocab = sv.groupBy("source").agg(F.count("*").alias("v"))
     pairs = (
         sv.alias("x")
@@ -6263,7 +6262,7 @@ def _unigram_learn(docs: DataFrame) -> tuple:
     # the word-type table is tiny relative to the corpus; one
     # partition keeps every downstream vocabulary-grain job at one
     # task instead of paying shuffle-width task overhead per round.
-    words = _unigram_words(docs).localCheckpoint(eager=True).coalesce(1)
+    words = _cut(_unigram_words(docs)).coalesce(1)
     seed = (
         words.select(
             F.explode(

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._staging import cut as _cut
 from ._staging import stage as _stage
 
 TREE_BINS = 16
@@ -112,8 +113,8 @@ def _staged_feats_binned(events: DataFrame) -> tuple[DataFrame, DataFrame]:
     localCheckpoint each turns 12 corpus aggs into 1."""
 
     def build() -> tuple[DataFrame, DataFrame]:
-        feats = _user_features(events).localCheckpoint(eager=True)
-        return feats, _binned_from_feats(feats).localCheckpoint(eager=True)
+        feats = _cut(_user_features(events))
+        return feats, _cut(_binned_from_feats(feats))
 
     return _stage("tree_feats_binned", events, build, checkpoint=False)
 
@@ -512,10 +513,9 @@ def gbm_train(events: DataFrame, rounds: int = GB_ROUNDS) -> DataFrame:
     f0 = resid.agg(
         F.expr("CAST(floor(sum(r) / count(*)) AS BIGINT)").alias("f0v")
     )
-    resid = (
+    resid = _cut(
         resid.crossJoin(F.broadcast(f0))
         .select("user_id", (F.col("r") - F.col("f0v")).alias("r"))
-        .localCheckpoint(eager=True)
     )
     wcum = (
         Window.partitionBy("fid")
@@ -579,10 +579,9 @@ def gbm_train(events: DataFrame, rounds: int = GB_ROUNDS) -> DataFrame:
                 .alias("step"),
             )
         )
-        resid = (
+        resid = _cut(
             resid.join(userbin, "user_id")
             .select("user_id", (F.col("r") - F.col("step")).alias("r"))
-            .localCheckpoint(eager=True)
         )
         sse = resid.agg(
             F.sum(F.col("r") * F.col("r")).alias("sse")
@@ -806,7 +805,7 @@ def gbm_permutation_importance(events: DataFrame) -> DataFrame:
         ),
         [F.col("h"), F.col("user_id")],
     )
-    rotation = (
+    rotation = _cut(
         ranked.select(
             "user_id",
             (F.col("_rk") % F.col("_n_total") + 1).alias("_dk"),
@@ -819,7 +818,6 @@ def gbm_permutation_importance(events: DataFrame) -> DataFrame:
             "_dk",
         )
         .select("user_id", "donor_id")
-        .localCheckpoint(eager=True)
     )
     out = None
     for f in range(3):
@@ -975,7 +973,7 @@ def rf_train(events: DataFrame, n_trees: int = RF_TREES) -> DataFrame:
         ).cast("bigint")
         % 100
     )
-    wt = (
+    wt = _cut(
         labels.select(
             "user_id",
             "label",
@@ -991,7 +989,6 @@ def rf_train(events: DataFrame, n_trees: int = RF_TREES) -> DataFrame:
                 .otherwise(2)
             ).cast("bigint"),
         )
-        .localCheckpoint(eager=True)
     )
     boot = data.join(
         wt.filter(F.col("w") > 0).select("user_id", "tree", "w"),
@@ -1030,13 +1027,12 @@ def rf_train(events: DataFrame, n_trees: int = RF_TREES) -> DataFrame:
         9,
     )
     wsel = Window.partitionBy("tree").orderBy("score", "fid", "bin")
-    split = (
+    split = _cut(
         cum.filter((nl > 0) & (nr > 0))
         .select("tree", "fid", "bin", score.alias("score"))
         .withColumn("rk", F.row_number().over(wsel))
         .filter(F.col("rk") == 1)
         .select("tree", "fid", "bin", "score")
-        .localCheckpoint(eager=True)
     )
     tot = wt.filter(F.col("w") > 0).groupBy("tree").agg(
         F.sum("w").alias("n"),
@@ -1074,13 +1070,12 @@ def rf_train(events: DataFrame, n_trees: int = RF_TREES) -> DataFrame:
             .alias("side"),
         )
     )
-    leaves = (
+    leaves = _cut(
         sides.groupBy("tree", "side")
         .agg(
             F.sum("w").alias("n"),
             F.sum(F.col("w") * F.col("label")).alias("pos"),
         )
-        .localCheckpoint(eager=True)
     )
     leaf_rows = leaves.select(
         F.concat(

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from ..operators._staging import cut as _cut
 from ..operators._staging import stage as _stage
 from ..sources.loaders import (
     ensure_nanos_conf,
@@ -525,7 +526,7 @@ def _fold(
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         nonlocal state
-        state = step(batch_df, state).localCheckpoint(eager=True)
+        state = _cut(step(batch_df, state))
 
     root = _stream_root(spark, sf_dir, tag)
     _drain(
@@ -1294,9 +1295,9 @@ def run_stream_merge_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.max("last").alias("last"),
                 )
             )
-        merged = partial.select(
+        merged = _cut(partial.select(
             "user_id", "n_events", "last", bucket
-        ).localCheckpoint(eager=True)
+        ))
         from ..sources.sinks import upsert_partitions
 
         upsert_partitions(spark, merged, target, ["bucket"])

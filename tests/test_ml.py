@@ -102,6 +102,29 @@ def test_rf_submission_covers_all_test_orders(spark):
     assert bad == 0
 
 
+def test_model_fits_follow_rows_not_layout(spark, monkeypatch):
+    """The same candidate rows in two partition layouts give the same
+    submissions and cross-validation table: the fits read their rows
+    in ``_fit_input``'s fixed layout, not the candidate table's, which
+    follows the join build side AQE picks."""
+    t = instacart_tables(spark, SF_SMOKE)
+    staged = ml.candidates_staged
+
+    def outputs(layout):
+        monkeypatch.setattr(ml, "candidates_staged", lambda tt: layout(staged(tt)))
+        subs = {
+            m: sorted(ml.model_submission(t, m).collect())
+            for m in ml.MODEL_BUILDERS
+        }
+        return subs, sorted(ml.cv_model_selection(t).collect())
+
+    wide = outputs(lambda c: c.repartition(3, "productID"))
+    one = outputs(
+        lambda c: c.coalesce(1).sortWithinPartitions(F.desc("orderID"), "productID")
+    )
+    assert wide == one
+
+
 def test_assemble_vector_width(spark):
     t = instacart_tables(spark, SF_SMOKE)
     from big_data_instacart_market_basket_analysis_spark.operators.candidates import (

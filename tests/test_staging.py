@@ -6,7 +6,10 @@
   generations stay bounded per artifact name.
 - structure: ``_staging._STAGED_CACHE`` is the engine's only
   module-level ``_*_CACHE`` dict and the only user of ``STAGING_LOCK``,
-  and ``_staging`` is the only module that persists a DataFrame.
+  ``_staging`` is the only module that persists a DataFrame, and
+  ``_staging.cut`` is the only lineage cut.
+- cut: a cut block cannot be recomputed by Spark; losing it fails the
+  next action instead of returning rows.
 - eviction: an evicted persisted artifact is unpersisted, and
   session-owned artifacts are bounded per input directory, so a session
   that runs the pipeline on many inputs holds at most ``KEEP_OWNERS``
@@ -15,6 +18,7 @@
 
 from __future__ import annotations
 
+import ast
 import gc
 import importlib
 import inspect
@@ -28,7 +32,9 @@ from collections import Counter
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
+import pytest
 from pyspark import StorageLevel
+from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
 import big_data_instacart_market_basket_analysis_spark as pkg
@@ -164,6 +170,40 @@ def test_only_staging_persists():
         if ".cache()" in p.read_text()
     }
     assert caching == {"models.py": 2}
+
+
+def _attr_uses(tree: ast.AST, attr: str) -> int:
+    return sum(
+        isinstance(n, ast.Attribute) and n.attr == attr for n in ast.walk(tree)
+    )
+
+
+def test_one_lineage_cut():
+    """``localCheckpoint`` is called once, inside ``_staging.cut``,
+    which takes only the frame: no call site picks eager or lazy."""
+    trees = {p: ast.parse(p.read_text()) for p in _package_sources()}
+    uses = {p.name: _attr_uses(tree, "localCheckpoint") for p, tree in trees.items()}
+    assert {name: n for name, n in uses.items() if n} == {"_staging.py": 1}
+    cut_tree = ast.parse(inspect.getsource(_staging.cut))
+    assert _attr_uses(cut_tree, "localCheckpoint") == 1
+    assert list(inspect.signature(_staging.cut).parameters) == ["df"]
+    assert [
+        f"{p.name}:{n.lineno}" for p, tree in trees.items()
+        for n in ast.walk(tree) if isinstance(n, ast.keyword) and n.arg == "eager"
+    ] == []
+
+
+def test_lost_cut_block_fails_the_next_action(spark):
+    """A cut has no lineage to fall back on: once its block is gone,
+    the next action raises instead of recomputing or returning rows."""
+    df = _staging.cut(
+        spark.range(100).groupBy((F.col("id") % 7).alias("k")).count()
+    )
+    assert df.count() == 7
+    rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
+    spark.sparkContext._jsc.sc().unpersistRDD(rdd_id, True)
+    with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+        df.collect()
 
 
 def test_evicted_persisted_artifact_is_unpersisted(spark, monkeypatch):
